@@ -16,7 +16,8 @@ object Bench {
       // codegen cache holds; once the LRU cycles, EVERY query pays
       // Janino again (~10-100 ms each, and a cycling cache also defeats
       // warm-rep comparability). Static conf — must be set before the
-      // context starts. Profiled in DevProfile x34train: with the
+      // context starts. Profiled on x34 (PLANS.md, "Two silent codegen
+      // pathologies"): with the
       // default cache the 6-iteration IVF-PQ build recompiled every
       // plan every iteration (compiles +130/rep); at 5000 entries
       // compiles drop to ~0 after rep 1.
@@ -42,33 +43,22 @@ object Bench {
         try org.apache.commons.io.FileUtils.deleteDirectory(wd.toFile)
         catch { case scala.util.control.NonFatal(_) => () }))
     }
-    // Same size-based execution tuning the conversion path applies
-    // (OsmPipeline.AqeMinInputBytes scaladoc has the measurements): below
+    // The engine's small-input execution policy (graft.SizePolicy has
+    // the measurements), applied to the bench's own session: below
     // ~256 MB of input, AQE's per-query-stage materialization jobs cost
-    // more than runtime re-planning saves — each gate query pays a fixed
-    // ~0.1-0.2 s of driver scheduling for nothing. A 100 TB deployment is
-    // far above the threshold and keeps AQE on; this just applies the
-    // same policy to the bench scale instead of hardcoding either choice.
+    // more than runtime re-planning saves, and a 17 MB sf dir shuffled
+    // 32 ways runs near-empty reduce tasks whose fixed cost dominates
+    // the whole bench — the per-gate floor, ×125. A 100 TB deployment is
+    // far above the threshold and keeps AQE on and the full width; this
+    // just applies the same policy to the bench scale instead of
+    // hardcoding either choice.
     try {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
       val dirBytes =
         try walk.filter(java.nio.file.Files.isRegularFile(_))
           .mapToLong(java.nio.file.Files.size(_)).sum()
         finally walk.close()
-      if (dirBytes < osm.OsmPipeline.AqeMinInputBytes) {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        // the same size policy for SHUFFLE WIDTH (the IvfPq build-scope
-        // rule: ~4 MB per reduce partition, floor 4): a 17 MB sf dir
-        // shuffled 32 ways runs near-empty reduce tasks whose fixed
-        // cost dominates the whole bench — the per-gate floor, ×125.
-        // A real deployment's input sits far above the threshold and
-        // keeps the full width; this is runtime re-planning done
-        // statically where AQE (which would do exactly this
-        // coalescing) costs more than it saves.
-        val parts = math.max(4L,
-          math.min(dirBytes / (4L * 1024 * 1024) + 1, cpus.toLong))
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      }
+      SizePolicy.tune("Bench", spark.conf, dirBytes)
     } catch { case scala.util.control.NonFatal(_) => () }
     // JVM warmup (untimed): exercise classloading, Janino/whole-stage
     // codegen, higher-order-function evaluation, hash aggs, broadcast +

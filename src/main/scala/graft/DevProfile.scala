@@ -2,24 +2,34 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only micro profiler: times one query repeatedly in a warm JVM.
-  * Usage: runMain graft.DevProfile <queryName> <sfDir> <reps> */
+/** Dev-only gate profiler: runs [[SparkEntry.queries]] gates in one warm
+  * JVM, each fully evaluated through `queryExecution.toRdd` (as the
+  * perfbench harness does: `.count()` would let Catalyst prune the gate's
+  * unrequested columns and its sort).
+  *
+  * Usage: runMain graft.DevProfile <mode> <sfDir> <reps> <gate[,gate…]>
+  *  - `qtime`: time each gate `reps` times (the first call cold, then warm);
+  *  - `qstages`: qtime plus a census of the last (warm) rep — jobs,
+  *    stages, per-stage wall/executor time/task count — to attribute a
+  *    gate's warm cost to scheduling floor vs real stage work;
+  *  - `execplan`: run each gate `reps` times, then print its executed plan
+  *    (AQE-final: ReusedExchange and skew-join decisions only materialize
+  *    in the EXECUTED plan).
+  *
+  * A comma-separated gate list shares session state (memoized artifacts,
+  * snapshot caches) the way the bench does. `SPARK_EXTRA_CONF="k=v;k=v"`
+  * sets session confs for conf experiments. The one-off investigation
+  * modes of earlier rounds live in PLANS.md and in
+  * `git show a83893f:src/main/scala/graft/DevProfile.scala`. */
 object DevProfile {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    // modes like `execplan <names> <dir>` put a PATH in args(2); only
-    // parse it as the rep count when it actually is a number
-    val reps = if (args.length > 2 && args(2).forall(_.isDigit))
-      args(2).toInt else 3
-    // local[k] runs with spark.task.maxFailures = 1: a single task failure
-    // kills the job, so nothing in the default sessions ever exercises the
-    // retry path that is ROUTINE on a real cluster. The fault-injection
-    // mode opts into local[8,3] (up to 2 retries per task) — everything
-    // else keeps the bench-identical local[32].
+    require(args.length == 4 && Set("qtime", "qstages", "execplan")(args(0)),
+      "usage: DevProfile <qtime|qstages|execplan> <sfDir> <reps> <gate[,gate…]>")
+    val Array(mode, sfDir, repsArg, gateList) = args
+    val reps = repsArg.toInt
+    val gates = gateList.split(',').toSeq
     val spark = SparkSession.builder()
-      .master(if (name == "faultinject" || name == "chaossoak")
-        "local[8,3]" else "local[32]")
+      .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
@@ -29,2828 +39,62 @@ object DevProfile {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SHUFFLE_PARTS").foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n))
-    // SPARK_EXTRA_CONF="k=v;k=v" — ad-hoc conf experiments
     sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
       val Array(k, v) = kv.split('=')
       spark.conf.set(k, v)
     })
-    sys.env.get("NO_AQE").foreach(_ =>
-      spark.conf.set("spark.sql.adaptive.enabled", "false"))
-    sys.env.get("AQE").foreach(_ =>
-      spark.conf.set("spark.sql.adaptive.enabled", "true"))
-    if (name == "pbf") {
-      if (sys.env.contains("NO_BROADCAST")) {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      }
-      val stageTimes = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-          stageTimes.put(si.stageId, (si.name.takeWhile(_ != '\n').take(60), ms))
-        }
-      })
-      for (i <- 1 to reps) {
-        val out = java.nio.file.Files.createTempDirectory("pbfbench").toString + "/out"
-        val t0 = System.nanoTime()
-        val (features, cuts) = osm.OsmPipeline.featuresWithCuts(spark,
-          Seq("/root/reference/tests/test_files/monaco.osm.pbf"),
-          osm.OsmPipeline.Options())
-        osm.GeoParquet.write(features, out, singleFile = true, sortSpatially = true)
-        cuts.release()
-        println(f"convert$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        if (i == reps) {
-          import scala.jdk.CollectionConverters._
-          val all = stageTimes.asScala.toSeq
-          val byTime = all.sortBy(-_._2._2).take(12)
-          byTime.foreach { case (id, (n, ms)) => println(f"  stage $id%4d ${ms}%6d ms  $n") }
-          val bc = all.filter(_._2._1.contains("CompletableFuture"))
-          println(f"  stages=${all.size} sumMs=${all.map(_._2._2).sum}  " +
-            f"broadcastJobs=${bc.size} broadcastSumMs=${bc.map(_._2._2).sum}")
-        }
-        stageTimes.clear()
-      }
-    } else if (name == "pbfparts") {
-      val monaco = "/root/reference/tests/test_files/monaco.osm.pbf"
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-      t("raw_scan")(spark.read.format("osmpbf").load(monaco).count())
-      t("raw_scan2")(spark.read.format("osmpbf").load(monaco).count())
-      val f1 = osm.OsmPipeline.features(spark, Seq(monaco), osm.OsmPipeline.Options())
-      t("features_count")(f1.count())
-      val f2 = osm.OsmPipeline.features(spark, Seq(monaco), osm.OsmPipeline.Options())
-      t("features_count2")(f2.count())
-      val out = java.nio.file.Files.createTempDirectory("pbfbench").toString + "/out"
-      val f3 = osm.OsmPipeline.features(spark, Seq(monaco), osm.OsmPipeline.Options())
-      t("write")({ osm.GeoParquet.write(f3, out, singleFile = true, sortSpatially = true); 1L })
-    } else if (name == "plans") {
-      val names = if (args.length > 1 && args(1).contains(","))
-        args(1).split(",").toSeq else SparkEntry.queries.keys.toSeq.sorted
-      val dir = "/root/testdata/sf0.01"
-      names.foreach { n =>
-        println(s"===== $n =====")
-        println(SparkEntry.queries(n)(spark, dir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      }
-    } else if (name == "execplan") {
-      // AQE-final plans: execute first, then print — ReusedExchange /
-      // skew-join decisions only materialize in the EXECUTED plan
-      val names = if (args.length > 1) args(1).split(",").toSeq
-        else SparkEntry.queries.keys.toSeq.sorted
-      val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-      names.foreach { n =>
-        val df = SparkEntry.queries(n)(spark, dir)
-        df.count()
-        println(s"===== $n =====")
+    def run(gate: String, i: Int): org.apache.spark.sql.DataFrame = {
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(gate)(spark, sfDir)
+      df.queryExecution.toRdd.count()
+      println(f"$gate run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      df
+    }
+    mode match {
+      case "qtime" => gates.foreach(g => (1 to reps).foreach(run(g, _)))
+      case "execplan" => gates.foreach { g =>
+        val df = (1 to reps).map(run(g, _)).last
+        println(s"===== $g =====")
         println(df.queryExecution.executedPlan.toString)
       }
-    } else if (name == "qtime") {
-      // qtime <sfDir> <reps> <query[,query…]>: time gate queries reps
-      // times each in one JVM (cold first call, then warm); a
-      // comma-separated list shares session state (memoized artifacts,
-      // snapshot caches) the way the bench does
-      args(3).split(',').foreach { n =>
-        (1 to reps).foreach { i =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, sfDir).count()
-          println(f"$n run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        }
-      }
-    } else if (name == "qstages") {
-      // qstages <sfDir> <reps> <query[,query…]>: qtime plus a per-stage
-      // census of the LAST (warm) rep — job count, stages, per-stage
-      // wall/executor time/task count. The generic sibling of x2stages /
-      // x13stages for attributing a gate's warm cost to scheduling floor
-      // vs real stage work (guide §1.1/§7.1).
-      val stageTimes = new java.util.concurrent.ConcurrentHashMap[
-        Int, (String, Long, Long, Int)]()
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            stageTimes.put(si.stageId,
-              (si.name.takeWhile(_ != '\n').take(70),
-                si.completionTime.getOrElse(0L) -
-                  si.submissionTime.getOrElse(0L),
-                si.taskMetrics.executorRunTime, si.numTasks))
-          }
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet(): Unit
-        })
-      args(3).split(',').foreach { n =>
-        (1 to reps).foreach { i =>
-          if (i == reps) { Thread.sleep(300); stageTimes.clear(); jobs.set(0) }
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, sfDir).count()
-          println(f"$n run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        }
-        Thread.sleep(300) // listener events drain async
-        import scala.jdk.CollectionConverters._
-        val all = stageTimes.asScala.toSeq.sortBy(_._1)
-        println(s"  $n warm rep: jobs=${jobs.get} stages=${all.size} " +
-          f"sumWall=${all.map(_._2._2).sum}%d ms " +
-          f"sumCpu=${all.map(_._2._3).sum}%d ms")
-        all.foreach { case (id, (nm, ms, cpu, nt)) =>
-          println(f"  stage $id%4d wall=$ms%5d cpu=$cpu%5d tasks=$nt%3d  $nm")
-        }
-      }
-    } else if (name == "probeprof") {
-      // probeprof <sfDir> <reps> <query[,query…]>: split each warm call
-      // into DataFrame CONSTRUCTION (gate fn: snapshot resolves, stats
-      // reads, relation building) vs ACTION (analysis+opt+execution),
-      // and time SnapshotCache.snapshotOf on the index work dirs
-      args(3).split(',').foreach { n =>
-        (1 to reps).foreach { i =>
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(n)(spark, sfDir)
-          val t1 = System.nanoTime()
-          df.count()
-          val t2 = System.nanoTime()
-          println(f"$n run $i: construct ${(t1 - t0) / 1e9}%.3f s " +
-            f"action ${(t2 - t1) / 1e9}%.3f s")
-        }
-      }
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      tmp.listFiles().filter(_.getName.startsWith("graft_x"))
-        .take(4).foreach { d =>
-          val p = d.toString + "/idx"
-          (1 to 3).foreach { _ =>
-            val t0 = System.nanoTime()
-            val snap = operators.SnapshotCache.snapshotOf(spark, p)
-            println(f"snapshotOf($p): ${(System.nanoTime() - t0) / 1e6}%.1f ms" +
-              s" (${snap.count(_ == '|') + 1} entries)")
-          }
-        }
-    } else if (name == "dxprof") {
-      // per-sub-plan timing of the dx_halfway_grid gate's production
-      // paths, with the same constant inputs the gate engineers
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      def t(tag: String)(body: => Long): Unit = (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = body
-        println(f"$tag run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
-      }
-      t("rrf") {
-        val a = spark.range(1, 101).select(col("id").as("doc"),
-          col("id").as("rank"))
-        val b = Seq((204L, 4L), (4L, 68L), (268L, 580L)).toDF("doc", "rank")
-        operators.RetrievalOps.rrfFuse(a, b, "doc", k = 110).count()
-      }
-      t("eval") {
-        val ranked = spark.range(1, 11)
-          .select(lit(7L).as("qid"), col("id").as("rank"), col("id").as("doc"))
-        val qrels = spark.range(1000, 1127)
-          .select(lit(7L).as("qid"), col("id").as("doc"))
-          .unionByName(Seq((7L, 3L)).toDF("qid", "doc"))
-        operators.RetrievalOps.evalRanking(ranked, "qid", "rank", "doc",
-          qrels, "qid", "doc").count()
-      }
-      t("bm25") {
-        val needleDoc = ("needle" +: Seq.fill(22)("w")).mkString(" ")
-        val filler27 = Seq.fill(27)("w").mkString(" ")
-        val filler63 = Seq.fill(63)("w").mkString(" ")
-        val docs = spark.range(0, 80).select(col("id").as("doc_id"),
-          when(col("id") === 0, lit(needleDoc))
-            .when(col("id") === 79, lit(filler63))
-            .otherwise(lit(filler27)).as("text"))
-        operators.RetrievalOps.bm25Scores(docs, "doc_id", "text",
-          Seq("needle")).count()
-      }
-      t("ratio_mean") {
-        val ratioCases = Seq(("a", 33L, 32L)).toDF("c", "n", "d")
-          .select(graft.functions.ExactRound.ratio(col("n"), col("d"), 4))
-        ratioCases.count()
-      }
-      t("full_gate") {
-        SparkEntry.queries("dx_halfway_grid")(spark, sfDir).count()
-      }
-      // planning vs execution split of one warm run
-      (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries("dx_halfway_grid")(spark, sfDir)
-        val t1 = System.nanoTime()
-        df.queryExecution.executedPlan
-        val t2 = System.nanoTime()
-        df.count()
-        val t3 = System.nanoTime()
-        println(f"split run $i: build=${(t1 - t0) / 1e9}%.3f " +
-          f"plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f s")
-      }
-      // job/stage/task census of one warm run
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      val stages = new java.util.concurrent.atomic.AtomicLong
-      val tasks = new java.util.concurrent.atomic.AtomicLong
-      val lst = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet(): Unit
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet(): Unit
-          tasks.addAndGet(e.stageInfo.numTasks): Unit
-          val si = e.stageInfo
-          val dur = for {
-            a <- si.completionTime; b <- si.submissionTime
-          } yield a - b
-          println(s"  stage ${si.stageId} tasks=${si.numTasks} " +
-            s"dur=${dur.getOrElse(-1L)}ms ${si.name.take(60)}")
-        }
-      }
-      spark.sparkContext.addSparkListener(lst)
-      try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("dx_halfway_grid")(spark, sfDir).count()
-        org.apache.spark.sql.graft.SessionOps.drainListeners(spark, 30000L)
-        println(f"census: ${(System.nanoTime() - t0) / 1e9}%.3f s " +
-          s"jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get}")
-      } finally spark.sparkContext.removeSparkListener(lst)
-    } else if (name == "x33prof") {
-      // phase + census profile of the x33 exact-admit gate
-      import org.apache.spark.sql.functions._
-      (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        val emb = Tables.embeddings(spark, sfDir)
-        emb.count()
-        val t1 = System.nanoTime()
-        val admitted = operators.EmbeddingOps.admitVectors(
-          emb.filter(col("vec_id") % 5 =!= 0),
-          emb.filter(col("vec_id") % 5 === 0),
-          "vec_id", "embedding", threshold = 0.4)
-        admitted.count()
-        val t2 = System.nanoTime()
-        SparkEntry.queries("x33_vec_admit")(spark, sfDir).count()
-        val t3 = System.nanoTime()
-        println(f"x33 split run $i: scan=${(t1 - t0) / 1e9}%.3f " +
-          f"admit=${(t2 - t1) / 1e9}%.3f full=${(t3 - t2) / 1e9}%.3f s")
-      }
-      val stages = new java.util.concurrent.atomic.AtomicLong
-      val tasks = new java.util.concurrent.atomic.AtomicLong
-      val lst = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet(): Unit
-          tasks.addAndGet(e.stageInfo.numTasks): Unit
-          val si = e.stageInfo
-          val dur = for {
-            a <- si.completionTime; b <- si.submissionTime
-          } yield a - b
-          println(s"  stage ${si.stageId} tasks=${si.numTasks} " +
-            s"dur=${dur.getOrElse(-1L)}ms")
-        }
-      }
-      spark.sparkContext.addSparkListener(lst)
-      try {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("x33_vec_admit")(spark, sfDir).count()
-        org.apache.spark.sql.graft.SessionOps.drainListeners(spark, 30000L)
-        println(f"x33 census: ${(System.nanoTime() - t0) / 1e9}%.3f s " +
-          s"stages=${stages.get} tasks=${tasks.get}")
-      } finally spark.sparkContext.removeSparkListener(lst)
-    } else if (name == "x34prof") {
-      // stage-by-stage timing of the trained IVF-PQ gate
-      import org.apache.spark.sql.functions._
-      graft.functions.VectorExprs.register(spark)
-      // the gate's own normalization (ONE definition — RetrievalOps doc)
-      val emb = operators.RetrievalOps.l2NormalizedEmbeddings(spark, sfDir)
-      def t[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      for (_ <- 1 to 2) {
-        val cents = t("coarse train")(
-          operators.IvfAnn.trainCentroids(emb, 8, 3, portable = true))
-        val residuals = t("residuals")(
-          operators.IvfAnn.assignCells(emb, cents, portable = true)
-            .join(broadcast(cents.withColumnRenamed("cid", "cell")), Seq("cell"))
-            .select(col("vec_id"), col("cell"),
-              zip_with(col("v"), col("cv"), (x, c) => x - c).as("r"))
-            .persist())
-        t("residuals count")(residuals.count())
-        val codebook = t("pq train")(operators.ProductQuantizer
-          .train(residuals, "vec_id", "r", 32, 64, 3, portable = true))
-        val codes = t("encode")(operators.ProductQuantizer
-          .encode(residuals, "vec_id", "r", codebook, 32)
-          .join(residuals.select(col("vec_id").as("pq_id"), col("cell")),
-            Seq("pq_id")).persist())
-        t("codes count")(codes.count())
-        val idx = operators.IvfPq.IvfPqIndex(cents, codebook, codes, 32, 64)
-        val q = emb.filter(col("vec_id") === 0L).head().getSeq[Double](1)
-        t("probe np=8")(operators.IvfPq.topK(idx, q, 10, 8, Some(0L),
-          portable = true).count())
-        residuals.unpersist(); codes.unpersist(): Unit
-      }
-    } else if (name == "x34serve") {
-      // phase-by-phase timing of x34's WARM serving path (the number a
-      // steady-state user sees): snapshot resolve (hit), index load,
-      // query head, exact ground truth, and the two ADC probes —
-      // repeated in one JVM after one priming call builds the snapshot
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      graft.functions.VectorExprs.register(spark)
-      def t[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"  $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-      // prime: full gate once (build + snapshot write on first call)
-      SparkEntry.queries("x34_trained_recall")(spark, sfDir).count()
-      for (i <- 1 to reps) {
-        println(s"rep $i:")
-        val emb = t("emb plan")(
-          operators.RetrievalOps.l2NormalizedEmbeddings(spark, sfDir))
-        val path = t("resolve")(operators.SnapshotCache.resolve(spark,
-          "x34", s"$sfDir/embeddings.parquet")(_ =>
-            throw new IllegalStateException("expected snapshot hit")))
-        val idx = t("loadIndex")(operators.IvfPq.loadIndex(spark, path))
-        val q = t("q head")(
-          emb.filter(col("vec_id") === 0L).head().getSeq[Double](1))
-        val exact = t("exact top10")(emb.filter(col("vec_id") =!= 0L)
-          .select(col("vec_id"),
-            round(call_function("vec_cosine", col("v"), typedLit(q)), 6)
-              .as("c"))
-          .orderBy(col("c").desc, col("vec_id").asc).limit(10)
-          .collect().map(_.getLong(0)).toSet)
-        Seq(2, 8).foreach { np =>
-          t(s"probe np=$np")(operators.IvfPq.topK(idx, q, 10, np,
-            Some(0L), portable = true)
-            .withColumn("rank", row_number().over(
-              Window.orderBy(col("adc_dist").asc, col("pq_id").asc)))
-            .count())
-        }
-        val _ = exact
-      }
-    } else if (name == "warmbench") {
-      // true warm-vs-warm engine timing: run every gate query twice in one
-      // JVM and report the second pass (snapshot caches and JIT hot) —
-      // the apples-to-apples number against a warm DuckDB loop over the
-      // same oracle workload (PLANS.md comparison section)
-      val names = SparkEntry.queries.keys.toSeq.sorted
-      names.foreach(n =>
-        try SparkEntry.queries(n)(spark, sfDir).count()
-        catch { case scala.util.control.NonFatal(e) =>
-          println(s"WARMFAIL $n: ${e.getMessage.take(80)}") })
-      var total = 0.0
-      val times = names.map { n =>
-        val t0 = System.nanoTime()
-        // a query that failed warmup must not abort the whole measurement
-        try SparkEntry.queries(n)(spark, sfDir).count()
-        catch { case scala.util.control.NonFatal(_) => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        total += dt
-        n -> dt
-      }
-      println(f"warm total over ${names.size} queries: $total%.1f s")
-      times.sortBy(-_._2).take(8).foreach { case (n, dt) =>
-        println(f"  $n%-28s $dt%.2f s") }
-    } else if (name == "pbfscale") {
-      // replicate monaco `reps` times (offset ids/refs, shift lon) into one
-      // big PBF, then time the full no-filter conversion on it
-      val monaco = "/root/reference/tests/test_files/monaco.osm.pbf"
-      val base = pbf.PbfWriter.fromRows(
-        spark.read.format("osmpbf").load(monaco)).collect()
-      val big = java.nio.file.Files.createTempDirectory("pbfscale").toString + "/big.osm.pbf"
-      val t0 = System.nanoTime()
-      val replicated = (0 until reps).iterator.flatMap { i =>
-        val off = i.toLong * 100000000000L
-        base.iterator.map { e =>
-          e.copy(id = e.id + off,
-            refs = if (e.refs == null) null else e.refs.map(_ + off),
-            lon = if (e.lon.isNaN) e.lon else e.lon + 0.2 * i)
-        }
-      }
-      val n = pbf.PbfWriter.write(replicated, big)
-      println(f"wrote $n elements (${new java.io.File(big).length() / 1e6}%.1f MB) " +
-        f"in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      println(s"scan partitions: " +
-        spark.read.format("osmpbf").load(big).rdd.getNumPartitions)
-      val stageTimes = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Long)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-          stageTimes.put(si.stageId,
-            (si.name.takeWhile(_ != '\n').take(70), ms, si.taskMetrics.executorRunTime))
-        }
-      })
-      for (r <- 1 to 2) {
-        stageTimes.clear()
-        val out = java.nio.file.Files.createTempDirectory("pbfscale").toString + "/out"
-        val t1 = System.nanoTime()
-        val (f, fcuts) = osm.OsmPipeline.featuresWithCuts(spark, Seq(big),
-          osm.OsmPipeline.Options())
-        osm.GeoParquet.write(f, out, singleFile = false, sortSpatially = true,
-          sortAlgorithm = sys.env.getOrElse("SORT_ALGO", "str"))
-        fcuts.release()
-        val dt = (System.nanoTime() - t1) / 1e9
-        val rows = spark.read.parquet(out).count()
-        println(f"convert$r: $dt%.1f s ($rows features, ${n / dt}%.0f elem/s)")
-        if (r == 2) {
-          import scala.jdk.CollectionConverters._
-          stageTimes.asScala.toSeq.sortBy(-_._2._2).take(14).foreach {
-            case (id, (nm, ms, cpu)) =>
-              println(f"  stage $id%4d wall=${ms}%6d ms cpu=${cpu}%6d ms  $nm")
-          }
-        }
-      }
-    } else if (name == "pbfmulti") {
-      // the convert-MULTIPLE-PBFs path under load (OsmMultiExtractSpec's
-      // shape, timed): `reps` replicated monaco extracts with
-      // overlapping contents (each replica in exactly two files) → one
-      // multi-file conversion DAG (scan → J3 (kind,id) dedup → convert)
-      // → STR-sorted multi-file GeoParquet write. Reference:
-      // pbf_file_reader.py:446-534,1046-1146.
-      val monaco = "/root/reference/tests/test_files/monaco.osm.pbf"
-      val nFiles = math.max(2, reps)
-      val dir = java.nio.file.Files.createTempDirectory("pbfmulti").toString
-      // shuffle/sort spill accounting: the r14 scale-up ask is "hold the
-      // oracles at a size where the merge + STR sort actually spills" —
-      // these counters prove whether it did
-      val spillMem = new java.util.concurrent.atomic.AtomicLong
-      val spillDisk = new java.util.concurrent.atomic.AtomicLong
-      // removed in the branch's finally: a listener left registered
-      // would double-count spills if the session runs another profile
-      val spillListener =
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) {
-              spillMem.addAndGet(m.memoryBytesSpilled): Unit
-              spillDisk.addAndGet(m.diskBytesSpilled): Unit
+      case "qstages" =>
+        val stageTimes = new java.util.concurrent.ConcurrentHashMap[
+          Int, (String, Long, Long, Int)]()
+        val jobs = new java.util.concurrent.atomic.AtomicInteger()
+        spark.sparkContext.addSparkListener(
+          new org.apache.spark.scheduler.SparkListener {
+            override def onStageCompleted(
+                sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
+                : Unit = {
+              val si = sc.stageInfo
+              stageTimes.put(si.stageId,
+                (si.name.takeWhile(_ != '\n').take(70),
+                  si.completionTime.getOrElse(0L) -
+                    si.submissionTime.getOrElse(0L),
+                  si.taskMetrics.executorRunTime, si.numTasks))
             }
-          }
-        }
-      spark.sparkContext.addSparkListener(spillListener)
-      def spills(): (Long, Long) = {
-        org.apache.spark.sql.graft.SessionOps
+            override def onJobStart(
+                j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+              jobs.incrementAndGet(): Unit
+          })
+        def drain(): Unit = org.apache.spark.sql.graft.SessionOps
           .drainListeners(spark, 30000L): Unit
-        (spillMem.get(), spillDisk.get())
-      }
-      try {
-        val t0 = System.nanoTime()
-        // the SAME overlapping-replica builder OsmMultiExtractSpec
-        // verifies — the timed profile measures the spec's workload
-        val (paths, nElems) = pbf.PbfWriter.writeOverlappingReplicas(
-          spark, monaco, nFiles, dir)
-        println(f"wrote $nFiles overlapping extracts ($nElems elements, " +
-          f"${paths.map(p => new java.io.File(p).length()).sum / 1e6}%.1f MB) " +
-          f"in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        for (r <- 1 to 2) {
-          val out = s"$dir/out$r"
-          val (sm0, sd0) = spills()
-          val t1 = System.nanoTime()
-          val (f, fcuts) = osm.OsmPipeline.featuresWithCuts(spark, paths,
-            osm.OsmPipeline.Options())
-          try osm.GeoParquet.write(f, out, singleFile = false,
-            sortSpatially = true)
-          finally fcuts.release()
-          val dt = (System.nanoTime() - t1) / 1e9
-          val rows = spark.read.parquet(out).count()
-          val (sm1, sd1) = spills()
-          println(f"convert$r: $dt%.1f s ($rows features, " +
-            f"${nElems / dt}%.0f elem/s scanned incl. overlap, " +
-            f"spill mem=${(sm1 - sm0) / 1e6}%.0f MB " +
-            f"disk=${(sd1 - sd0) / 1e6}%.0f MB)")
-        }
-        // MULTI_FULL=1: the r14 one-octave scale-up checks at THIS size
-        // (the spec pins them at 10 files) — WKB config-invariance via
-        // a distributed order-independent checksum (no corpus-scale
-        // collect), and the relation-validity oracle's zero-unexplained
-        // contract over the overlapping set
-        if (sys.env.contains("MULTI_FULL")) {
-          import org.apache.spark.sql.functions._
-          def checksum(): (BigDecimal, Long) = {
-            val (f, fcuts) = osm.OsmPipeline.featuresWithCuts(spark,
-              paths, osm.OsmPipeline.Options())
-            try {
-              // sum the 64-bit row hashes in DECIMAL(38,0): a long sum
-              // of ~500k random longs overflows under ANSI
-              val r = f.agg(
-                sum(xxhash64(col("feature_id"), col("geometry"))
-                  .cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-                  .as("h"),
-                count(lit(1)).as("n")).head()
-              (BigDecimal(r.getDecimal(0)), r.getLong(1))
-            } finally fcuts.release()
+        gates.foreach { g =>
+          (1 to reps).foreach { i =>
+            if (i == reps) { drain(); stageTimes.clear(); jobs.set(0) }
+            run(g, i)
           }
-          def withConfs[T](kvs: (String, String)*)(body: => T): T = {
-            val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-            kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-            try body
-            finally old.foreach {
-              case (k, Some(v)) => spark.conf.set(k, v)
-              case (k, None)    => spark.conf.unset(k)
-            }
-          }
-          def perFeature(tag: String): org.apache.spark.sql.DataFrame = {
-            val (f, fcuts) = osm.OsmPipeline.featuresWithCuts(spark,
-              paths, osm.OsmPipeline.Options())
-            // localCheckpoint(eager) alone — it materializes AND caches;
-            // a persist() in front would hold a second corpus-scale copy
-            try f.select(col("feature_id").as(s"fid"),
-                xxhash64(col("geometry")).as(s"h_$tag"),
-                length(col("geometry")).as(s"len_$tag"))
-              .localCheckpoint(true)
-            finally fcuts.release()
-          }
-          val t2 = System.nanoTime()
-          val a = withConfs("spark.sql.shuffle.partitions" -> "3",
-            "spark.sql.adaptive.enabled" -> "false")(checksum())
-          val b = withConfs("spark.sql.shuffle.partitions" -> "16",
-            "spark.sql.adaptive.enabled" -> "true")(checksum())
-          println(f"config-invariance: A=$a B=$b match=${a == b} " +
-            f"(${(System.nanoTime() - t2) / 1e9}%.1f s)")
-          if (a != b) {
-            // name the diverging features before failing: per-feature
-            // hash under each config, join, sample the mismatches
-            val fa = withConfs("spark.sql.shuffle.partitions" -> "3",
-              "spark.sql.adaptive.enabled" -> "false")(perFeature("a"))
-            val fb = withConfs("spark.sql.shuffle.partitions" -> "16",
-              "spark.sql.adaptive.enabled" -> "true")(perFeature("b"))
-            val diff = fa.join(fb, Seq("fid"), "full_outer")
-              .filter(col("h_a").isNull || col("h_b").isNull ||
-                col("h_a") =!= col("h_b"))
-            println(s"diverging features: ${diff.count()}")
-            diff.orderBy("fid").show(30, truncate = false)
-            // classify the FIRST divergence: rotation/orientation of an
-            // equal point set vs ulp-level coordinate drift
-            val fid0 = diff.orderBy("fid").select("fid").head().getString(0)
-            def geomOf(parts: Int,
-                aqe: String): Option[org.locationtech.jts.geom.Geometry] = {
-              // headOption shape: a feature can be DROPPED entirely
-              // under one config (the diff filter admits null-sided
-              // rows) — classify what exists, never crash the
-              // diagnostic before it prints
-              val w = withConfs(
-                "spark.sql.shuffle.partitions" -> parts.toString,
-                "spark.sql.adaptive.enabled" -> aqe) {
-                val (f, fcuts) = osm.OsmPipeline.featuresWithCuts(spark,
-                  paths, osm.OsmPipeline.Options())
-                try f.filter(col("feature_id") === fid0)
-                  .select("geometry").collect().headOption
-                  .map(_.getAs[Array[Byte]](0))
-                finally fcuts.release()
-              }
-              w.map(new org.locationtech.jts.io.WKBReader().read(_))
-            }
-            (geomOf(3, "false"), geomOf(16, "true")) match {
-              case (Some(ga), Some(gb)) =>
-                println(s"$fid0: type=${ga.getGeometryType}/${gb.getGeometryType} " +
-                  s"npts=${ga.getNumPoints}/${gb.getNumPoints} " +
-                  s"equalsExact=${ga.equalsExact(gb)} " +
-                  s"equalsNorm=${ga.norm().equalsExact(gb.norm())} " +
-                  s"equalsTopo=${ga.equalsTopo(gb)}")
-                val ca = ga.getCoordinates; val cb = gb.getCoordinates
-                val firstDiff = ca.zip(cb).indexWhere { case (p, q) =>
-                  p.x != q.x || p.y != q.y }
-                if (firstDiff >= 0)
-                  println(s"first differing coord at $firstDiff: " +
-                    s"${ca(firstDiff)} vs ${cb(firstDiff)}")
-              case (a, b) =>
-                println(s"$fid0: present A=${a.isDefined} B=${b.isDefined} " +
-                  "— feature dropped under one config")
-            }
-            throw new IllegalStateException(
-              s"WKB checksum diverged across configs: $a vs $b")
-          }
-          val t3 = System.nanoTime()
-          val drops = osm.RelationValidity.explainDrops(spark, paths)
-          val unexplained = drops.filter(!col("explained")).count()
-          osm.OsmPipeline.releaseCuts()
-          println(f"validity: unexplained=$unexplained " +
-            f"(${(System.nanoTime() - t3) / 1e9}%.1f s)")
-          if (unexplained != 0) throw new IllegalStateException(
-            s"$unexplained unexplained relation drops at $nFiles files")
-        }
-      } finally {
-        spark.sparkContext.removeSparkListener(spillListener)
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(dir))
-      }
-    } else if (name == "gpqscale") {
-      // drive the DISTRIBUTED GeoParquet sink under load: replicate monaco
-      // `reps` times (lon-shifted), convert, write MULTI-FILE covering
-      // output (no coalesce(1) anywhere), then time bbox probes through
-      // readCovered — the at-scale write/read path (file+row-group pruning
-      // via the covering bbox column's min/max stats).
-      val monaco = "/root/reference/tests/test_files/monaco.osm.pbf"
-      val base = pbf.PbfWriter.fromRows(
-        spark.read.format("osmpbf").load(monaco)).collect()
-      val tmp = java.nio.file.Files.createTempDirectory("gpqscale").toString
-      val big = s"$tmp/big.osm.pbf"
-      val n = pbf.PbfWriter.write((0 until reps).iterator.flatMap { i =>
-        val off = i.toLong * 100000000000L
-        base.iterator.map { e =>
-          e.copy(id = e.id + off,
-            refs = if (e.refs == null) null else e.refs.map(_ + off),
-            lon = if (e.lon.isNaN) e.lon else e.lon + 0.2 * i)
-        }
-      }, big)
-      println(s"input: $n elements (${reps}x monaco)")
-      val out = s"$tmp/gpq"
-      val t0 = System.nanoTime()
-      val (f, fcuts) = osm.OsmPipeline.featuresWithCuts(spark, Seq(big),
-        osm.OsmPipeline.Options())
-      osm.GeoParquet.write(f, out, singleFile = false, sortSpatially = true,
-        covering = true, maxRecordsPerFile = 20000)
-      fcuts.release()
-      val files = new java.io.File(out).listFiles
-        .count(_.getName.endsWith(".parquet"))
-      println(f"multi-file covering write: ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-        f"($files files)")
-      val total = spark.read.parquet(out).count()
-      // identical bbox probe, with vs without parquet stats pruning: the
-      // covering column's row-group min/max stats are the only difference
-      val shift = 0.2 * (reps / 2)
-      def probe(): Long = osm.GeoParquet.readCovered(spark, out,
-        7.42 + shift, 43.73, 7.43 + shift, 43.74).count()
-      probe() // warm the read path + codegen
-      spark.conf.set("spark.sql.parquet.filterPushdown", "false")
-      val tb0 = System.nanoTime()
-      probe()
-      val noPruneSec = (System.nanoTime() - tb0) / 1e9
-      spark.conf.set("spark.sql.parquet.filterPushdown", "true")
-      val tp0 = System.nanoTime()
-      val hit = probe()
-      val probeSec = (System.nanoTime() - tp0) / 1e9
-      println(f"probe: $hit of $total rows — pruned $probeSec%.2f s vs " +
-        f"unpruned $noPruneSec%.2f s (covering bbox row-group stats)")
-    } else if (name == "docscale") {
-      // replicate documents `reps` times (offset doc_ids; per-replica
-      // Caesar-rotate the text so replica corpora are mutually disjoint in
-      // shingle space — pair counts then grow linearly with the corpus)
-      // and time the minhash-LSH family end-to-end: the similarity
-      // analogue of pbfscale. reps ≤ 26 keeps rotations distinct.
-      import org.apache.spark.sql.functions._
-      require(reps <= 26, s"docscale: max 26 replicas (distinct rotations), got $reps")
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val nBase = base.count()
-      val out = java.nio.file.Files.createTempDirectory("docscale").toString
-      val lower = "abcdefghijklmnopqrstuvwxyz"
-      val upper = lower.toUpperCase(java.util.Locale.ROOT)
-      val big = (0 until reps).map { i =>
-        val r = i % 26
-        val rot = lower.drop(r) + lower.take(r) + upper.drop(r) + upper.take(r)
-        base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          translate(col("text"), lower + upper, rot).as("text"),
-          col("lang"), col("n_chars"))
-      }.reduce(_ unionByName _)
-      big.coalesce(4).write.parquet(s"$out/documents.parquet")
-      println(s"corpus: ${nBase * reps} docs (${reps}x)")
-      for (r <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val nPairs = operators.SimilarityQueries.x2MinhashLsh(spark, out).count()
-        val t1 = System.nanoTime()
-        val nClusters = operators.SimilarityQueries.x8DedupClusters(spark, out)
-          .select("cluster_id").distinct().count()
-        val t2 = System.nanoTime()
-        println(f"pass$r: x2=${(t1 - t0) / 1e9}%.2f s ($nPairs pairs) " +
-          f"x8=${(t2 - t1) / 1e9}%.2f s ($nClusters clusters)")
-      }
-    } else if (name == "appendscale") {
-      // the incremental-ingestion economics: a `reps`x replicated corpus
-      // is indexed once, then ONE base-corpus-sized delta arrives —
-      // compare append cost (delta-proportional) against the full
-      // rebuild (corpus-proportional), and the probe over the grown
-      // 2-generation index against the compacted one
-      import org.apache.spark.sql.functions._
-      val base0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      val nBase = base0.count()
-      val big = (0 until reps).map { i =>
-        base0.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val delta = base0.select(
-        (col("doc_id") + lit(reps.toLong * 10000000L)).as("doc_id"),
-        col("text"))
-      println(s"base corpus: ${nBase * reps} docs (${reps}x), delta: $nBase")
-      val root = java.nio.file.Files.createTempDirectory("appsc").toString
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n)")
-      }
-      t("index_base")({ operators.RetrievalOps.indexCorpus(big, "doc_id",
-        "text", s"$root/idx"); 1L })
-      t("append_delta")({ operators.RetrievalOps.appendToPostings(delta,
-        "doc_id", "text", s"$root/idx"); 1L })
-      t("rebuild_union")({ operators.RetrievalOps.indexCorpus(
-        big.unionByName(delta), "doc_id", "text", s"$root/full"); 1L })
-      for (r <- 1 to 2) {
-        t(s"r$r probe_grown")(operators.RetrievalOps.bm25TopKIndexed(spark,
-          s"$root/idx", operators.RetrievalOps.GateTerms).count())
-        t(s"r$r probe_rebuilt")(operators.RetrievalOps.bm25TopKIndexed(spark,
-          s"$root/full", operators.RetrievalOps.GateTerms).count())
-      }
-      t("compact")({ operators.RetrievalOps.compactTo(spark, s"$root/idx",
-        s"$root/cmp"); 1L })
-      t("probe_compacted")(operators.RetrievalOps.bm25TopKIndexed(spark,
-        s"$root/cmp", operators.RetrievalOps.GateTerms).count())
-      big.unpersist(): Unit
-    } else if (name == "admitscale") {
-      // the self-growing admit loop's economics: ONE batch admitted
-      // against a `reps`x-replicated existing corpus — the recompute
-      // path (dedupeIncrement: re-reads and re-shingles ALL corpus
-      // text per batch) vs the signature-store path
-      // (dedupeIncrementFromStore: one-time store build, then a
-      // ~150 B/doc store scan per batch). Per-replica Caesar rotation
-      // keeps replicas disjoint in shingle space (as docscale).
-      import org.apache.spark.sql.functions._
-      require(reps <= 25, s"admitscale: max 25 replicas, got $reps")
-      val lower = "abcdefghijklmnopqrstuvwxyz"
-      val upper = lower.toUpperCase(java.util.Locale.ROOT)
-      // ADMIT_TEXT_MULT=k lengthens every document k-fold (suffix-tagged
-      // self-concatenation, so the shingle set really grows): the sf
-      // corpora's ~100-char docs are far below real web-document size,
-      // and the store's core property — its bytes are INDEPENDENT of
-      // document length — only shows against realistic text
-      val mult = sys.env.get("ADMIT_TEXT_MULT").map(_.toInt).getOrElse(1)
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"),
-          concat_ws(" ", (0 until mult).map(k =>
-            if (k == 0) col("text")
-            else regexp_replace(col("text"), lit("(\\w+)"), lit(s"$$1x$k"))
-          ): _*).as("text"))
-      def rot(i: Int) = {
-        val r = i % 26
-        val to = lower.drop(r) + lower.take(r) + upper.drop(r) + upper.take(r)
-        base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          translate(col("text"), lower + upper, to).as("text"))
-      }
-      val root = java.nio.file.Files.createTempDirectory("admitsc").toString
-      (0 until reps).map(rot).reduce(_ unionByName _)
-        .coalesce(8).write.parquet(s"$root/ex")
-      val ex = spark.read.parquet(s"$root/ex")
-      val nEx = ex.count()
-      // the batch: 1/8 of a replica re-crawled (must reject) plus 1/8
-      // novel (a rotation the corpus never used)
-      val batch = rot(0).filter(pmod(col("doc_id"), lit(8L)) === 0)
-        .withColumn("doc_id", col("doc_id") + lit(900000000L))
-        .unionByName(rot(reps).filter(pmod(col("doc_id"), lit(8L)) === 0))
-        .persist()
-      println(s"corpus: $nEx docs (${reps}x), batch: ${batch.count()}")
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n)")
-      }
-      t("store_build_once")({ operators.CorpusOps.signatureStore(ex,
-        "doc_id", "text").write.parquet(s"$root/sig"); 1L })
-      val sigBytes = new java.io.File(s"$root/sig").listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-      val exBytes = new java.io.File(s"$root/ex").listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-      println(s"store: $sigBytes B vs corpus text $exBytes B on disk")
-      val sig = spark.read.parquet(s"$root/sig")
-      for (r <- 1 to 2) {
-        t(s"r$r admit_recompute")(operators.CorpusOps.dedupeIncrement(
-          ex, batch, "doc_id", "text").count())
-        t(s"r$r admit_from_store")(operators.CorpusOps
-          .dedupeIncrementFromStore(sig, batch, "doc_id", "text").count())
-      }
-      val a = operators.CorpusOps.dedupeIncrement(ex, batch,
-        "doc_id", "text").select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      val b = operators.CorpusOps.dedupeIncrementFromStore(sig, batch,
-        "doc_id", "text").select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      println(s"decisions_equal: ${a == b} (${a.size} admitted)")
-      batch.unpersist(): Unit
-      // a 25x corpus at ADMIT_TEXT_MULT=8 is ~130 MB — don't strand it
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-    } else if (name == "admitgens") {
-      // the genscale twin for the ADMIT corpus: per-batch wall time of
-      // a real admitArrivals loop across `reps` generations, with and
-      // without auto-compaction. The read path is ONE multi-path scan
-      // whatever the generation count (only driver-side listing grows),
-      // so — unlike the index loops, whose probes decay per generation
-      // — the uncompacted curve should stay near-flat; this measures it
-      // instead of asserting it.
-      import org.apache.spark.sql.functions._
-      val lower = "abcdefghijklmnopqrstuvwxyz"
-      val upper = lower.toUpperCase(java.util.Locale.ROOT)
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      def rot(i: Int) = {
-        val r = i % 26
-        val to = lower.drop(r) + lower.take(r) + upper.drop(r) + upper.take(r)
-        base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          translate(col("text"), lower + upper, to).as("text"))
-      }
-      require(reps <= 25, s"admitgens: max 25 generations, got $reps")
-      val root = java.nio.file.Files.createTempDirectory("admgen").toString
-      val seed = rot(0)
-      for ((label, ce) <- Seq("uncompacted" -> None,
-          "compactEvery=8" -> Some(8))) {
-        val dir = s"$root/$label"
-        val feed = s"$dir/feed"
-        new java.io.File(feed).mkdirs(): Unit
-        val arrivals = spark.readStream
-          .schema("doc_id BIGINT, text STRING")
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet").parquet(feed)
-        val q = streaming.DocStreams.admitArrivals(arrivals, seed,
-          s"$dir/adm", s"$dir/ckpt", compactEvery = ce)
-        try {
-          val times = (1 to reps).map { i =>
-            // each batch is a NOVEL rotation slice (disjoint shingle
-            // space): the corpus — and the generation count — grows
-            // by one committed append per batch
-            val stage = s"$dir/_w$i"
-            rot(i).filter(pmod(col("doc_id"), lit(8L)) === 0)
-              .coalesce(1).write.parquet(stage)
-            val f = new java.io.File(stage).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            java.nio.file.Files.move(f.toPath,
-              java.nio.file.Paths.get(s"$feed/$i.parquet"))
-            val t0 = System.nanoTime()
-            q.processAllAvailable()
-            val dt = (System.nanoTime() - t0) / 1e9
-            println(f"$label batch $i%2d: $dt%.2f s")
-            dt
-          }
-          println(f"$label: first-5 mean ${times.take(5).sum / 5}%.2f s, " +
-            f"last-5 mean ${times.takeRight(5).sum / 5}%.2f s")
-          val n = streaming.DocStreams.admittedDocs(spark, s"$dir/adm",
-            org.apache.spark.sql.types.StructType.fromDDL(
-              "doc_id BIGINT, text STRING")).count()
-          println(s"$label admitted total: $n")
-        } finally q.stop()
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-    } else if (name == "vecadmitgens") {
-      // admitgens' VECTOR twin (VERDICT r13 ask #6): per-batch wall
-      // time of a real vecAdmitArrivals loop across `reps` generations
-      // against a 512k-vector seed rung, uncompacted vs compactEvery=8.
-      // The stored signature IS the embedding (~4·d B/row, one
-      // multi-path columnar scan whatever the generation count), so —
-      // like the text admit store — the uncompacted curve should stay
-      // near-flat; this measures it, and pins that the ADMIT DECISIONS
-      // are bit-equal across both settings (file layout must never
-      // change semantics).
-      import org.apache.spark.sql.functions._
-      graft.functions.VectorExprs.register(spark)
-      val factor = 256 // 2000·256 = 512k vectors at sf0.1
-      val root = java.nio.file.Files.createTempDirectory("vadmgen").toString
-      writeScaledEmbeddings(spark, sfDir, factor, root)
-      val seed = spark.read.parquet(s"$root/emb")
-        .select(col("vec_id"), col("v").as("embedding"))
-      val rows = seed.count()
-      val planes = operators.EmbeddingOps.planesFor(rows)
-      println(s"seed corpus: $rows vectors, planesFor=$planes")
-      val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      // generation i = half NOVEL jitter of the base set (a mod-23
-      // pattern family the seed's mod-17 replicas can never equal — a
-      // first cut used the seed's own mod-17 formula and every batch
-      // was cosine-1.0 rejected, a vacuous soak), half RE-CRAWLS of
-      // seed replica i (exact copies — must reject); both admit
-      // classes exercised every batch
-      def gen(i: Int): org.apache.spark.sql.DataFrame = {
-        val novel = base
-          .filter(pmod(col("vec_id"), lit(2L)) === 0)
-          .select(
-            (col("vec_id") + lit((1000L + i) * 10000000L)).as("vec_id"),
-            expr(s"transform(embedding, (x, j) -> CAST(x AS DOUBLE) + " +
-              s"CAST(pmod(${i}L * 5 + j * 11, 23) AS DOUBLE) " +
-              "/ 100.0)").as("embedding"))
-        val recrawl = spark.read.parquet(s"$root/emb")
-          .filter((col("vec_id") / lit(10000000L)).cast("long") === i &&
-            pmod(col("vec_id"), lit(2L)) === 1)
-          .select(
-            (col("vec_id") + lit(5000L * 10000000L)).as("vec_id"),
-            col("v").as("embedding"))
-        novel.unionByName(recrawl)
-      }
-      // 23 = the jitter pattern's period: pmod(i·5 + j·11, 23) aliases
-      // for generations 23 apart, so i=24 would regenerate batch 1's
-      // exact embeddings and be silently cosine-1.0 rejected —
-      // violating the both-classes-every-batch invariant
-      require(reps <= 23, s"vecadmitgens: max 23 generations, got $reps")
-      for ((label, ce) <- Seq("uncompacted" -> None,
-          "compactEvery=8" -> Some(8))) {
-        val dir = s"$root/$label"
-        val feed = s"$dir/feed"
-        new java.io.File(feed).mkdirs(): Unit
-        val arrivals = spark.readStream
-          .schema("vec_id BIGINT, embedding ARRAY<DOUBLE>")
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet").parquet(feed)
-        val q = streaming.DocStreams.vecAdmitArrivals(arrivals, seed,
-          s"$dir/adm", s"$dir/ckpt", threshold = 0.9,
-          compactEvery = ce, planes = planes)
-        try {
-          val times = (1 to reps).map { i =>
-            val stage = s"$dir/_w$i"
-            gen(i).coalesce(1).write.parquet(stage)
-            val f = new java.io.File(stage).listFiles()
-              .filter(_.getName.endsWith(".parquet")).head
-            java.nio.file.Files.move(f.toPath,
-              java.nio.file.Paths.get(s"$feed/$i.parquet"))
-            val t0 = System.nanoTime()
-            q.processAllAvailable()
-            val dt = (System.nanoTime() - t0) / 1e9
-            println(f"$label batch $i%2d: $dt%.2f s")
-            dt
-          }
-          println(f"$label: first-5 mean ${times.take(5).sum / 5}%.2f s, " +
-            f"last-5 mean ${times.takeRight(5).sum / 5}%.2f s")
-        } finally q.stop()
-      }
-      val vschema = org.apache.spark.sql.types.StructType.fromDDL(
-        "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-      def admitted(label: String): Set[Long] =
-        streaming.DocStreams.admittedDocs(spark, s"$root/$label/adm",
-          vschema).select("vec_id").collect().map(_.getLong(0)).toSet
-      val a = admitted("uncompacted")
-      val b = admitted("compactEvery=8")
-      println(s"decisions_equal: ${a == b} (admitted ${a.size})")
-      if (a != b) throw new IllegalStateException(
-        s"admit decisions diverged across compaction settings: " +
-          s"${(a diff b).take(5)} / ${(b diff a).take(5)}")
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-    } else if (name == "vecadmitscale") {
-      // the vector admit sweep's economics: ONE fixed batch against a
-      // `reps`x-replicated embedding corpus — per-batch cost is the
-      // |existing|·|batch| d-dim dot sweep, map-side (batch broadcast,
-      // zero corpus exchanges), so it must grow LINEARLY in the corpus
-      import org.apache.spark.sql.functions._
-      val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      val root = java.nio.file.Files.createTempDirectory("vadmsc").toString
-      // replicate by EXPLODE, not a reps-deep union tree (Catalyst
-      // analysis cost grows with plan depth; at reps=1024 the union
-      // form stalls the driver) — same rows, same id offsets
-      base.select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0L), lit(reps.toLong - 1))).as("_rep"))
-        .select((col("vec_id") + col("_rep") * 10000000L).as("vec_id"),
-          col("embedding"))
-        .repartition(32).write.parquet(s"$root/ex")
-      val ex = spark.read.parquet(s"$root/ex")
-      // batch: 1/5 re-crawled copies (must reject) + 1/5 negated
-      // (cosine −1 against everything — must admit)
-      val fifth = base.filter(pmod(col("vec_id"), lit(5L)) === 0)
-      val batch = fifth
-        .select((col("vec_id") + lit(900000000L)).as("vec_id"),
-          col("embedding"))
-        .unionByName(fifth.select(
-          (col("vec_id") + lit(910000000L)).as("vec_id"),
-          expr("transform(embedding, x -> -x)").as("embedding")))
-        .persist()
-      println(s"corpus: ${ex.count()} vecs (${reps}x), " +
-        s"batch: ${batch.count()}")
-      // exact sweep vs sign-LSH bucketed candidate generation: the
-      // bucketed sweep's dot count divides by the occupied bucket
-      // count, so at a fixed batch it must flatten relative to the
-      // exact path's linear growth (grow planes ~log2 with the corpus
-      // for flat per-batch cost). decisions_equal pins the cosine-1.0
-      // re-crawl class (identical sign projections co-bucket at any
-      // planes — recall 1.0 by construction on this batch shape)
-      // the exact-sweep anchor + decisions check runs only at the
-      // scales where an exact sweep is still tractable interactively;
-      // past that (reps > 64) the run IS the growth-policy ladder —
-      // full-corpus exact sweeps are precisely the linear cost the
-      // bucketing exists to avoid
-      if (reps <= 64) {
-        val exact = operators.EmbeddingOps.admitVectors(ex, batch,
-          "vec_id", "embedding", 0.9)
-          .select("vec_id").collect().map(_.getLong(0)).toSet
-        for (planes <- Seq(0, 8, 12); r <- 1 to 2) {
-          val t0 = System.nanoTime()
-          val n = operators.EmbeddingOps.admitVectors(ex, batch,
-            "vec_id", "embedding", 0.9, planes).count()
-          println(f"planes=$planes r$r admit: " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s ($n admitted)")
-          if (r == 2 && planes > 0) {
-            val b = operators.EmbeddingOps.admitVectors(ex, batch,
-              "vec_id", "embedding", 0.9, planes)
-              .select("vec_id").collect().map(_.getLong(0)).toSet
-            println(s"planes=$planes decisions_equal_exact: ${b == exact}")
-          }
-        }
-      }
-      // the GROWTH POLICY ladder: a corpus growing 4x per rung, each
-      // rung a FRESH path picking EmbeddingOps.planesFor(rows) — the
-      // pick-once-per-path shape. Per-batch admit time must stay ~flat
-      // up the ladder (the whole point of growing planes ~log2), where
-      // the exact sweep at the top rung is the linear-cost anchor.
-      // reps bounds the top rung: reps=64 at sf0.1 (~32k base) tops out
-      // past 2M vectors — beyond the 512k the r11 table measured.
-      val rungs = Iterator.iterate(1)(_ * 4).takeWhile(_ <= reps).toSeq
-      for (mult <- rungs) {
-        // rung = the first `mult` of the `reps` replicas (replica i
-        // offset its ids by i*10M, so integer-dividing recovers i)
-        val slice = ex.filter((col("vec_id") / lit(10000000L))
-          .cast("long") < mult)
-        val rows = slice.count()
-        val rec = operators.EmbeddingOps.planesFor(rows)
-        val t0 = System.nanoTime()
-        val n = operators.EmbeddingOps.admitVectors(slice, batch,
-          "vec_id", "embedding", 0.9, rec).count()
-        println(f"ladder corpus=$rows%8d planesFor=$rec%2d admit: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s ($n admitted)")
-      }
-      batch.unpersist(): Unit
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-    } else if (name == "genscale") {
-      // many-generation probe decay (the steady streaming case: one
-      // committed append per micro-batch) → the auto-compaction
-      // threshold's evidence. Base index over the corpus, then `reps`
-      // small appended generations, warm-probing after each; finally
-      // compactInPlace and probe the folded index.
-      import org.apache.spark.sql.functions._
-      val base0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      val root = java.nio.file.Files.createTempDirectory("gensc").toString
-      val path = s"$root/idx"
-      def t(label: String)(f: => Long): Double = {
-        val t0 = System.nanoTime()
-        val n = f
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"$label: $dt%.2f s ($n)")
-        dt
-      }
-      operators.RetrievalOps.indexCorpus(base0, "doc_id", "text", path)
-      def probeOnce(): Long = operators.RetrievalOps.bm25TopKIndexed(spark,
-        path, operators.RetrievalOps.GateTerms).count()
-      probeOnce(); probeOnce() // warm
-      t("probe_gen0")(probeOnce())
-      for (g <- 1 to reps) {
-        val delta = base0.filter(col("doc_id") % 100 === (g % 100))
-          .select((col("doc_id") + g.toLong * 10000000L).as("doc_id"),
-            col("text"))
-        operators.RetrievalOps.appendToPostings(delta, "doc_id", "text",
-          path, batchId = Some(g.toLong))
-        probeOnce() // warm
-        t(s"probe_gen$g")(probeOnce())
-      }
-      t("compact_in_place")({
-        operators.RetrievalOps.compactInPlace(spark, path); 1L })
-      probeOnce()
-      t("probe_compacted")(probeOnce())
-    } else if (name == "pbfblobs") {
-      // S1 split parallelism evidence: a multi-blob PBF (PbfWriter's
-      // 8k-element blocks → one blob per block) must scan as >1 input
-      // partition and speed up with the cores engaged; coalesce(1)
-      // forces the same work through one task as the serial baseline.
-      val monaco = "/root/reference/tests/test_files/monaco.osm.pbf"
-      val base = pbf.PbfWriter.fromRows(
-        spark.read.format("osmpbf").load(monaco)).collect()
-      val big = java.nio.file.Files.createTempDirectory("pbfblobs")
-        .toString + "/big.osm.pbf"
-      val n = pbf.PbfWriter.write((0 until reps).iterator.flatMap { i =>
-        val off = i.toLong * 100000000000L
-        base.iterator.map { e =>
-          e.copy(id = e.id + off,
-            refs = if (e.refs == null) null else e.refs.map(_ + off),
-            lon = if (e.lon.isNaN) e.lon else e.lon + 0.2 * i)
-        }
-      }, big)
-      println(f"wrote $n elements, ${new java.io.File(big).length() / 1e6}%.1f MB")
-      val scan = spark.read.format("osmpbf").load(big)
-      println(s"scan partitions (natural splits): ${scan.rdd.getNumPartitions}")
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val c = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($c rows)")
-      }
-      for (r <- 1 to 2) t(s"parallel_scan r$r")(
-        scan.filter("tags IS NOT NULL OR kind = 'node'").count())
-      for (r <- 1 to 2) t(s"single_task_scan r$r")(
-        scan.filter("tags IS NOT NULL OR kind = 'node'")
-          .coalesce(1).count())
-    } else if (name == "spreadsweep") {
-      // Pin CorpusOps.SpreadMinInputBytes with data: the serial-vs-
-      // spread crossover of the ×k gram explode on a SINGLE-SPLIT
-      // input (the adversarial layout the spread() helper exists for).
-      // Replicates the sf corpus to several sizes, writes each as ONE
-      // parquet file, and times the explode+count on (a) the natural
-      // 1-partition scan vs (b) repartition(32, doc_id) first.
-      import org.apache.spark.sql.functions._
-      graft.functions.TextExprs.register(spark)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      def explodeCount(df: org.apache.spark.sql.DataFrame): Long =
-        df.filter(length(col("text")) >= 24)
-          .select(explode(call_function("char_gram_hashes",
-            col("text"), lit(24), lit(8))).as("h"))
-          .count()
-      for (mult <- Seq(1, 4, 16, 64)) {
-        val rep = docs.crossJoin(
-            spark.range(mult.toLong).select(col("id").as("r")))
-          .select((col("doc_id") * mult + col("r")).as("doc_id"),
-            col("text"))
-        val tmp = java.nio.file.Files.createTempDirectory("spreadsweep")
-        val dir = tmp.toString + "/one"
-        rep.coalesce(1).write.parquet(dir)
-        val bytes = new java.io.File(dir).listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-        val one = spark.read.parquet(dir)
-        for (r <- 1 to reps) {
-          val t0 = System.nanoTime()
-          val n = explodeCount(one)
-          val t1 = System.nanoTime()
-          val m = explodeCount(one.repartition(32, col("doc_id")))
-          val t2 = System.nanoTime()
-          println(f"mult=$mult%3d (${bytes / 1048576.0}%6.1f MB, 1 split) " +
-            f"r$r natural ${(t1 - t0) / 1e9}%6.2f s  " +
-            f"spread ${(t2 - t1) / 1e9}%6.2f s  ($n/$m rows)")
-        }
-        // up to 64 corpus replicas per sweep — don't strand them in /tmp
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-      }
-    } else if (name == "x13prof") {
-      // x13 stage decomposition at the gate parameters (k=24, 1/8
-      // sample, cap 50): where do the seconds go — kernel+explode,
-      // the count-style aggregation baseline, the BoundedCollectSet
-      // aggregation, or the pair explode + pair aggregation?
-      import org.apache.spark.sql.functions._
-      graft.functions.Md5Prefix28Expr.register(spark)
-      graft.functions.TextExprs.register(spark)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val c = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($c)")
-      }
-      for (r <- 1 to reps) t(s"full_gate r$r")(
-        operators.CorpusOps.fingerprintOverlap(docs, "doc_id", "text")
-          .count())
-      val filtered = docs.select(col("doc_id").cast("long").as("doc_id"),
-        col("text").as("_t")).filter(length(col("_t")) >= 24)
-      val exploded = filtered.select(col("doc_id"),
-        explode(org.apache.spark.sql.functions.call_function(
-          "char_gram_hashes", col("_t"), lit(24), lit(8))).as("h"))
-      for (r <- 1 to reps) t(s"scan_kernel_explode r$r")(exploded.count())
-      for (r <- 1 to reps) t(s"plus_count_agg r$r")(
-        exploded.groupBy(col("h")).agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2).count())
-      val boundedSet = udaf(new graft.functions.BoundedCollectSet(50),
-        org.apache.spark.sql.Encoders.scalaLong)
-      val buckets = exploded.groupBy(col("h"))
-        .agg(boundedSet(col("doc_id")).as("ds"))
-        .filter(col("ds").isNotNull && size(col("ds")) >= 2)
-      for (r <- 1 to reps) t(s"plus_bounded_set r$r")(buckets.count())
-      val pairs = buckets.select(explode(expr(
-        "flatten(transform(ds, (a, i) -> " +
-          "transform(slice(ds, i + 2, size(ds)), " +
-          "b -> struct(a AS doc_a, b AS doc_b))))")).as("p"))
-        .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("shared"))
-        .filter(col("shared") >= 3)
-      for (r <- 1 to reps) t(s"plus_pairs_no_spread r$r")(pairs.count())
-    } else if (name == "packscale") {
-      // tokenize-and-pack scaling: replicate documents `reps` times
-      // (offset ids, replica-suffixed lang so shard count grows with the
-      // corpus — the 100 TB deployment shape: many bounded shards, not
-      // one giant per-shard window) and time d38-style encode + d39
-      // packing. Both should scale near-linearly with the corpus; the
-      // vocab is harvested ONCE from the base corpus and frozen.
-      import org.apache.spark.sql.functions._
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val nBase = base.count()
-      val vocab = operators.CorpusOps.wordpieceVocab(base, "text", topK = 2000)
-      val big = (0 until reps).map { i =>
-        base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          col("text"), concat(col("lang"), lit(s"_$i")).as("lang"))
-      }.reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"corpus: ${nBase * reps} docs (${reps}x), vocab ${vocab.size}")
-      try {
-        for (r <- 1 to 2) {
-          val t0 = System.nanoTime()
-          val enc = operators.CorpusOps.encodeIds(big, "doc_id", "text",
-            vocab, extraCols = Seq("lang"))
-          val nTok = enc.agg(sum(size(col("ids")))).head().getLong(0)
-          val t1 = System.nanoTime()
-          val packed = operators.CorpusOps.packTokenIds(enc, "doc_id",
-            "lang", "ids", 2048, vocab.size)
-          val nSeq = packed.count()
-          val t2 = System.nanoTime()
-          println(f"pass$r: encode=${(t1 - t0) / 1e9}%.2f s ($nTok tokens) " +
-            f"pack=${(t2 - t1) / 1e9}%.2f s ($nSeq seqs)")
-        }
-      } finally big.unpersist()
-    } else if (name == "retscale") {
-      // retrieval scaling: replicate documents `reps` times (offset ids)
-      // and compare BM25 full-scan vs persisted-index probe as the corpus
-      // grows — the probe should stay near-flat (it reads only the query
-      // terms' buckets) while the scan grows with the corpus.
-      import org.apache.spark.sql.functions._
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val nBase = base.count()
-      val out = java.nio.file.Files.createTempDirectory("retscale").toString
-      (0 until reps).map { i =>
-        base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionByName _)
-        .coalesce(8).write.parquet(s"$out/documents.parquet")
-      val docs = spark.read.parquet(s"$out/documents.parquet")
-      println(s"corpus: ${nBase * reps} docs (${reps}x)")
-      val terms = operators.RetrievalOps.GateTerms
-      val t0 = System.nanoTime()
-      operators.RetrievalOps.indexCorpus(docs, "doc_id", "text", s"$out/idx")
-      println(f"index build+write: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      for (r <- 1 to 2) {
-        val t1 = System.nanoTime()
-        val nScan = operators.RetrievalOps
-          .bm25TopK(docs, "doc_id", "text", terms).count()
-        val t2 = System.nanoTime()
-        val nProbe = operators.RetrievalOps
-          .bm25TopKIndexed(spark, s"$out/idx", terms).count()
-        val t3 = System.nanoTime()
-        println(f"pass$r: scan=${(t2 - t1) / 1e9}%.2f s ($nScan) " +
-          f"probe=${(t3 - t2) / 1e9}%.2f s ($nProbe)")
-      }
-    } else if (name == "bmprof") {
-      // phase profile of the bm25 corpus-scan family (x17/x18/x24):
-      // where does the gate time go — tokenize+stats, tf branch, the
-      // scorer, the x18 query-vector head(), the fusion?
-      import org.apache.spark.sql.functions._
-      graft.functions.TextExprs.register(spark)
-      graft.functions.VectorExprs.register(spark)
-      val docs = Tables.documents(spark, sfDir)
-      val terms = operators.RetrievalOps.GateTerms
-      def t(tag: String)(body: => Long): Unit = (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = body
-        println(f"$tag run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
-      }
-      val base = docs.select(col("doc_id").cast("long").as("doc_id"),
-        call_function("split_words", col("text")).as("_g_ws"))
-        .select(col("doc_id"), col("_g_ws"),
-          size(col("_g_ws")).cast("long").as("_g_dl"))
-      t("tokenize+count")(base.select(sum(col("_g_dl"))).count())
-      val dfCols = terms.zipWithIndex.map { case (tm, i) =>
-        sum(when(array_contains(col("_g_ws"), lit(tm)), lit(1L))
-          .otherwise(lit(0L))).as(s"_g_df_$i")
-      }
-      t("stats agg")(base.agg(count(lit(1)).as("_g_n"),
-        (sum(col("_g_dl")).as("_g_sum_dl") +: dfCols): _*).count())
-      t("tf branch")(base
-        .select(col("doc_id"), col("_g_dl"), explode(col("_g_ws")).as("_g_t"))
-        .filter(col("_g_t").isin(terms: _*))
-        .groupBy(col("doc_id"), col("_g_t")).agg(count(lit(1))).count())
-      t("bm25Scores")(operators.RetrievalOps
-        .bm25Scores(docs, "doc_id", "text", terms).count())
-      t("x18 head()") {
-        Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .filter(col("vec_id") === 0).head(); 1L
-      }
-      t("x17 full")(SparkEntry.queries("x17_bm25_topk")(spark, sfDir).count())
-      t("x18 full")(SparkEntry.queries("x18_hybrid_rrf")(spark, sfDir).count())
-      t("x24 full")(SparkEntry.queries("x24_model_rerank")(spark, sfDir).count())
-    } else if (name == "bpescale") {
-      // BPE trainer round-cost linearity: time word-level training at
-      // increasing round counts with the materialization cadence on
-      // (K = BpeMaterializeEvery) vs effectively off (K = 10000).
-      // The claim under test: with cuts, sec/round stays ~flat as
-      // rounds grow; without, round r replays r-1 merges and the
-      // per-round cost climbs.
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      // warm the tokenize/count path once, untimed
-      operators.CorpusOps.trainBpe(docs, "text", rounds = 2).count()
-      for (rounds <- Seq(8, 16, 32, 64)) {
-        for ((label, k) <- Seq(("cuts", operators.CorpusOps.BpeMaterializeEvery),
-            ("nocuts", 10000))) {
-          val t0 = System.nanoTime()
-          val n = operators.CorpusOps.trainBpe(docs, "text",
-            rounds = rounds, materializeEvery = k).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          println(f"rounds=$rounds%3d $label%-7s total=$sec%6.2f s  " +
-            f"per-round=${sec / rounds}%5.3f s  ($n merges)")
-        }
-      }
-    } else if (name == "tokscale") {
-      // tokenizer-serving scaling: replicate documents `reps` times
-      // (same VOCABULARY — replication adds occurrences, not words) and
-      // time d36 WordPiece + d37 Viterbi end-to-end. The design claim
-      // under test: both encode the DISTINCT-word relation, so cost
-      // tracks the lexicon while the corpus grows `reps`-fold; only the
-      // word-count aggregation sees the extra rows.
-      import org.apache.spark.sql.functions._
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val nBase = base.count()
-      val out = java.nio.file.Files.createTempDirectory("tokscale").toString
-      (0 until reps).map { i =>
-        base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionByName _)
-        .coalesce(8).write.parquet(s"$out/documents.parquet")
-      println(s"corpus: ${nBase * reps} docs (${reps}x)")
-      for (r <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val n36 = operators.TextQueries.d36Wordpiece(spark, out).count()
-        val t1 = System.nanoTime()
-        val n37 = operators.TextQueries.d37ViterbiSegment(spark, out).count()
-        val t2 = System.nanoTime()
-        println(f"pass$r: d36=${(t1 - t0) / 1e9}%.2f s ($n36) " +
-          f"d37=${(t2 - t1) / 1e9}%.2f s ($n37)")
-      }
-    } else if (name == "mixscale") {
-      // corpus-assembly family under a pathological domain skew: replicate
-      // documents `reps` times with 90% of replicas funneled into ONE hot
-      // domain (the >50%-one-source web-crawl shape the histogram pattern
-      // exists for), then time temperatureMix / mixDomains / splitCorpus /
-      // upsampleEpochs end-to-end. The contract under test at scale: no
-      // full-domain window, so the hot domain splits across subbuckets.
-      import org.apache.spark.sql.functions._
-      val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      val nBase = base.count()
-      val out = java.nio.file.Files.createTempDirectory("mixscale").toString
-      val big = (0 until reps).map { i =>
-        base.select((col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          concat(col("text"), lit(s" r$i")).as("text"), col("lang"),
-          (if (i < (reps * 9) / 10) lit("hotdomain") else col("source")).as("source"),
-          col("n_chars"))
-      }.reduce(_ unionByName _)
-      big.coalesce(8).write.parquet(s"$out/documents.parquet")
-      val docs = spark.read.parquet(s"$out/documents.parquet")
-      val skew = docs.filter(col("source") === "hotdomain").count()
-      println(s"corpus: ${nBase * reps} docs, hot domain ${skew} " +
-        f"(${skew * 100.0 / (nBase * reps)}%.0f%%)")
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-      for (r <- 1 to 2) {
-        t(s"r$r temperatureMix")(operators.CorpusOps.temperatureMix(
-          docs, "doc_id", "text", "source", budget = nBase * reps / 2).count())
-        t(s"r$r mixDomains")(operators.CorpusOps.mixDomains(
-          docs, "doc_id", "text", "source", _ => 1L).count())
-        t(s"r$r splitCorpus")(operators.CorpusOps.splitCorpus(
-          docs, "doc_id", Seq(("train", 98L), ("heldout", 2L))).count())
-        t(s"r$r upsampleEpochs")(operators.CorpusOps.upsampleEpochs(
-          docs, "doc_id", "text", lit(150L)).count())
-      }
-    } else if (name == "x2stages") {
-      // mimic the bench: warm every generated class on a 50-row copy of the
-      // tables, then time x2 sub-stages on the real dir with a stage listener
-      val warmDir = java.nio.file.Files.createTempDirectory("x2warm").toString
-      spark.read.parquet(s"$sfDir/documents.parquet").limit(50)
-        .coalesce(1).write.parquet(s"$warmDir/documents.parquet")
-      operators.SimilarityQueries.x2MinhashLsh(spark, warmDir).count()
-      val stageTimes = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Long)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-          stageTimes.put(si.stageId,
-            (si.name.takeWhile(_ != '\n').take(70), ms, si.taskMetrics.executorRunTime))
-        }
-      })
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-      t("shingle_view")(operators.SimilarityQueries.docShingles(spark, sfDir).count())
-      t("signatures")(operators.SimilarityQueries.minhashSignatures(spark, sfDir).count())
-      t("cand_pairs")(operators.SimilarityQueries.candidatePairs(spark, sfDir).count())
-      t("x2_sorted")(operators.SimilarityQueries.x2MinhashLsh(spark, sfDir).count())
-      import scala.jdk.CollectionConverters._
-      stageTimes.asScala.toSeq.sortBy(_._1).foreach { case (id, (nm, ms, cpu)) =>
-        println(f"  stage $id%4d wall=${ms}%6d ms cpu=${cpu}%6d ms  $nm")
-      }
-    } else if (name == "x2micro") {
-      import org.apache.spark.sql.functions._
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-      graft.functions.Md5Prefix28Expr.register(spark)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def shingleRaw = docs
-        .repartition(col("doc_id"))
-        .select(col("doc_id"), filter(split(lower(col("text")), "\\s+"),
-          w => length(w) > 0).as("ws"))
-        .select(col("doc_id"), explode(
-          when(size(col("ws")) < 3, array(concat_ws(" ", col("ws"))))
-            .otherwise(transform(sequence(lit(0), size(col("ws")) - 3),
-              i => concat_ws(" ", slice(col("ws"), i + 1, lit(3)))))).as("sh"))
-        .select(col("doc_id"), call_function("md5_prefix28", col("sh")).as("shash"))
-      for (r <- 1 to 2) {
-        t(s"r$r nocache_32tasks")(shingleRaw.count())
-        spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
-        val cachedNc = shingleRaw.cache()
-        t(s"r$r cache_nocompress")(cachedNc.count())
-        cachedNc.unpersist(true)
-        spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "true")
-        val cached = shingleRaw.cache()
-        t(s"r$r cache_build")(cached.count())
-        val mins = (0 until 16).map(p =>
-          min((lit(37L) * (lit(p) + 1) * col("shash") + lit(101L) * lit(p) + 7)
-            % 1000000007L).as(s"h$p"))
-        val sigs = cached.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-          .select(col("doc_id"), array((0 until 16).map(p => col(s"h$p")): _*).as("sig"))
-        t(s"r$r sigs_on_cache")(sigs.count())
-        val banded = sigs.select(col("doc_id"), col("sig"),
-          posexplode(transform(sequence(lit(0), lit(3)),
-            b => concat_ws(",", transform(slice(col("sig"), b * lit(4) + 1, lit(4)),
-              x => x.cast("string"))))).as(Seq("band", "band_key")))
-        val a = banded.select(col("band"), col("band_key"),
-          col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-        val bb = banded.select(col("band"), col("band_key"),
-          col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-        val pairs = a.join(bb, Seq("band", "band_key"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select(col("doc_a"), col("doc_b"),
-            (size(filter(zip_with(col("sig_a"), col("sig_b"),
-              (x, y) => x === y), v => v)) / lit(16.0)).as("est_jaccard"))
-          .distinct()
-        t(s"r$r lsh_pairs")(pairs.count())
-        cached.unpersist(true)
-      }
-    } else if (name == "x2parts") {
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-      t("shingles")(operators.SimilarityQueries.minhashSignatures(spark, sfDir).count())
-      t("x2_full")(operators.SimilarityQueries.x2MinhashLsh(spark, sfDir).count())
-      t("x2_again")(operators.SimilarityQueries.x2MinhashLsh(spark, sfDir).count())
-    } else if (name == "x13stages") {
-      // x13 cost split: gram explode+hash+distinct (fp build) vs the joins
-      import org.apache.spark.sql.functions._
-      graft.functions.Md5Prefix28Expr.register(spark)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-      val k = 24
-      val raw = docs
-        .select(col("doc_id").cast("long").as("doc_id"), col("text").as("_g_text"))
-        .filter(length(col("_g_text")) >= k)
-        .select(col("doc_id"),
-          explode(sequence(lit(1), length(col("_g_text")) - (k - 1))).as("_g_pos"),
-          col("_g_text"))
-        .select(col("doc_id"),
-          call_function("md5_prefix28",
-            expr(s"substr(_g_text, _g_pos, $k)")).as("h"))
-      t("explode_hash_only")(raw.count())
-      t("explode_hash_again")(raw.count())
-      val filtered = raw.filter(pmod(col("h"), lit(8L)) === 0)
-      t("plus_mod_filter")(filtered.count())
-      t("plus_mod_filter2")(filtered.count())
-      val agg = filtered.groupBy(col("h"))
-        .agg(array_sort(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) >= 2 && size(col("ds")) <= 50)
-      t("plus_bucket_agg")(agg.count())
-      t("plus_bucket_agg2")(agg.count())
-      t("full_query")(operators.SimilarityQueries
-        .x13FingerprintOverlap(spark, sfDir).count())
-      t("full_query2")(operators.SimilarityQueries
-        .x13FingerprintOverlap(spark, sfDir).count())
-    } else if (name == "idxprofile") {
-      // x21/x23 build-cost split: tokenize-only vs postings write vs
-      // stats job, fresh output path per rep (no SnapshotCache reuse) —
-      // the attribution harness for the r8 build regression
-      import org.apache.spark.sql.functions._
-      graft.functions.TextExprs.register(spark)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-      val tokenized = docs.select(col("doc_id").cast("long").as("id"),
-        call_function("split_words", col("text")).as("_g_ws"))
-      t("tokenize_only")(tokenized.count())
-      t("tokenize_again")(tokenized.count())
-      for (r <- 1 to reps) {
-        val out = java.nio.file.Files.createTempDirectory("idxprof").toString
-        t(s"r$r bm25_build")({ operators.RetrievalOps.indexCorpus(
-          docs, "doc_id", "text", s"$out/i1"); 1L })
-        t(s"r$r positional_build")({ operators.RetrievalOps.indexCorpus(
-          docs, "doc_id", "text", s"$out/i2", withPositions = true); 1L })
-        t(s"r$r probe")(operators.RetrievalOps.bm25TopKIndexed(
-          spark, s"$out/i1", operators.RetrievalOps.GateTerms).count())
-        // sub-job split of the same build (fresh path)
-        val base = docs
-          .select(col("doc_id").cast("long").as("id"),
-            call_function("split_words", col("text")).as("_g_ws"))
-          .select(col("id"), col("_g_ws"),
-            size(col("_g_ws")).cast("long").as("dl"))
-        val postings = base
-          .select(col("id"), col("dl"), explode(col("_g_ws")).as("term"))
-          .groupBy(col("id"), col("term"))
-          .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-          .withColumn("pt", pmod(xxhash64(col("term")), lit(64L)))
-        t(s"r$r   agg_only")(postings.count())
-        t(s"r$r   write_straight")({ postings
-          .write.mode("overwrite").partitionBy("pt")
-          .parquet(s"$out/s1/postings"); 1L })
-        t(s"r$r   write_repart")({ postings.repartition(64, col("pt"))
-          .write.mode("overwrite").partitionBy("pt")
-          .parquet(s"$out/s2/postings"); 1L })
-        t(s"r$r   n_count")(docs.count())
-        t(s"r$r   stats_from_idx")({ spark.read.parquet(s"$out/s2/postings")
-          .agg(sum(col("tf"))).head(); 1L })
-        t(s"r$r   stats_old_pass")({ base.agg(count(lit(1)).as("n"),
-          (sum(col("dl")).cast("double") / count(lit(1)).cast("double"))
-            .as("avgdl")).head(); 1L })
-      }
-    } else if (name == "sjscale") {
-      // distributed spatial join under a dense-city distribution: 90% of
-      // `reps` million points in ONE grid cell, vs uniform. Pins the
-      // scaladoc's "hot cells are ordinary join skew — AQE splits them"
-      // with wall-clock: skew with skewJoin OFF vs ON (thresholds scaled
-      // to local data volume; the cluster uses the defaults, which sit
-      // in the same ratio to real partition sizes). Broadcast disabled —
-      // the big×big shuffle path is the one skew can hurt.
-      import org.apache.spark.sql.functions._
-      val n = reps.max(1) * 1000000L
-      val hotX = 7.4005; val hotY = 43.7005
-      def ptsOn(s: org.apache.spark.sql.SparkSession, skewed: Boolean) = {
-        val hot = col("id") % 10 < 9
-        s.range(0, n).select(col("id").as("pt_id"),
-          (if (skewed) when(hot, lit(hotX) + (rand(11) - 0.5) * 0.008)
-            .otherwise(lit(7.0) + rand(12) * 0.9)
-          else lit(7.0) + rand(12) * 0.9).as("x"),
-          (if (skewed) when(hot, lit(hotY) + (rand(13) - 0.5) * 0.008)
-            .otherwise(lit(43.0) + rand(14) * 0.9)
-          else lit(43.0) + rand(14) * 0.9).as("y"))
-      }
-      val rnd = new scala.util.Random(21)
-      val gf = new org.locationtech.jts.geom.GeometryFactory()
-      val wkbW = new org.locationtech.jts.io.WKBWriter()
-      def boxWkb(cx: Double, cy: Double): Array[Byte] = wkbW.write(
-        gf.createPolygon(Array((cx, cy), (cx + 0.02, cy),
-          (cx + 0.02, cy + 0.02), (cx, cy + 0.02), (cx, cy)).map {
-          case (x, y) => new org.locationtech.jts.geom.Coordinate(x, y)
-        }))
-      val polyRows = (0 until 2000).map { i =>
-        val (cx, cy) =
-          if (i < 5) (hotX - 0.015 + rnd.nextDouble() * 0.01,
-            hotY - 0.015 + rnd.nextDouble() * 0.01)
-          else (7.0 + rnd.nextDouble() * 0.9, 43.0 + rnd.nextDouble() * 0.9)
-        (i.toLong, boxWkb(cx, cy))
-      }
-      def run(label: String, skewed: Boolean, skewJoin: Boolean): Unit = {
-        val s = spark.newSession()
-        import s.implicits._
-        s.conf.set("spark.sql.adaptive.enabled", "true")
-        s.conf.set("spark.sql.adaptive.skewJoin.enabled", skewJoin.toString)
-        s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-        s.conf.set(
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-          (1 << 20).toString)
-        s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-          (1 << 20).toString)
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        val polys = polyRows.toDF("poly_id", "wkb")
-        val j = osm.SpatialJoin.pointInPolygon(ptsOn(s, skewed), "x", "y",
-          polys, "wkb", cellDeg = 0.01).select(col("pt_id"))
-        val t0 = System.nanoTime()
-        val rows = j.collect().length
-        val dt = (System.nanoTime() - t0) / 1e9
-        val plan = j.queryExecution.executedPlan.toString
-        val skewMark = if (plan.contains("skew=true")) "skew-split" else "no-split"
-        println(f"$label: $dt%.2f s ($rows pairs, $skewMark)")
-      }
-      run("uniform            ", skewed = false, skewJoin = true)
-      run("skew90 skewJoin=off", skewed = true, skewJoin = false)
-      run("skew90 skewJoin=on ", skewed = true, skewJoin = true)
-      run("uniform (rep2)     ", skewed = false, skewJoin = true)
-      run("skew90 off (rep2)  ", skewed = true, skewJoin = false)
-      run("skew90 on  (rep2)  ", skewed = true, skewJoin = true)
-    } else if (name == "vocabscale") {
-      // tokenizer-serving kernels at PRODUCTION vocabulary sizes: the
-      // gates run 200-piece vocabularies; a real WordPiece/unigram/BPE
-      // vocab is 30-50k pieces riding as array literals into the kernel
-      // expressions. Measures encode wall-clock at 200 -> 32k pieces
-      // with codegen fallback DISABLED (a Janino limit would fail
-      // loudly, not silently fall back to interpreted). Also pins the
-      // ranked-vs-sequential apply_bpe_table gap: a one-dummy-merge
-      // INCONSISTENT prefix forces the sequential fold through the same
-      // expression, so the two timings share plan/codegen overheads.
-      graft.functions.TextExprs.register(spark)
-      spark.conf.set("spark.sql.codegen.fallback", "false")
-      import org.apache.spark.sql.functions._
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val words = docs
-        .select(explode(call_function("split_words", col("text"))).as("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"word occurrences: ${words.count()}")
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n pieces)")
-      }
-      for (k <- Seq(200, 2000, 32000)) {
-        // harvested top grams + synthetic tail when the corpus has fewer
-        // distinct grams than k — tail pieces are realistic-length
-        // never-matching strings that size the hash maps, the plan
-        // literal, and task serialization honestly
-        val harvested = operators.CorpusOps
-          .wordpieceVocabWithFreqs(docs, "text", k, 4)
-        val vocab = (harvested ++
-          (harvested.size until k).map(i => (s"zq${i}x", 1L))).take(k)
-        val ps = vocab.map(_._1).toArray
-        val fs = vocab.map(_._2).toArray
-        for (r <- 1 to reps) {
-          t(s"k=$k r$r wordpiece")(words
-            .select(call_function("wordpiece", col("w"), lit(ps)).as("p"))
-            .agg(sum(size(col("p")))).head().getLong(0))
-          t(s"k=$k r$r viterbi")(words
-            .select(call_function("viterbi_segment", col("w"), lit(ps),
-              lit(fs)).as("v"))
-            .agg(sum(col("v.n_pieces"))).head().getLong(0))
-        }
-      }
-      // BPE merge table: character-chain merges of the top corpus words
-      // (these FIRE on real text) + a consistent synthetic tail to reach
-      // k. chars -> symbols via char_ngrams(w, 1)
-      val topWords = words.groupBy(col("w")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("w").asc).limit(400)
-        .collect().map(_.getString(0)).filter(_.length >= 2)
-      val seen = scala.collection.mutable.Set[String]()
-      val chain = scala.collection.mutable.ArrayBuffer[(String, String)]()
-      for (w <- topWords) {
-        var acc = w.substring(0, 1)
-        for (c <- w.substring(1)) {
-          val wb = c.toString
-          if (seen.add(s"$acc $wb")) chain += ((acc, wb))
-          acc = s"$acc $wb"
-        }
-      }
-      for (k <- Seq(200, 2000, 32000)) {
-        val real = chain.take(k).toSeq
-        val table = real ++ (real.size until k).map(i => (s"zzq$i", s"zzr$i"))
-        val was = table.map(_._1).toArray
-        val wbs = table.map(_._2).toArray
-        // dummy rank-0 pair referencing the LAST output: inconsistent ->
-        // sequential fold; never fires (the token cannot exist during
-        // the pass), so both modes do identical merge work
-        val lastOut = table.last._1 + " " + table.last._2
-        val sWas = (lastOut +: table.map(_._1)).toArray
-        val sWbs = ("zznever" +: table.map(_._2)).toArray
-        val chars = words.select(col("w"),
-          call_function("char_ngrams", col("w"), lit(1)).as("cs"))
-        for (r <- 1 to reps) {
-          t(s"k=$k r$r bpe_ranked")(chars
-            .select(call_function("apply_bpe_table", col("cs"), lit(was),
-              lit(wbs)).as("p"))
-            .agg(sum(size(col("p")))).head().getLong(0))
-          // sequential is O(k·|word|)/word: at 32k it is minutes — only
-          // measured where it terminates in reasonable time
-          if (k <= 2000)
-            t(s"k=$k r$r bpe_sequential")(chars
-              .select(call_function("apply_bpe_table", col("cs"), lit(sWas),
-                lit(sWbs)).as("p"))
-              .agg(sum(size(col("p")))).head().getLong(0))
-        }
-      }
-    } else if (name == "x13profile") {
-      // x13 stage split: kernel hash emit vs bucket agg vs pair explode
-      import org.apache.spark.sql.functions._
-      graft.functions.TextExprs.register(spark)
-      graft.functions.Md5Prefix28Expr.register(spark)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-      }
-      for (r <- 1 to reps) {
-        val hashes = docs
-          .filter(length(col("text")) >= 24)
-          .select(col("doc_id"), explode(call_function("char_gram_hashes",
-            col("text"), lit(24), lit(8))).as("h"))
-        t(s"r$r hashes_only")(hashes.count())
-        val boundedSet = udaf(
-          new graft.functions.BoundedCollectSet(50),
-          org.apache.spark.sql.Encoders.scalaLong)
-        val buckets = hashes.groupBy(col("h"))
-          .agg(boundedSet(col("doc_id")).as("ds"))
-          .filter(col("ds").isNotNull && size(col("ds")) >= 2)
-        t(s"r$r buckets")(buckets.count())
-        t(s"r$r full_x13")(operators.SimilarityQueries
-          .x13FingerprintOverlap(spark, sfDir).count())
-      }
-    } else if (name == "seq") {
-      // time a comma list of queries in order, `reps` passes — mirrors the
-      // bench's sequential timed pass (cache effects included)
-      val names = args(1).split(",").toSeq
-      // args(1) is the query list here, so sfDir (= args(1) fallback) is not
-      // a usable data dir — resolve it from the env uniformly
-      val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      for (i <- 1 to reps) {
-        names.foreach { n =>
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, dir).count()
-          println(f"pass$i $n: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-      }
-    } else if (name == "codegenrepro") {
-      // dev-only: reproduce the whole-stage compile failure in the PQ
-      // assign path and dump the generated source (DEBUG-only in Spark)
-      import org.apache.spark.sql.functions._
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
-        org.apache.logging.log4j.Level.DEBUG)
-      graft.functions.VectorExprs.register(spark)
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val idx = operators.IvfPq.build(emb, "vec_id", "v", nCells = 8,
-        m = 32, k = 64, coarseIters = 3, pqIters = 3, portable = true)
-      println("CODES=" + idx.codes.count())
-      idx.release()
-    } else if (name == "trainscale") {
-      // IVF-PQ training cost vs corpus size: the VecSumAgg update step
-      // must scale with ROWS (one buffer fold per vector), not rows×d
-      // (the posexplode form it replaced) — this is the 100 TB claim
-      // behind the r12 trainer change, measured. Replicated embeddings
-      // with jittered values keep the geometry honest (pure copies
-      // would collapse every replica onto one codeword).
-      import org.apache.spark.sql.functions._
-      graft.functions.VectorExprs.register(spark)
-      val factor = math.max(1, reps)
-      val root = java.nio.file.Files
-        .createTempDirectory("trainscale").toString
-      writeScaledEmbeddings(spark, sfDir, factor, root)
-      val emb = spark.read.parquet(s"$root/emb")
-      val nVecs = emb.count()
-      println(s"corpus: $nVecs vectors (factor $factor)")
-      // TRAIN_CAP=<n>: bound what the ITERATED trainers see with the
-      // same content-hash rule IvfPq.build's maxTrainVectors applies
-      // (md5_prefix28(vec_id) % 10^6 < floor(10^6·cap/n)) — the r14
-      // sampled-codebook ladder rows; unset = full-corpus training
-      // (the pre-r14 rows, directly comparable)
-      val trainFilter = sys.env.get("TRAIN_CAP").map(_.toLong)
-        .filter(cap => cap > 0 && nVecs > cap).map { cap =>
-          graft.functions.Md5Prefix28Expr.register(spark)
-          val rate = operators.IvfPq.trainSampleRate(nVecs, cap)
-          pmod(call_function("md5_prefix28", col("vec_id").cast("string")),
-            lit(operators.IvfPq.TrainSampleModulus)) < lit(rate)
-        }
-      trainFilter.foreach { f =>
-        println(s"train sample: ${emb.filter(f).count()} vectors " +
-          s"(cap ${sys.env("TRAIN_CAP")})")
-      }
-      for (r <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val cents = operators.IvfAnn
-          .trainCentroids(trainFilter.fold(emb)(emb.filter), 8, 3,
-            portable = true)
-        val t1 = System.nanoTime()
-        // spread BEFORE persisting (the caller-pinned contract, r13):
-        // the trainer never re-spreads a persisted input, so this is
-        // the ONE residual copy the whole PQ phase runs against
-        val residuals = graft.operators.ScaleUtils.spreadForCompute(
-          operators.IvfAnn
-            .assignCells(emb, cents, portable = true)
-            .join(broadcast(cents.withColumnRenamed("cid", "cell")),
-              Seq("cell"))
-            .select(col("vec_id"), col("cell"),
-              zip_with(col("v"), col("cv"), (x, c) => x - c).as("r")))
-          .persist()
-        residuals.count()
-        val t2 = System.nanoTime()
-        operators.ProductQuantizer
-          .train(trainFilter.fold(residuals)(residuals.filter),
-            "vec_id", "r", 32, 64, 3, portable = true)
-        val t3 = System.nanoTime()
-        residuals.unpersist(): Unit
-        println(f"r$r coarse(3it)=${(t1 - t0) / 1e9}%.2f s " +
-          f"residuals=${(t2 - t1) / 1e9}%.2f s " +
-          f"pq(3it)=${(t3 - t2) / 1e9}%.2f s")
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-    } else if (name == "advrecall") {
-      // ADVERSARIAL-geometry recall-vs-cap (VERDICT r15 ask #1): the r14
-      // samplerecall sweep saturated at 1.000 because replicated-jitter
-      // corpora are easy — every codebook trained anywhere near the data
-      // serves them. This mode builds a skewed Gaussian-mixture corpus
-      // where the sampled-codebook cap has to MATTER: ADV_CLUSTERS
-      // (default 512) mixture components with Zipf(1) mass (a few giant
-      // heads, a long tail) and per-cluster noise scale spanning 2.5
-      // orders of magnitude — a small hash sample sees almost no tail
-      // vectors, so tail centroids/codebooks degrade as the cap shrinks.
-      // Queries probe head AND tail cluster centers; recall@10 against
-      // exact full-precision cosine. `reps` = corpus size in millions.
-      // Env knobs: ADV_CELLS (256), ADV_NPROBE (16), ADV_CAPS.
-      import org.apache.spark.sql.functions._
-      graft.functions.VectorExprs.register(spark)
-      val nVecs = math.max(1, reps) * 1000000L
-      val d = 64
-      val kC = sys.env.getOrElse("ADV_CLUSTERS", "512").toInt
-      val nCells = sys.env.getOrElse("ADV_CELLS", "256").toInt
-      val nProbe = sys.env.getOrElse("ADV_NPROBE", "16").toInt
-      val caps = sys.env.getOrElse("ADV_CAPS",
-        "0,262144,65536,16384,4096").split(',').map(_.trim.toLong).toSeq
-      val rnd = new java.util.Random(151)
-      val centers = Array.fill(kC, d)(rnd.nextGaussian())
-      val sigmas = Array.tabulate(kC)(_ =>
-        0.001 * math.pow(300.0, rnd.nextDouble()))
-      // Zipf(1) mass, inverse-CDF through an 8192-bucket lookup literal
-      val w = Array.tabulate(kC)(c => 1.0 / (c + 1.0))
-      val wSum = w.sum
-      val cum = w.scanLeft(0.0)(_ + _).tail.map(_ / wSum)
-      val lookup = Array.tabulate(8192) { b =>
-        val u = (b + 0.5) / 8192.0
-        var lo = 0; var hi = kC - 1
-        while (lo < hi) {
-          val mid = (lo + hi) / 2
-          if (cum(mid) < u) lo = mid + 1 else hi = mid
-        }
-        lo
-      }
-      val headQs = Seq(0, 1, 2, 3)
-      val tailQs = Seq(kC * 3 / 5, kC * 7 / 10, kC * 4 / 5,
-        kC * 9 / 10, kC - 10, kC - 5, kC - 2, kC - 1)
-      val qClusters = headQs ++ tailQs
-      // ADV_ROOT: fixed corpus dir reused across invocations (the sweep
-      // can then run one cap per process); default: per-run temp dir,
-      // removed on exit. Generation is skipped when the corpus exists.
-      val fixedRoot = sys.env.get("ADV_ROOT")
-      val root = fixedRoot.getOrElse(
-        java.nio.file.Files.createTempDirectory("advrecall").toString)
-      try {
-        import spark.implicits._
-        val clusters = centers.indices
-          .map(c => (c, centers(c).toSeq, sigmas(c)))
-          .toDF("cid", "center", "sigma")
-        if (!new java.io.File(s"$root/emb/_SUCCESS").exists()) {
-          spark.range(0, nVecs, 1, 64)
-            .select(col("id").as("vec_id"),
-              element_at(lit(lookup),
-                (pmod(xxhash64(col("id")), lit(8192L)) + 1).cast("int"))
-                .as("cid"))
-            .join(broadcast(clusters), Seq("cid"))
-            .select(col("vec_id"), col("cid"),
-              expr(s"transform(sequence(0, ${d - 1}), i -> " +
-                "element_at(center, i + 1) + sigma * " +
-                "(CAST(pmod(xxhash64(vec_id * 64 + i), 1000000) AS DOUBLE)" +
-                " / 500000.0 - 1.0))").as("v"))
-            .write.parquet(s"$root/emb")
-          // planted needles: per query cluster, 10 vectors at
-          // 0.02·sigma of the center — the unambiguous true top-10
-          // under BOTH L2 and cosine (members sit at ~4.6·sigma).
-          // Recall then measures whether the trained geometry can
-          // still SURFACE them through cell assignment + ADC — which
-          // is exactly what a starved codebook loses first in the
-          // regions the sample never saw.
-          val needleRnd = new java.util.Random(251)
-          val needles = qClusters.zipWithIndex.flatMap { case (c, qi) =>
-            (0 until 10).map { j =>
-              val v = centers(c).zipWithIndex.map { case (x, _) =>
-                x + sigmas(c) * 0.02 * (needleRnd.nextDouble() * 2 - 1) }
-              (nVecs + qi * 10L + j, c, v.toSeq)
-            }
-          }.toDF("vec_id", "cid", "v")
-          needles.coalesce(1).write.mode("append").parquet(s"$root/emb")
-        }
-        val emb = spark.read.parquet(s"$root/emb")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = emb.count()
-        val mass = emb.groupBy("cid").count()
-        val tailShare = mass.filter(col("cid") >= kC / 2)
-          .agg(sum("count")).head().getLong(0).toDouble / n
-        println(f"corpus: $n vectors, $kC clusters, tail-half mass " +
-          f"$tailShare%.4f, nCells=$nCells nProbe=$nProbe")
-        val queries = qClusters.map(c => c -> centers(c).toSeq)
-        // exact L2 ground truth (ADC's metric) by brute force — the
-        // planted needles should BE the top-10; trust the sweep, not
-        // the construction
-        val truth: Map[Int, Set[Long]] = queries.map { case (c, q) =>
-          val l2 = expr("aggregate(zip_with(v, q, (x, y) -> " +
-            "(x - y) * (x - y)), 0D, (a, e) -> a + e)")
-          c -> emb.withColumn("q", lit(q.toArray))
-            .select(col("vec_id"), l2.as("d2"))
-            .orderBy(col("d2").asc, col("vec_id").asc).limit(10)
-            .collect().map(_.getLong(0)).toSet
-        }.toMap
-        val planted = qClusters.zipWithIndex.map { case (c, qi) =>
-          c -> (0 until 10).map(j => nVecs + qi * 10L + j).toSet }.toMap
-        println("exact ground truth done; planted==truth for " +
-          s"${qClusters.count(c => truth(c) == planted(c))}/" +
-          s"${qClusters.size} queries")
-        // ADV_SEED=spread: density-flattened seeding (IvfAnn.spreadSeeds)
-        // instead of the first-k-by-id init — measures whether the tail
-        // allocation lottery (PLANS r15) is fixed by seeding alone
-        val seedSpread = sys.env.get("ADV_SEED").contains("spread")
-        caps.foreach { cap =>
-          val t0 = System.nanoTime()
-          val idx = operators.IvfPq.build(emb, "vec_id", "v",
-            nCells = nCells, m = 32, k = 64, coarseIters = 3,
-            pqIters = 3, portable = false, maxTrainVectors = cap,
-            seedSpread = seedSpread)
-          val tb = (System.nanoTime() - t0) / 1e9
-          val recalls = queries.map { case (c, q) =>
-            val got = operators.IvfPq.topK(idx, q, topK = 10,
-              nProbe = nProbe).collect().map(_.getLong(0)).toSet
-            c -> (got.intersect(truth(c)).size / 10.0)
-          }
-          idx.release()
-          val hd = recalls.filter(r => headQs.contains(r._1)).map(_._2)
-          val tl = recalls.filter(r => tailQs.contains(r._1)).map(_._2)
-          println(f"cap=$cap%8d build=$tb%6.1f s recall@10 " +
-            f"mean=${recalls.map(_._2).sum / recalls.size}%.3f " +
-            f"head=${hd.sum / hd.size}%.3f tail=${tl.sum / tl.size}%.3f " +
-            recalls.map(r => f"${r._1}:${r._2}%.1f").mkString(" "))
-        }
-        emb.unpersist(): Unit
-      } finally if (fixedRoot.isEmpty)
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(root))
-    } else if (name == "samplerecall") {
-      // recall-vs-training-sample-size (the r14 sampled-codebook trade,
-      // VERDICT r13 ask #1's PLANS row): one replicated corpus, one
-      // exact ground truth, IvfPq.build at descending maxTrainVectors —
-      // recall@10 over 8 probe queries against exact round-6 cosine.
-      // `reps` is the replication factor (corpus = 2000·factor at
-      // sf0.1); caps sweep from full training down to 1/512 of it.
-      import org.apache.spark.sql.functions._
-      graft.functions.VectorExprs.register(spark)
-      val factor = math.max(1, reps)
-      val root = java.nio.file.Files
-        .createTempDirectory("samplerecall").toString
-      writeScaledEmbeddings(spark, sfDir, factor, root)
-      val emb = spark.read.parquet(s"$root/emb")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = emb.count()
-      println(s"corpus: $n vectors (factor $factor)")
-      val queries = (0 until 8).map(q => q.toLong)
-      val qvecs = emb.filter(col("vec_id").isin(queries: _*))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      val exact = queries.map { q =>
-        q -> emb.filter(col("vec_id") =!= q)
-          .select(col("vec_id"),
-            round(call_function("vec_cosine", col("v"),
-              typedLit(qvecs(q))), 6).as("c"))
-          .orderBy(col("c").desc, col("vec_id").asc).limit(10)
-          .collect().map(_.getLong(0)).toSet
-      }.toMap
-      for (cap <- Seq(0L, 262144L, 65536L, 16384L, 4096L)
-          if cap == 0L || cap < n) {
-        val t0 = System.nanoTime()
-        val idx = operators.IvfPq.build(emb, "vec_id", "v", nCells = 8,
-          m = 32, k = 64, coarseIters = 3, pqIters = 3, portable = true,
-          maxTrainVectors = cap)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val local = operators.IvfPq.localizeIndex(idx)
-        val hits = queries.map { q =>
-          operators.IvfPq.topK(local, qvecs(q), topK = 10, nProbe = 4,
-            excludeId = Some(q), portable = true)
-            .collect().map(_.getLong(0)).count(exact(q))
-        }.sum
-        idx.release()
-        println(f"cap=${if (cap == 0) "full" else cap.toString}%s " +
-          f"build=${tBuild}%.1f s recall@10=${hits / (queries.size * 10.0)}%.3f")
-      }
-      emb.unpersist(): Unit
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-    } else if (name == "respersist") {
-      // persist-vs-recompute for the FULL residual relation under
-      // SAMPLED codebook training (the r14 question): with codebooks
-      // trained on the hash sample, full residuals are consumed only by
-      // cheap map-side lineage — (1) the sample filter that PQ.train
-      // materializes once, (2) the encode pass, (3) the codes cell
-      // join. Variant A persists them (IvfPq.build's current shape);
-      // variant B recomputes the lineage per consumer. Same corpus,
-      // same consumers, wall time per phase printed.
-      import org.apache.spark.sql.functions._
-      graft.functions.VectorExprs.register(spark)
-      graft.functions.Md5Prefix28Expr.register(spark)
-      val factor = math.max(1, reps)
-      val root = java.nio.file.Files
-        .createTempDirectory("respersist").toString
-      writeScaledEmbeddings(spark, sfDir, factor, root)
-      val emb = spark.read.parquet(s"$root/emb")
-      val n = emb.count()
-      val cap = 262144L
-      val rate = operators.IvfPq.trainSampleRate(n, cap)
-      val tf = pmod(call_function("md5_prefix28",
-        col("vec_id").cast("string")),
-        lit(operators.IvfPq.TrainSampleModulus)) < lit(rate)
-      println(s"corpus: $n vectors (factor $factor), sampled cap $cap")
-      lazy val cents = operators.IvfAnn
-        .trainCentroids(emb.filter(tf), 8, 3, portable = true)
-      def residualsOf(): org.apache.spark.sql.DataFrame =
-        operators.IvfAnn.assignCells(emb, cents, portable = true)
-          .join(broadcast(cents.withColumnRenamed("cid", "cell")),
-            Seq("cell"))
-          .select(col("vec_id"), col("cell"),
-            zip_with(col("v"), col("cv"), (x, c) => x - c).as("r"))
-      // RESPERSIST_ORDER=fp runs recompute FIRST (rules out page-cache
-      // order bias — the second variant always sees a warmer cache);
-      // RESPERSIST_BUILD_ONLY=1 skips both variants and times ONLY the
-      // real IvfPq.build in a clean JVM (a build run third in line
-      // inherits two variants' shuffle files and cache churn)
-      val order =
-        if (sys.env.contains("RESPERSIST_BUILD_ONLY")) Seq.empty[Boolean]
-        else if (sys.env.get("RESPERSIST_ORDER").contains("fp"))
-          Seq(false, true) else Seq(true, false)
-      for (persist <- order) {
-        val t0 = System.nanoTime()
-        val res = if (persist) {
-          val r = graft.operators.ScaleUtils.spreadForCompute(residualsOf())
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          r.count(): Unit
-          r
-        } else residualsOf()
-        val t1 = System.nanoTime()
-        val cb = operators.ProductQuantizer
-          .train(res.filter(tf), "vec_id", "r", 32, 64, 3, portable = true)
-        val t2 = System.nanoTime()
-        // the encode-side consumers: assignCodes scan + the cell join
-        val codes = operators.ProductQuantizer
-          .encode(res, "vec_id", "r", cb, 32)
-          .join(res.select(col("vec_id").as("pq_id"), col("cell")),
-            Seq("pq_id"))
-        println(s"codes rows: ${codes.count()}")
-        val t3 = System.nanoTime()
-        if (persist) res.unpersist(): Unit
-        println(f"persist=$persist materialize=${(t1 - t0) / 1e9}%.1f s " +
-          f"pqtrain=${(t2 - t1) / 1e9}%.1f s encode+join=${(t3 - t2) / 1e9}%.1f s " +
-          f"total=${(t3 - t0) / 1e9}%.1f s")
-      }
-      // and the REAL production build (new sampled shape: coarse on the
-      // pinned sample, PQ sample residuals FROM the pinned sample, no
-      // corpus-scale residual persist, eager encode) — end to end
-      val tb = System.nanoTime()
-      val idx = operators.IvfPq.build(emb, "vec_id", "v", nCells = 8,
-        m = 32, k = 64, coarseIters = 3, pqIters = 3, portable = true)
-      println(f"IvfPq.build end-to-end (sampled shape): " +
-        f"${(System.nanoTime() - tb) / 1e9}%.1f s")
-      idx.release()
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-    } else if (name == "exactcost") {
-      // the exact-arithmetic trade, measured (VERDICT r13 ask #5):
-      // (1) micro-kernel cost — round(double, k) vs ExactRound.ratio
-      //     vs the exact BM25 kernel vs its double form, over a 5M-row
-      //     frame (warm medians of 5);
-      // (2) codegen-cache pressure — Janino compilation counts
-      //     (CodegenMetrics) across TWO reps of every exact-family
-      //     gate: a second-rep delta of ~0 means the decimal
-      //     expression families fit the cache, not cycle it.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.metrics.source.CodegenMetrics
-      val rows = spark.range(0, 5000000L)
-        .select(col("id"),
-          (pmod(col("id") * 7919, lit(1000000L)) + 1).as("num"),
-          (pmod(col("id") * 104729, lit(9999L)) + 1).as("den"),
-          (pmod(col("id"), lit(40L)) + 1).as("tf"),
-          (pmod(col("id"), lit(97L)) + 1).as("df"),
-          (pmod(col("id"), lit(400L)) + 20).as("dl"))
-        .persist()
-      println(s"micro frame: ${rows.count()} rows")
-      def med(label: String)(body: => Unit): Unit = {
-        val ts = (1 to 5).map { _ =>
-          val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-        }.sorted
-        println(f"$label: median ${ts(2)}%.3f s (min ${ts.head}%.3f)")
-      }
-      med("round(num/den, 6) double") {
-        rows.select(sum(round(col("num").cast("double") /
-          col("den").cast("double"), 6))).collect(): Unit
-      }
-      med("ExactRound.ratio(num, den, 6)") {
-        rows.select(sum(graft.functions.ExactRound.ratio(
-          col("num"), col("den"), 6))).collect(): Unit
-      }
-      med("bm25 double form") {
-        rows.select(sum(round(((lit(1.0e6) - col("df").cast("double") +
-          lit(0.5)) / (col("df").cast("double") + lit(0.5)) *
-          ((col("tf").cast("double") * lit(2.2)) /
-            (col("tf").cast("double") + lit(1.2) * (lit(0.25) +
-              lit(0.75) * (col("dl").cast("double") / lit(211.7)))))) *
-          lit(1000000.0), 0).cast("long"))).collect(): Unit
-      }
-      med("bm25MicroContrib exact") {
-        rows.select(sum(graft.functions.ExactRound.bm25MicroContrib(
-          col("tf"), col("df"), col("dl"), lit(1000000L),
-          lit(211700000L)))).collect(): Unit
-      }
-      rows.unpersist(): Unit
-      val gates = Seq("x22_retrieval_eval", "x25_ann_recall",
-        "x30_map_eval", "d26_curate", "dx_halfway_grid", "d11_repetition_quality",
-        "d14_tfidf_keywords", "x32_contamination", "x17_bm25_topk",
-        "x18_hybrid_rrf", "x21_bm25_indexed", "x27_bm25_batch")
-      for (r <- 1 to 2) {
-        val c0 = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount
-        val t0 = System.nanoTime()
-        gates.foreach(g => SparkEntry.queries(g)(spark, sfDir).count(): Unit)
-        val dc = CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount - c0
-        println(f"rep $r: ${gates.size} exact-family gates in " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s, " +
-          f"$dc new codegen compilations")
-      }
-    } else if (name == "pqprof") {
-      // decompose one PQ-training iteration at a replicated corpus:
-      // where does the update pass spend — the assignment kernel, the
-      // vec_sum aggregation, or elsewhere?
-      import org.apache.spark.sql.functions._
-      graft.functions.VectorExprs.register(spark)
-      val factor = math.max(1, reps)
-      val root = java.nio.file.Files
-        .createTempDirectory("pqprof").toString
-      writeScaledEmbeddings(spark, sfDir, factor, root)
-      val emb0 = spark.read.parquet(s"$root/emb")
-      val emb = if (sys.env.contains("PQPROF_SPREAD"))
-        emb0.repartition(32) else emb0
-      println(s"corpus: ${emb.count()} vectors (factor $factor), " +
-        s"input partitions ${emb.rdd.getNumPartitions}")
-      val sv = operators.ProductQuantizer.subvectors(emb, "vec_id", "v", 32)
-      val cb = graft.operators.ScaleUtils.materializeLocal(
-        operators.ProductQuantizer.initCodebook(sv, 64))
-      for (r <- 1 to 2) {
-        var t0 = System.nanoTime()
-        sv.count()
-        println(f"r$r subvectors: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        t0 = System.nanoTime()
-        val assigned = operators.ProductQuantizer.assignCodes(sv, cb)
-        assigned.select(max(col("code"))).collect()
-        println(f"r$r assign+max: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        t0 = System.nanoTime()
-        assigned.groupBy(col("sub"), col("code"))
-          .agg(count(lit(1)).as("n")).collect()
-        println(f"r$r assign+count-agg: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        t0 = System.nanoTime()
-        assigned.groupBy(col("sub"), col("code"))
-          .agg(graft.functions.VecSumAgg.vec_sum(
-              col("sv").cast("array<double>")).as("s"),
-            count(col("sv")).as("n")).collect()
-        println(f"r$r assign+vec_sum-agg: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-    } else if (name == "x34train") {
-      // phase breakdown of the x34 one-time build: where does the
-      // cold-training wall time actually go?
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.storage.StorageLevel
-      graft.functions.VectorExprs.register(spark)
-      // the gate's own normalization (ONE definition — RetrievalOps doc)
-      val emb = operators.RetrievalOps.l2NormalizedEmbeddings(spark, sfDir)
-      emb.limit(5).count() // warm the reader
-      def t[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val c0 = org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getCount
-        val m0 = org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getSnapshot.getMean
-        val r = f
-        val c1 = org.apache.spark.metrics.source.CodegenMetrics
-          .METRIC_COMPILATION_TIME.getCount
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"(compiles +${c1 - c0}, mean ${m0}%.0f ms)")
-        r
-      }
-      val stageTimes = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Int)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-          stageTimes.put(si.stageId,
-            (si.name.takeWhile(_ != '\n').take(60), ms, si.numTasks))
-          if (ms > 1500)
-            println(s"SLOWSTAGE ${si.stageId} ${ms}ms tasks=${si.numTasks}\n" +
-              si.details.linesIterator.take(14).mkString("  ", "\n  ", ""))
-        }
-      })
-      for (i <- 1 to reps) {
-        println(s"--- rep $i ---")
-        stageTimes.clear()
-        val cents = t("coarse_train")(
-          operators.IvfAnn.trainCentroids(emb, 8, 3, portable = true))
-        val residuals = t("residuals")({
-          val r = operators.IvfAnn.assignCells(emb, cents, portable = true)
-            .join(broadcast(cents.withColumnRenamed("cid", "cell")),
-              Seq("cell"))
-            .select(col("vec_id"), col("cell"),
-              zip_with(col("v"), col("cv"), (x, c) => x - c).as("r"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          r.count(); r
-        })
-        stageTimes.clear()
-        val cb = t("pq_train")(operators.ProductQuantizer
-          .train(residuals, "vec_id", "r", 32, 64, 3, portable = true))
-        if (i == reps) {
+          drain()
           import scala.jdk.CollectionConverters._
-          val all = stageTimes.asScala.toSeq
-          println(s"  pq_train stages: ${all.size}, " +
-            s"wall-in-stages ${all.map(_._2._2).sum} ms")
-          all.sortBy(-_._2._2).take(10).foreach { case (id, (n, ms, nt)) =>
-            println(f"  stage $id%5d ${ms}%6d ms $nt%3d tasks  $n")
+          val all = stageTimes.asScala.toSeq.sortBy(_._1)
+          println(s"  $g warm rep: jobs=${jobs.get} stages=${all.size} " +
+            f"sumWall=${all.map(_._2._2).sum}%d ms " +
+            f"sumCpu=${all.map(_._2._3).sum}%d ms")
+          all.foreach { case (id, (nm, ms, cpu, nt)) =>
+            println(f"  stage $id%4d wall=$ms%5d cpu=$cpu%5d tasks=$nt%3d  $nm")
           }
         }
-        t("encode")(operators.ProductQuantizer
-          .encode(residuals, "vec_id", "r", cb, 32).count())
-        residuals.unpersist(): Unit
-        // the production path: IvfPq.build (build-scoped tuned clone)
-        val idx = t("full_build")({
-          val ix = operators.IvfPq.build(emb, "vec_id", "v", nCells = 8,
-            m = 32, k = 64, coarseIters = 3, pqIters = 3, portable = true)
-          ix.codes.count(); ix
-        })
-        idx.release()
-      }
-    } else if (name == "chaossoak") {
-      // ALL THREE chaos axes COMPOSED in one run of the three concurrent
-      // serving loops (r12 proved each axis separately): task-retry
-      // fault injection (local[8,3] + the attempt-0 injector on every
-      // stream), a mid-run INTERLOPER writer racing the lexical path's
-      // lease, and the invariance sweep's adversarial config B (3-wide
-      // shuffles, 64 KB input splits, AQE off) — the closest a
-      // single-box harness gets to a bad day on a 1000-executor
-      // cluster. Every end state must equal its CLEAN batch fold.
-      // Driven cross-JVM by ChaosSoakSpec; prints CHAOSSOAK PASS/FAIL.
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.functions._
-      import graft.operators.{CorpusOps, IvfPq, RetrievalOps}
-      spark.conf.set("spark.sql.shuffle.partitions", "3")
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-      spark.conf.set("spark.sql.files.openCostInBytes", "0")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val failedTasks = new java.util.concurrent.atomic.AtomicInteger
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (te.reason != org.apache.spark.Success) {
-              failedTasks.incrementAndGet(); ()
-            }
-        })
-      val injector = makeInjector()
-      val root = java.nio.file.Files.createTempDirectory("chaossoak")
-        .toString
-      val nChunks = 20
-      def writeFeed(dir: String, parts: Seq[DataFrame]): Unit =
-        parts.zipWithIndex.foreach { case (df, i) =>
-          val stage = s"$dir/_w$i"
-          df.coalesce(1).write.parquet(stage)
-          val f = new java.io.File(stage).listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(f.toPath,
-            java.nio.file.Paths.get(s"$dir/$i.parquet"))
-          org.apache.commons.io.FileUtils.deleteDirectory(
-            new java.io.File(stage))
-          // deterministic batch order: file source lists oldest-first
-          new java.io.File(s"$dir/$i.parquet")
-            .setLastModified(1000000L + i * 1000L): Unit
-        }
-      val docs = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text"))
-      val seed = docs.filter(col("doc_id") < 20)
-      writeFeed(s"$root/dfeed", (0 until nChunks).map(i =>
-        docs.filter(col("doc_id") >= 20 + i * 24 &&
-          col("doc_id") < 20 + (i + 1) * 24)))
-      val emb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      writeFeed(s"$root/vfeed", (0 until nChunks).map(i =>
-        Tables.embeddings(spark, sfDir)
-          .select((col("vec_id") + 500000L).as("vec_id"), col("embedding"),
-            col("label"))
-          .filter(col("vec_id") % nChunks === i)))
-      var failures = 0
-      def check(label: String)(cond: => Boolean): Unit = {
-        val ok = try cond catch {
-          case scala.util.control.NonFatal(e) =>
-            println(s"CHAOSSOAK $label: FAIL (threw ${e.getMessage})")
-            e.printStackTrace(); false
-        }
-        if (ok) println(s"CHAOSSOAK $label: PASS")
-        else { println(s"CHAOSSOAK $label: FAIL"); failures += 1 }
-      }
-      val idx = IvfPq.build(emb, "vec_id", "v", nCells = 4,
-        coarseIters = 0, pqIters = 0)
-      try {
-        IvfPq.writeIndex(idx, s"$root/vidx")
-        val frozen = IvfPq.loadIndex(spark, s"$root/vidx")
-        val codesBefore = frozen.codes.count()
-        RetrievalOps.indexCorpus(seed, "doc_id", "text", s"$root/lidx",
-          nBuckets = 8)
-        // every stream carries the injector downstream of an explicit
-        // 8-way repartition (partition 3 exists even under shuffle=3)
-        def docStream = spark.readStream
-          .schema("doc_id BIGINT, text STRING")
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet").parquet(s"$root/dfeed")
-          .repartition(8, col("doc_id"))
-          .withColumn("doc_id", injector(col("doc_id")))
-        val vecStream = spark.readStream
-          .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, label STRING")
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet").parquet(s"$root/vfeed")
-          .repartition(8, col("vec_id"))
-          .withColumn("vec_id", injector(col("vec_id")))
-        // the INTERLOPER: a manual append racing the lexical loop's
-        // lease — stops after banking one loud failure (bounds churn)
-        val wp = new java.io.File(s"$root/lidx/WRITER")
-        val loudFails =
-          new java.util.concurrent.ConcurrentLinkedQueue[String]()
-        val sneaked = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-        @volatile var watch = true
-        import spark.implicits._
-        val watcher = new Thread(() => {
-          var attempt = 0
-          while (watch && loudFails.isEmpty) {
-            if (wp.exists()) {
-              val id = 990000L + attempt
-              attempt += 1
-              try {
-                RetrievalOps.appendToPostings(
-                  Seq((id, s"interloper payload $id"))
-                    .toDF("doc_id", "text"),
-                  "doc_id", "text", s"$root/lidx")
-                sneaked.add(id)
-              } catch {
-                case e: IllegalStateException => loudFails.add(e.getMessage)
-              }
-            }
-            Thread.sleep(1)
-          }
-        })
-        // vector + admit loops start first and run throughout; the
-        // lexical loop drains under the interloper with
-        // restart-on-lease-loss (checkpoint replay)
-        val qVec = streaming.DocStreams.appendArrivals(vecStream, frozen,
-          s"$root/vidx", s"$root/ckpt_vec", compactEvery = Some(2))
-        val qAdm = streaming.DocStreams.admitArrivals(docStream, seed,
-          s"$root/adm", s"$root/ckpt_adm", compactEvery = Some(3))
-        watcher.start()
-        try {
-          var drained = false
-          var restarts = 0
-          while (!drained) {
-            val qLex = streaming.DocStreams.indexArrivals(docStream,
-              s"$root/lidx", s"$root/ckpt_lex", compactEvery = Some(2))
-            try {
-              qLex.processAllAvailable()
-              drained = true
-            } catch {
-              case e: org.apache.spark.sql.streaming
-                  .StreamingQueryException =>
-                def leaseLoss(t: Throwable): Boolean = t != null &&
-                  (Option(t.getMessage).exists(
-                    _.contains("another writer holds the lease")) ||
-                    leaseLoss(t.getCause))
-                if (!leaseLoss(e)) throw e
-                restarts += 1
-                if (restarts > 10) throw new IllegalStateException(
-                  "lexical loop could not win the lease back", e)
-            } finally qLex.stop()
-          }
-          qVec.processAllAvailable()
-          qAdm.processAllAvailable()
-        } finally {
-          watch = false
-          // loop the join until the interloper actually terminates: a
-          // timed-out join with an appendToPostings still in flight
-          // would let the thread mutate `sneaked` and the lexical index
-          // AFTER the end-state checks snapshot their rebuild corpus —
-          // a flaky pass/fail under pathological stalls. 5 min bound;
-          // a still-alive thread fails the soak loudly AFTER this
-          // finally (not inside it, which would mask a primary
-          // exception and skip the queue stops).
-          val joinDeadline = System.nanoTime() + 300e9.toLong
-          while (watcher.isAlive && System.nanoTime() < joinDeadline)
-            watcher.join(30000)
-          Seq(qVec, qAdm).foreach(_.stop())
-        }
-        if (watcher.isAlive) throw new IllegalStateException(
-          "chaossoak: interloper thread still alive after 5 min — " +
-            "end-state checks would race its mutations; failing loudly")
-        check("injection-fired") {
-          // no vacuous pass: the chaos actually happened — injected
-          // task failures were retried AND the interloper resolved
-          org.apache.spark.sql.graft.SessionOps
-            .drainListeners(spark, 30000L): Unit
-          failedTasks.get() > 0 && (!loudFails.isEmpty || !sneaked.isEmpty)
-        }
-        check("loops-compacted") {
-          Seq("lidx", "vidx", "adm").forall { d =>
-            new java.io.File(s"$root/$d/CURRENT").exists() &&
-            new java.io.File(s"$root/$d/generations").listFiles()
-              .count(_.getName.startsWith("g")) <= 2
-          }
-        }
-        check("lexical-end-state") {
-          // == one-shot rebuild over full corpus + legally sneaked docs
-          import scala.jdk.CollectionConverters._
-          val sneakDocs = sneaked.asScala.toSeq.sorted
-            .map(id => (id, s"interloper payload $id"))
-          val full = docs.unionByName(sneakDocs.toDF("doc_id", "text"))
-          RetrievalOps.indexCorpus(full, "doc_id", "text", s"$root/lfull",
-            nBuckets = 8)
-          val grown = RetrievalOps
-            .bm25TopKIndexed(spark, s"$root/lidx", RetrievalOps.GateTerms)
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-          val rebuilt = RetrievalOps
-            .bm25TopKIndexed(spark, s"$root/lfull", RetrievalOps.GateTerms)
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-          grown == rebuilt && grown.nonEmpty
-        }
-        check("vector-end-state") {
-          val after = IvfPq.loadIndex(spark, s"$root/vidx")
-          def keyOf(df: DataFrame, id: Long) = df
-            .filter(col("pq_id") === id)
-            .select(col("cell").cast("long"),
-              col("codes").cast("array<int>")).head()
-          after.codes.count() == codesBefore * 2 &&
-          Seq(3L, 7L, 499L).forall(id =>
-            keyOf(after.codes, 500000L + id) == keyOf(after.codes, id))
-        }
-        check("admit-end-state") {
-          // == the sequential CLEAN batch fold over the same 20 chunks
-          def admit(existing: DataFrame, b: DataFrame) =
-            CorpusOps.deduplicate(
-              CorpusOps.exactDeduplicate(
-                CorpusOps.dedupeIncrement(existing, b, "doc_id", "text"),
-                "doc_id", "text"),
-              "doc_id", "text")
-          var corpus = seed.collect()
-            .map(r => (r.getLong(0), r.getString(1))).toSeq
-          (0 until nChunks).foreach { i =>
-            val chunk = spark.read.parquet(s"$root/dfeed/$i.parquet")
-            corpus = corpus ++ admit(corpus.toDF("doc_id", "text"), chunk)
-              .collect().map(r => (r.getLong(0), r.getString(1)))
-          }
-          val expected = corpus.drop(seed.count().toInt).toSet
-          val got = streaming.DocStreams
-            .admittedDocs(spark, s"$root/adm", seed.schema)
-            .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-          got == expected
-        }
-      } finally idx.release()
-      org.apache.hadoop.fs.FileUtil
-        .fullyDelete(new java.io.File(root)): Unit
-      println(s"CHAOSSOAK total failures: $failures")
-      if (failures > 0) { spark.stop(); sys.exit(1) }
-    } else if (name == "faultinject") {
-      // Task-retry exactness: on a 1000-executor cluster task failures are
-      // routine (preemption, bad hosts, fetch failures) and Spark's answer
-      // is re-running the failed attempt. Every operator therefore has to
-      // be exact UNDER retries: a retried map task must not double-emit
-      // into a sink, a retried shuffle task must not shift an aggregate,
-      // a retried write task's partial file must be discarded by the
-      // committer. local[k] never retries (maxFailures=1), so the bench
-      // and the oracle gate cannot see a violation — this mode runs under
-      // local[8,3] and injects one deliberate attempt-0 task failure into
-      // a chosen partition of each operator's input, then asserts the
-      // result is IDENTICAL to the clean run. Driven cross-JVM by
-      // FaultToleranceSpec; prints one PASS/FAIL line per check.
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.TaskContext
-      val failedTasks = new java.util.concurrent.atomic.AtomicInteger
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (te.reason != org.apache.spark.Success) {
-              failedTasks.incrementAndGet(); ()
-            }
-        })
-      val injector = makeInjector()
-      def flaky(df: DataFrame, idCol: String): DataFrame =
-        df.repartition(8, col(idCol))
-          .withColumn(idCol, injector(col(idCol)))
-      def clean(df: DataFrame, idCol: String): DataFrame =
-        df.repartition(8, col(idCol))
-      var failures = 0
-      def check(label: String)(cond: => Boolean): Unit = {
-        // drain the async listener bus BEFORE the baseline snapshot and
-        // AFTER the body: a sleep-poll that exits on the first delta
-        // could credit this check with a PREDECESSOR's late-arriving
-        // task-end event (or miss this check's second stage), turning
-        // the vacuous-pass detector into noise
-        org.apache.spark.sql.graft.SessionOps
-          .drainListeners(spark, 30000L): Unit
-        val before = failedTasks.get()
-        val outcome = try Some(cond) catch {
-          case scala.util.control.NonFatal(e) =>
-            println(s"FAULTINJECT $label: FAIL (threw ${e.getMessage})")
-            None
-        }
-        outcome match {
-          case None => failures += 1
-          case Some(false) =>
-            println(s"FAULTINJECT $label: FAIL (result diverged)")
-            failures += 1
-          case Some(true) =>
-            val drained = org.apache.spark.sql.graft.SessionOps
-              .drainListeners(spark, 30000L)
-            val injected = failedTasks.get() - before
-            if (injected <= 0 || !drained) {
-              // a vacuous pass (injection never fired) is a FAIL: the
-              // check proved nothing about the retry path
-              println(s"FAULTINJECT $label: FAIL (no task failure " +
-                s"injected; busDrained=$drained)")
-              failures += 1
-            } else println(s"FAULTINJECT $label: PASS (retried $injected)")
-        }
-      }
-      val docs = Tables.documents(spark, sfDir)
-        .select("doc_id", "text", "lang", "source")
-      val tmp = java.nio.file.Files.createTempDirectory("faultinject").toString
-
-      check("sink-exactly-once") {
-        // write-task retry: the committer must discard attempt 0's file
-        clean(docs, "doc_id").write.parquet(s"$tmp/sink_clean")
-        flaky(docs, "doc_id").write.parquet(s"$tmp/sink_flaky")
-        val a = spark.read.parquet(s"$tmp/sink_clean")
-          .orderBy("doc_id").collect().toSeq
-        val b = spark.read.parquet(s"$tmp/sink_flaky")
-          .orderBy("doc_id").collect().toSeq
-        a == b && a.size == 500
-      }
-
-      check("shuffle-agg-dedup") {
-        // retried map task upstream of the dedup shuffle
-        val a = operators.CorpusOps
-          .exactDeduplicate(clean(docs, "doc_id"), "doc_id", "text")
-          .orderBy("doc_id").collect().toSeq
-        val b = operators.CorpusOps
-          .exactDeduplicate(flaky(docs, "doc_id"), "doc_id", "text")
-          .orderBy("doc_id").collect().toSeq
-        a == b && a.nonEmpty
-      }
-
-      check("minhash-candidates") {
-        // banded LSH pair generation: a retried signature task must not
-        // shift any band hash
-        val a = operators.CorpusOps
-          .candidatePairs(clean(docs, "doc_id"), "doc_id", "text")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val b = operators.CorpusOps
-          .candidatePairs(flaky(docs, "doc_id"), "doc_id", "text")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        a == b && a.nonEmpty
-      }
-
-      check("index-build-append-compact") {
-        // the full lease-guarded index lifecycle with failures injected
-        // into BOTH the initial build's corpus scan and the appended
-        // batch: probes over the two indexes must rank bit-for-bit
-        val base = docs.filter(col("doc_id") % 5 =!= 0)
-        val batch = docs.filter(col("doc_id") % 5 === 0)
-        operators.RetrievalOps.indexCorpus(
-          clean(base, "doc_id"), "doc_id", "text", s"$tmp/idx_clean")
-        operators.RetrievalOps.appendToPostings(
-          clean(batch, "doc_id"), "doc_id", "text", s"$tmp/idx_clean",
-          batchId = Some(1L))
-        operators.RetrievalOps.compactInPlace(spark, s"$tmp/idx_clean")
-        operators.RetrievalOps.indexCorpus(
-          flaky(base, "doc_id"), "doc_id", "text", s"$tmp/idx_flaky")
-        operators.RetrievalOps.appendToPostings(
-          flaky(batch, "doc_id"), "doc_id", "text", s"$tmp/idx_flaky",
-          batchId = Some(1L))
-        operators.RetrievalOps.compactInPlace(spark, s"$tmp/idx_flaky")
-        Seq(Seq("window", "join"), Seq("scan", "filter"), Seq("hash"))
-          .forall { terms =>
-            val a = operators.RetrievalOps.bm25TopKIndexed(
-              spark, s"$tmp/idx_clean", terms, k = 20)
-              .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-            val b = operators.RetrievalOps.bm25TopKIndexed(
-              spark, s"$tmp/idx_flaky", terms, k = 20)
-              .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-            a == b && a.nonEmpty
-          }
-      }
-
-      check("pbf-scan-retry") {
-        // a retried task over the custom DSv2 PBF source: blob-split
-        // planning must hand the retried attempt the exact byte range and
-        // decode path the dead attempt had. The injector sits in the SAME
-        // stage as the scan (no shuffle between), so the retried task
-        // re-runs the blob decode itself; monaco packs into one split
-        // (the 1 MB split floor), so the target partition is 0.
-        val monaco = "/root/reference/tests/test_files/monaco.osm.pbf"
-        InjectState.part.set(0)
-        try {
-          val scan = spark.read.format("osmpbf").load(monaco)
-            .select(col("kind"), col("id"), col("lat"), col("lon"))
-          val a = scan.orderBy("kind", "id").collect().toSeq
-          val b = scan.withColumn("id", injector(col("id")))
-            .orderBy("kind", "id").collect().toSeq
-          a == b && a.size > 10000
-        } finally InjectState.part.set(3)
-      }
-
-      check("streaming-admit-loop") {
-        // a retried task INSIDE a foreachBatch micro-batch, composed with
-        // the loop's own replay/lease/compaction machinery (compactEvery=1
-        // folds after every commit): the admitted end state must equal the
-        // clean loop's over the same two arrival files
-        val seed = docs.select("doc_id", "text")
-          .filter(col("doc_id") % 5 =!= 0)
-        val feed = s"$tmp/feed"
-        val feedRows = docs.select("doc_id", "text")
-          .filter(col("doc_id") % 5 === 0)
-        feedRows.filter(col("doc_id") % 10 === 0)
-          .coalesce(1).write.parquet(s"$feed/b0")
-        feedRows.filter(col("doc_id") % 10 =!= 0)
-          .coalesce(1).write.parquet(s"$feed/b1")
-        for ((b, i) <- Seq("b0", "b1").zipWithIndex) {
-          val f = new java.io.File(s"$feed/$b").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(f.toPath,
-            java.nio.file.Paths.get(s"$feed/$i.parquet"))
-          // deterministic batch order: the file source lists oldest-first
-          new java.io.File(s"$feed/$i.parquet")
-            .setLastModified(1000000L * (i + 1)): Unit
-        }
-        def runLoop(root: String, inject: Boolean): Seq[(Long, String)] = {
-          val src = spark.readStream
-            .schema("doc_id BIGINT, text STRING")
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet").parquet(feed)
-            .repartition(8, col("doc_id"))
-          val arrivals =
-            if (inject) src.withColumn("doc_id", injector(col("doc_id")))
-            else src
-          val q = streaming.DocStreams.admitArrivals(arrivals, seed,
-            s"$root/adm", s"$root/ckpt", compactEvery = Some(1))
-          try q.processAllAvailable() finally q.stop()
-          streaming.DocStreams.admittedDocs(spark, s"$root/adm",
-              seed.schema)
-            .collect().map(r => (r.getLong(0), r.getString(1)))
-            .toSeq.sorted
-        }
-        val a = runLoop(s"$tmp/loop_clean", inject = false)
-        val b = runLoop(s"$tmp/loop_flaky", inject = true)
-        a == b && a.nonEmpty
-      }
-
-      check("streaming-stateful-window") {
-        // a retried task INSIDE the stateful aggregation stage: the
-        // post-agg injector projects in the SAME task as StateStoreSave
-        // (no exchange between), so attempt 0 dies after the store
-        // update began — the uncommitted delta must be discarded
-        // (store.abort) and the retry must reload the prior state
-        // version, or the watermark-closed windows double-count
-        def counts(inject: Boolean): Seq[org.apache.spark.sql.Row] = {
-          val src = streaming.EventStreams.fileSource(spark,
-            s"$sfDir/events.parquet")
-          val agg = streaming.EventStreams.tumblingCounts(src)
-          val out =
-            if (inject) agg.withColumn("n", injector(col("n"))) else agg
-          streaming.EventStreams.runToCompletion(out,
-              if (inject) "fi_flaky_win" else "fi_clean_win",
-              org.apache.spark.sql.streaming.OutputMode.Append)
-            .orderBy("window", "event_type").collect().toSeq
-        }
-        val a = counts(inject = false)
-        val b = counts(inject = true)
-        a == b && a.nonEmpty
-      }
-
-      check("streaming-vec-admit-loop") {
-        // the vector sibling: bucketed sign-LSH admission (planes=2,
-        // bands=2 — the non-default path with the most moving parts)
-        // under retries injected into each micro-batch
-        val emb = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val seed = emb.filter(col("vec_id") % 5 =!= 0)
-        val feed = s"$tmp/vfeed"
-        val feedRows = emb.filter(col("vec_id") % 5 === 0)
-        feedRows.filter(col("vec_id") % 10 === 0)
-          .coalesce(1).write.parquet(s"$feed/b0")
-        feedRows.filter(col("vec_id") % 10 =!= 0)
-          .coalesce(1).write.parquet(s"$feed/b1")
-        for ((b, i) <- Seq("b0", "b1").zipWithIndex) {
-          val f = new java.io.File(s"$feed/$b").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(f.toPath,
-            java.nio.file.Paths.get(s"$feed/$i.parquet"))
-          new java.io.File(s"$feed/$i.parquet")
-            .setLastModified(1000000L * (i + 1)): Unit
-        }
-        val embSchema = "vec_id BIGINT, embedding ARRAY<FLOAT>"
-        def runLoop(root: String, inject: Boolean): Seq[Long] = {
-          val src = spark.readStream
-            .schema(embSchema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet").parquet(feed)
-            .repartition(8, col("vec_id"))
-          val arrivals =
-            if (inject) src.withColumn("vec_id", injector(col("vec_id")))
-            else src
-          val q = streaming.DocStreams.vecAdmitArrivals(arrivals, seed,
-            s"$root/adm", s"$root/ckpt", threshold = 0.9,
-            compactEvery = Some(1), planes = 2, bands = 2)
-          try q.processAllAvailable() finally q.stop()
-          streaming.DocStreams.admittedDocs(spark, s"$root/adm",
-              seed.schema)
-            .select("vec_id").collect().map(_.getLong(0)).toSeq.sorted
-        }
-        val a = runLoop(s"$tmp/vloop_clean", inject = false)
-        val b = runLoop(s"$tmp/vloop_flaky", inject = true)
-        a == b && a.nonEmpty
-      }
-
-      org.apache.hadoop.fs.FileUtil
-        .fullyDelete(new java.io.File(tmp)): Unit
-      println(s"FAULTINJECT total failures: $failures")
-      if (failures > 0) { spark.stop(); sys.exit(1) }
-    } else {
-      val fn = SparkEntry.queries(name)
-      for (i <- 1 to reps) {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        println(f"run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
     }
     spark.stop()
   }
-
-  /** Jittered replicated-embedding corpus for the scale ladders
-    * (trainscale/pqprof — ONE generator so a fix to the jitter or the
-    * partitioning cannot silently diverge the two profiles). The
-    * repartition sits BEFORE the per-row jitter+normalize transforms:
-    * the source is ONE parquet file, so a post-transform repartition
-    * would leave the whole rows x factor explode and its O(d^2)
-    * normalization in a single task (measured 30+ min on one core at
-    * 8.2M rows while 31 idled). Spreading the exploded (id, _rep)
-    * pairs first makes generation parallel; the transforms are
-    * deterministic per (vec_id, _rep), so the corpus is identical
-    * either way. Pure replica copies would collapse onto one codeword,
-    * so values jitter on a deterministic lattice. */
-  private def writeScaledEmbeddings(spark: SparkSession, sfDir: String,
-      factor: Int, root: String): Unit = {
-    import org.apache.spark.sql.functions._
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"),
-        explode(sequence(lit(0L), lit(factor.toLong - 1))).as("_rep"))
-      .repartition(32, col("vec_id"), col("_rep"))
-      .select((col("vec_id") + col("_rep") * 10000000L).as("vec_id"),
-        expr("transform(embedding, (x, i) -> " +
-          "CAST(x AS DOUBLE) + CAST(pmod(_rep * 7 + i * 13, 17) AS " +
-          "DOUBLE) / 100.0)").as("e"))
-      .select(col("vec_id"),
-        expr("transform(e, x -> x / sqrt(aggregate(e, 0D, " +
-          "(a, y) -> a + y * y)))").as("v"))
-      .write.parquet(s"$root/emb")
-  }
-
-  /** Executor-side row counters for the fault injector (local mode: the
-    * singleton is shared with executor threads). Keyed by taskAttemptId so
-    * a re-used thread or a deserialized closure copy can never cross-count
-    * another attempt's rows. */
-  private[graft] object InjectState {
-    val rows = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-    /** Which partition the injector kills (driver sets it between checks;
-      * local mode shares the singleton with executor threads). */
-    val part = new java.util.concurrent.atomic.AtomicInteger(3)
-  }
-
-  /** Identity over the id column that kills row 2 of partition
-    * [[InjectState.part]] on attempt 0 of every stage that evaluates it
-    * (row 2, not later: a streaming micro-batch hash-partitioned 8 ways
-    * may only put a handful of rows in the chosen partition); the
-    * retried attempt (attemptNumber >= 1) passes every row. Keyed by
-    * taskAttemptId (globally unique) so re-used executor threads can't
-    * cross-count; nondeterministic so Catalyst cannot duplicate it or
-    * push it through the repartition exchange that gives the input its
-    * 8 deterministic hash partitions. Shared by the `faultinject`
-    * checks and the composed `chaossoak`. */
-  private def makeInjector()
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf { (id: Long) =>
-      val tc = org.apache.spark.TaskContext.get()
-      if (tc != null && tc.partitionId() == InjectState.part.get() &&
-          tc.attemptNumber() == 0) {
-        val n = InjectState.rows.merge(tc.taskAttemptId(), 1L, _ + _)
-        if (n == 2L) throw new RuntimeException(
-          s"graft-injected task failure stage=${tc.stageId()} " +
-            s"part=${tc.partitionId()} attempt=0")
-      }
-      id
-    }.asNondeterministic()
 }

@@ -826,7 +826,7 @@ case class WordpieceDocIdsExpr(first: Expression, second: Expression)
   * real (10k-50k merge) vocabulary sizes. A foldable consistent table
   * additionally dispatches per row to the rank-indexed encoder
   * ([[RankedBpe]] — per-word cost independent of table size, the
-  * DevProfile `vocabscale` measurement); inconsistent or per-row tables
+  * PLANS.md "Vocabulary-size scaling"); inconsistent or per-row tables
   * keep the sequential fold bit-for-bit. */
 case class ApplyBpeTableExpr(first: Expression, second: Expression,
     third: Expression)

@@ -510,43 +510,23 @@ object CorpusOps {
     * Earlier formulation (distinct → persist → cap semi-join → hash
     * self-join) measured 3.8 s cold at sf0.1; this shape ~halves it and
     * removes three shuffles plus the corpus-scale cache. */
-  /** Below this estimated input size, [[spread]] keeps the natural
-    * partitioning: the repartition's fixed stage cost exceeds what
-    * serializing the explode of this much text on few cores can lose.
-    * The threshold is LOW on purpose — asymmetric risk, measured
-    * (`DevProfile spreadsweep`, single-split replicas of the sf0.1
-    * corpus): at 1.2 MB compressed the serial explode already costs
-    * 2.9 s vs 0.5 s spread, at 3.2 MB 11.0 s vs 1.5 s (7×) — the
-    * blowup's work is text × k and parquet compression UNDERSTATES
-    * repetitive text badly (the 3.2 MB replica is ~88 MB raw), so
-    * erring high serializes without bound while erring low wastes one
-    * sub-second shuffle. Deliberately not the conversion path's 256 MB
-    * `AqeMinInputBytes` — that calibrates AQE stage-materialization
-    * overhead against input SCAN cost, unrelated to explode work.
-    *
-    * 256 KB (was 1 MB): the r13 calibration measured the repartition at
-    * ~0.5 s of a 1.3 s gate on the 0.6 MB sf0.1 corpus, but that cost
-    * was the era's 32-wide-shuffle scheduling floor, not the data
-    * round-trip — re-measured r16 (qstages census, post shuffle-width
-    * sizing): x13's gram explode ran as ONE 440 ms task with 31 cores
-    * idle while the whole spread costs ~100 ms. Matches the 256 KB
-    * floor [[ScaleUtils.spreadForCompute]] uses for the same
-    * O(text)-per-row kernel reasoning (the x33/bm25 convention). */
-  private[operators] val SpreadMinInputBytes: Long = 256L * 1024
-
   /** Ensure at least default-parallelism partitions before a ×k map-side
     * gram explode — but only when the input is big enough for the
-    * shuffle to pay for itself ([[SpreadMinInputBytes]]): a mid-size
-    * corpus scanning as fewer splits than cores would serialize the
-    * explode+hash blowup, while a SMALL corpus explodes faster on its
-    * natural partitioning than its text can round-trip a repartition.
+    * shuffle to pay for itself ([[graft.SizePolicy.TextSpreadMinBytes]]):
+    * a mid-size corpus scanning as fewer splits than cores would
+    * serialize the explode+hash blowup, while a SMALL corpus explodes
+    * faster on its natural partitioning than its text can round-trip a
+    * repartition.
     * Corpus-scale inputs exceed both the gate and the partition bound —
     * there this is a no-op and costs no shuffle. */
   private def spread(df: DataFrame, key: Column): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val small =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes < SpreadMinInputBytes
-    if (!small && df.rdd.getNumPartitions < p) df.repartition(p, key) else df
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val fired = bytes >= graft.SizePolicy.TextSpreadMinBytes &&
+      df.rdd.getNumPartitions < p
+    graft.SizePolicy.logSpread("CorpusOps.spread", df.sparkSession, bytes,
+      fired)
+    if (fired) df.repartition(p, key) else df
   }
 
   def fingerprintOverlap(docs: DataFrame, idCol: String, textCol: String,
@@ -1221,7 +1201,8 @@ object CorpusOps {
     // but the ~|word|·maxN gram explosion runs over the LEXICON only;
     // the corpus-proportional part is one (word, count) aggregation of
     // bare words (measured: the occurrence-exploding form grew 2.7× on
-    // a 5× corpus; this form is the flat half of DevProfile tokscale)
+    // a 5× corpus; this form is the flat half of PLANS.md's
+    // "Tokenizer-serving scaling")
     val words = docs
       .select(explode(call_function("split_words", col(textCol))).as("_g_w"))
       .groupBy(col("_g_w")).agg(count(lit(1)).as("_g_wn"))
@@ -1464,7 +1445,7 @@ object CorpusOps {
     * merges. A parquet cut every K rounds bounds the merge chain at K
     * nodes, making total work O(rounds · corpus / K): the classic
     * compute-vs-materialize trade, here at K = 8 (measured near-flat
-    * per-round cost; see DevProfile `bpescale`). */
+    * per-round cost; see PLANS.md, "BPE trainer round-linearity"). */
   val BpeMaterializeEvery = 8
 
   /** Shared trainer loop over a (_g_ws: array<string>) symbol relation —

@@ -336,7 +336,8 @@ object EmbeddingOps {
       // matters; the bucketed paths below keep their cheap-per-row
       // no-shuffle shape untouched.
       val ex = ScaleUtils.spreadForCompute(
-          vecs(existing, idCol, vecCol), minBytes = 256L * 1024)
+          vecs(existing, idCol, vecCol),
+          minBytes = graft.SizePolicy.TextSpreadMinBytes)
         .select(col("v").as("_g_ev"))
       val in = vecs(incoming, idCol, vecCol)
         .select(col("vec_id").as("_g_iid"), col("v").as("_g_iv"))

@@ -108,39 +108,28 @@ object IvfPq {
       maxTrainVectors: Long = DefaultMaxTrainVectors,
       seedSpread: Boolean = false): IvfPqIndex = {
     graft.functions.VectorExprs.register(df.sparkSession)
-    // Build-scoped execution tuning (the OsmPipeline small-input
-    // convention, measured there and here): training runs
-    // coarseIters + pqIters SEQUENTIAL update jobs whose aggregation
-    // outputs are parameter-bounded (k·d doubles), so at small corpus
-    // sizes the per-iteration cost is pure stage scheduling — AQE's
-    // per-query-stage materialization plus a full-width shuffle of
-    // near-empty partitions, paid ~6 times over. A cloned session
-    // (same SparkContext, same cache, OWN SQLConf) sizes the shuffles
-    // to the input and turns AQE off WITHOUT mutating the caller's
-    // session; past the threshold the defaults rule — a 100 TB build
-    // keeps AQE and the full shuffle width. Decisions are unchanged:
-    // partition count only regroups partial sums, which the portable
-    // round-6 quantization absorbs (VecSumAgg doc; x34's oracle
+    // Build-scoped execution tuning (graft.SizePolicy, measured in the
+    // conversion and here): training runs coarseIters + pqIters
+    // SEQUENTIAL update jobs whose aggregation outputs are
+    // parameter-bounded (k·d doubles), so at small corpus sizes the
+    // per-iteration cost is pure stage scheduling — AQE's per-query-stage
+    // materialization plus a full-width shuffle of near-empty
+    // partitions, paid ~6 times over. The policy's session clone sizes
+    // the shuffles to the input and turns AQE off WITHOUT mutating the
+    // caller's session; past the threshold the defaults rule — a 100 TB
+    // build keeps AQE and the full shuffle width. Decisions are
+    // unchanged: partition count only regroups partial sums, which the
+    // portable round-6 quantization absorbs (VecSumAgg doc; x34's oracle
     // re-verified hash-identical at several widths).
     val tuned = {
       val bytes = try
         org.apache.spark.sql.graft.SessionOps.estimatedBytes(df)
-      catch { case scala.util.control.NonFatal(_) => BigInt(-1) }
-      if (bytes >= 0 && bytes < graft.osm.OsmPipeline.AqeMinInputBytes) {
-        try {
-          val mth = df.sparkSession.getClass.getMethod("cloneSession")
-          val s = mth.invoke(df.sparkSession)
-            .asInstanceOf[org.apache.spark.sql.SparkSession]
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          val callerParts = try
-            s.conf.get("spark.sql.shuffle.partitions", "200").toLong
-          catch { case scala.util.control.NonFatal(_) => 200L }
-          val parts = math.max(4L, math.min(callerParts,
-            bytes.toLong / (4L * 1024 * 1024) + 1))
-          s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-          org.apache.spark.sql.graft.SessionOps.rebind(df, s)
-        } catch { case scala.util.control.NonFatal(_) => df }
-      } else df
+          .min(Long.MaxValue).toLong
+      catch { case scala.util.control.NonFatal(_) => -1L }
+      val s = graft.SizePolicy.sessionFor("IvfPq.build", df.sparkSession,
+        bytes)
+      if (s eq df.sparkSession) df
+      else org.apache.spark.sql.graft.SessionOps.rebind(df, s)
     }
     val embNarrow = tuned.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).as("v"))
@@ -148,9 +137,10 @@ object IvfPq {
     // partial sums) that inherit the INPUT partitioning: a mid-size
     // corpus in one split would run every kernel pass serially however
     // many cores sit idle (measured: 64k vectors in 1-2 natural splits
-    // = 6.6 s/assignment pass; spread to 32 = 1.1 s — DevProfile
-    // pqprof). [[graft.operators.ScaleUtils.spreadForCompute]] has the
-    // gating rationale (tiny and corpus-scale inputs untouched);
+    // = 6.6 s/assignment pass; spread to 32 = 1.1 s — PLANS.md "Trainer
+    // input-parallelism defect").
+    // [[graft.operators.ScaleUtils.spreadForCompute]] has the gating
+    // rationale (tiny and corpus-scale inputs untouched);
     // decisions are unchanged — the spread only regroups partial sums,
     // and the portable update kernel's integer sums are exactly
     // order-independent (MicroMeanAgg; x34/x15/x12 oracles re-verified). The lazy spread is PINNED for

@@ -283,12 +283,11 @@ object RelationalQueries {
     // sizes the whole union to ONE shuffle partition without mutating
     // the caller's session; values are exact integer kernels, so the
     // width change cannot move a single bit (hash-held at both SFs).
-    val s = try {
+    val s = {
       val cached = dxClones.get(s0)
       if (cached != null) cached
       else {
-        val c = s0.getClass.getMethod("cloneSession").invoke(s0)
-          .asInstanceOf[SparkSession]
+        val c = org.apache.spark.sql.graft.SessionOps.cloneSession(s0)
         c.conf.set("spark.sql.shuffle.partitions", "1")
         c.conf.set("spark.sql.adaptive.enabled", "false")
         // each implicit BroadcastExchange is its own eagerly-awaited
@@ -300,7 +299,7 @@ object RelationalQueries {
         dxClones.put(s0, c): Unit
         c
       }
-    } catch { case scala.util.control.NonFatal(_) => s0 }
+    }
     import s.implicits._
     // (case, num, den, k): exact num/den = ...5 at the k-th decimal
     //   33·10^4/32   = 10312.5   → half-up 1.0313   (the d14 shape)

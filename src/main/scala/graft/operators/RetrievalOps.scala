@@ -1463,10 +1463,8 @@ object RetrievalOps {
     * sum(hit)/10 per nprobe, pinned ≥ 0.8 at nprobe=8 by spec. */
   /** L2-normalized embeddings — the x34 production recipe (on unit
     * vectors cosine order == L2 order, so ADC's residual-L2 ranking
-    * approximates the cosine ground truth). ONE definition shared by
-    * the gate and the DevProfile x34 modes, so a profile can never
-    * silently measure a different normalization than the gate runs. */
-  private[graft] def l2NormalizedEmbeddings(s: SparkSession,
+    * approximates the cosine ground truth). */
+  private def l2NormalizedEmbeddings(s: SparkSession,
       dir: String): DataFrame = {
     graft.functions.VectorExprs.register(s)
     // one fused codegen pass per row ([[graft.functions.VectorKernels

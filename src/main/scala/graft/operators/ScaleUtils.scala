@@ -115,7 +115,8 @@ object ScaleUtils {
     * k-means trainers: each iteration's assignment kernel + partial
     * sums inherit the INPUT partitioning, so a mid-size corpus sitting
     * in one natural split trains serially however many cores sit idle
-    * — measured 6× on a 64k-vector corpus, DevProfile pqprof). Gated
+    * — measured 6× on a 64k-vector corpus, PLANS.md "Trainer
+    * input-parallelism defect"). Gated
     * both ways, the repo's small-input convention: below `minBytes`
     * the shuffle costs more than it parallelizes (the x34 gate corpus
     * stays untouched), and a corpus-scale input already carries more
@@ -148,16 +149,19 @@ object ScaleUtils {
     * effect — only frames that already passed the size gate pay that
     * probe, and their persist makes it the one-time cost it reads as). */
   def spreadForCompute(df: DataFrame,
-      minBytes: Long = 4L * 1024 * 1024): DataFrame = {
+      minBytes: Long = graft.SizePolicy.SpreadMinBytes): DataFrame = {
     val bytes = try
       org.apache.spark.sql.graft.SessionOps.estimatedBytes(df)
     catch { case scala.util.control.NonFatal(_) => BigInt(-1) }
-    if (bytes < minBytes) df
-    else {
+    val fired = bytes >= minBytes && {
       val cores = df.sparkSession.sparkContext.defaultParallelism
       val parts = try df.rdd.getNumPartitions
       catch { case scala.util.control.NonFatal(_) => cores }
-      if (parts * 2 <= cores) df.repartition(cores) else df
+      parts * 2 <= cores
     }
+    graft.SizePolicy.logSpread("ScaleUtils.spreadForCompute",
+      df.sparkSession, bytes, fired)
+    if (fired) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
   }
 }

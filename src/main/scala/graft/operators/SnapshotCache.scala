@@ -60,7 +60,7 @@ private[graft] object SnapshotCache {
     val p = new org.apache.hadoop.fs.Path(inputPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     // LOCAL paths walk via java.nio: the Hadoop local FS pays ~5-8 ms
-    // PER FILE on list (measured, DevProfile probeprof — a 77-file index
+    // PER FILE on list (measured, PLANS.md "snapshotOf" — a 77-file index
     // dir cost ~330 ms per fingerprint, turning every snapshot-keyed
     // probe's memo validation into the probe's dominant cost). The nio
     // walk reads the same (relative path, length, mtime-in-ms) triples

@@ -797,7 +797,7 @@ object TextQueries {
     // per-char transform/sequence/substring HOF chain (identical
     // values; symbol counts are computation-order-free)
     val syms = ScaleUtils.spreadForCompute(documents(s, dir),
-        minBytes = 256L * 1024)
+        minBytes = graft.SizePolicy.TextSpreadMinBytes)
       .select(explode(call_function("split_words", col("text"))).as("_g_w"))
       .select(concat(call_function("char_ngrams", col("_g_w"), lit(1)),
         array(lit("</w>"))).as("_g_ws"))

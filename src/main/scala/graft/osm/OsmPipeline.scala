@@ -118,16 +118,9 @@ object OsmPipeline {
     df
   }
 
-  /** Inputs below this size run the conversion with AQE off. The DAG has
-    * ~30 joins; AQE materializes every query stage (and every runtime
-    * broadcast) as its own driver-scheduled job with a fixed ~100-200 ms
-    * cost — ~10 s of pure scheduling on a 3 MB extract (measured: 79
-    * stages / 53 broadcast jobs with AQE vs 32 stages without; 13.2 s vs
-    * 8.3 s warm). Past ~256 MB of compressed PBF the data-proportional
-    * work dwarfs that fixed cost and AQE's runtime re-planning (skew
-    * splits, partition coalescing, SMJ→BHJ) is worth buying — exactly the
-    * regime a 100 TB cluster run is in, so big inputs keep AQE on. */
-  val AqeMinInputBytes: Long = 256L * 1024 * 1024
+  /** The [[graft.SizePolicy]] small-input threshold (the conversion
+    * runs with AQE off below it). */
+  val AqeMinInputBytes: Long = graft.SizePolicy.SmallInputBytes
 
   /** Total size of the PBF inputs (glob-expanded); -1 if ANY path is
     * unresolvable or matches no files (treated as big → leave the session
@@ -143,20 +136,6 @@ object OsmPipeline {
       }
       if (perPath.exists(_ < 0)) -1L else perPath.sum
     } catch { case scala.util.control.NonFatal(_) => -1L }
-
-  /** True clone of the session (same SparkContext and cache, OWN copy of
-    * the session state: runtime SQL confs, temp views, registered
-    * functions all carry over) — `newSession()` would silently drop them
-    * and make conversion semantics depend on input size (e.g. a
-    * customSqlFilter using a caller-registered UDF). `cloneSession` is
-    * `private[spark]`, which compiles to a public JVM method; if the
-    * reflective call ever breaks, fall back to NOT tuning (correctness
-    * over the optimization). */
-  private def cloneSession(spark: SparkSession): Option[SparkSession] =
-    try {
-      val m = spark.getClass.getMethod("cloneSession")
-      Some(m.invoke(spark).asInstanceOf[SparkSession])
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The raw element scan with the J3 multi-extract dedup
     * (pbf_file_reader.py:1126-1139): overlapping extract files carry
@@ -176,37 +155,19 @@ object OsmPipeline {
     * `cuts.release()` once the DataFrame has been consumed. */
   def featuresWithCuts(spark0: SparkSession, pbfPaths: Seq[String],
       opts: Options = Options()): (DataFrame, ConversionCuts) = {
-    // Conversion-scoped execution tuning: a cloned session (same
-    // SparkContext, same cache, own SQLConf) turns AQE off for small
-    // inputs without mutating the caller's session or affecting anything
-    // else running in it. The returned DataFrame is bound to the clone, so
-    // every later action on it (stats pass, sort, write, count) inherits
-    // the setting.
-    val spark = {
-      val bytes = inputBytes(spark0, pbfPaths)
-      // applies whether or not the caller's session already has AQE off:
-      // the shuffle-partition sizing below matters on its own (a caller
-      // that disabled AQE for ITS small workload would otherwise run the
-      // conversion's ~12 shuffle stages at its full partition count —
-      // measured 6.1 s vs 5.0 s on monaco at 32 vs 4 partitions)
-      if (bytes >= 0 && bytes < AqeMinInputBytes) {
-        cloneSession(spark0).map { s =>
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          // without AQE's partition coalescing, size the shuffles to the
-          // input instead: ~4 MB of compressed PBF per shuffle partition
-          // (floor 4 for parallelism, never above the caller's runtime
-          // setting, which the clone carries — measured 5.4 s vs 7.9 s
-          // warm on monaco at 4 vs 32 partitions)
-          val callerParts = try
-            s.conf.get("spark.sql.shuffle.partitions", "200").toLong
-          catch { case scala.util.control.NonFatal(_) => 200L }
-          val parts = math.max(4L,
-            math.min(callerParts, bytes / (4L * 1024 * 1024) + 1))
-          s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-          s
-        }.getOrElse(spark0)
-      } else spark0
-    }
+    // Conversion-scoped execution tuning (graft.SizePolicy): a small
+    // input runs in a cloned session (same SparkContext, same cache, own
+    // SQLConf) with AQE off and input-sized shuffles, without mutating
+    // the caller's session or affecting anything else running in it.
+    // The returned DataFrame is bound to the clone, so every later action
+    // on it (stats pass, sort, write, count) inherits the setting. It
+    // applies whether or not the caller's session already has AQE off:
+    // the shuffle sizing matters on its own (a caller that disabled AQE
+    // for ITS small workload would otherwise run the conversion's ~12
+    // shuffle stages at its full partition count — measured 6.1 s vs
+    // 5.0 s on monaco at 32 vs 4 partitions).
+    val spark = graft.SizePolicy.sessionFor("OsmPipeline.featuresWithCuts",
+      spark0, inputBytes(spark0, pbfPaths))
     val cuts = new ConversionCuts()
     def cut(df: DataFrame): DataFrame = cuts.add(df)
     val elements = elementScan(spark, pbfPaths)

@@ -116,7 +116,8 @@ object PbfWriter {
 
   /** `nFiles` OVERLAPPING replicated extracts of `basePbf` under `dir`
     * — the multi-extract test/profile corpus (OsmMultiExtractSpec,
-    * DevProfile pbfmulti; ONE builder so the correctness spec and the
+    * PLANS.md "Multi-extract conversion throughput"; ONE builder so the
+    * correctness spec and the
     * timed profile cannot silently measure different workloads):
     * replica i offsets ids/refs by i·10^11 and shifts lon by 0.05·i (a
     * different bbox per replica, each self-contained; replica 0 IS the

@@ -433,7 +433,7 @@ object DocStreams {
     * `compactEvery` (amortize the rewrite over many batches, e.g.
     * hundreds) where the index loops want a small one (probe latency
     * decays per generation — see the genscale curve). Measured
-    * (`DevProfile admitgens`, PLANS.md r11): per-batch cost is FLAT
+    * (PLANS.md, "Admit-loop generation decay measured"): per-batch cost is FLAT
     * across 20 uncompacted generations, while folding every 8 batches
     * came out SLOWER — hence `compactEvery = None` stays the
     * [[admitArrivals]] default. */

@@ -6,6 +6,17 @@ package org.apache.spark.sql.graft
   * them; everything it does is public-API semantics). */
 object SessionOps {
 
+  /** True clone of `spark` (`private[sql]`): same SparkContext and
+    * cache, OWN copy of the session state — runtime SQL confs, temp
+    * views and registered functions all carry over, where
+    * `newSession()` would silently drop them (and make, e.g., a
+    * conversion's customSqlFilter using a caller-registered UDF depend
+    * on input size). Conf changes on the clone never reach `spark`. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .cloneSession()
+
   /** Re-bind `df`'s logical plan to `session` — a `cloneSession`
     * sibling sharing the SparkContext and cache but carrying its OWN
     * SQLConf: every later action on the returned frame runs under the

@@ -1,9 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.sys.process.{Process, ProcessLogger}
 
-/** Drives `DevProfile chaossoak` in a CHILD JVM (the
+/** Drives `FaultHarness chaossoak` in a CHILD JVM (the
   * [[FaultToleranceSpec]] mechanism — the retry path needs local[8,3]):
   * ALL THREE chaos axes composed in ONE run of the three concurrent
   * serving loops — task-retry fault injection on every stream, a
@@ -16,34 +15,8 @@ class ChaosSoakSpec extends AnyFunSuite {
 
   test("three serving loops under injected retries + interloper + " +
       "adversarial config land the exact clean end states") {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments
-    val addOpens = {
-      val it = scala.jdk.CollectionConverters
-        .ListHasAsScala(mx).asScala.iterator
-      val out = Seq.newBuilder[String]
-      while (it.hasNext) it.next() match {
-        case "--add-opens" if it.hasNext =>
-          out += "--add-opens" += it.next()
-        case a if a.startsWith("--add-opens=") => out += a
-        case _ =>
-      }
-      out.result()
-    }
-    // hard cap via coreutils timeout: a hung child must fail the suite
-    val cmd = Seq("timeout", "580", javaBin) ++ addOpens ++ Seq(
-      "-Xmx4g",
-      "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.DevProfile", "chaossoak", "/root/testdata/sf0.001")
-    val out = new StringBuilder
-    val log = ProcessLogger(
-      l => out.synchronized { out.append(l).append('\n'); () },
-      l => out.synchronized { out.append(l).append('\n'); () })
-    val code = Process(cmd).!(log)
-    val s = out.synchronized(out.toString)
+    val (code, s) = ChildJvm.run(580, "graft.FaultHarness", "chaossoak",
+      "/root/testdata/sf0.001")
     withClue(s.linesIterator.filter(l =>
         l.contains("CHAOSSOAK") || l.contains("Exception"))
         .mkString("child output:\n", "\n", "\n")) {

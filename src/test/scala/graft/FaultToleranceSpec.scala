@@ -1,13 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.sys.process.{Process, ProcessLogger}
 
-/** Drives `DevProfile faultinject` in a CHILD JVM: the suite's shared
-  * SparkContext runs local[N] (spark.task.maxFailures = 1 — any task
-  * failure kills the job), so the task-RETRY path that is routine on a
-  * real cluster can only be exercised by a separate context on
-  * local[8,3]. The child injects one attempt-0 task failure into each
+/** Drives `FaultHarness faultinject` in a CHILD JVM ([[ChildJvm]]): the
+  * suite's shared SparkContext runs local[N] (spark.task.maxFailures = 1
+  * — any task failure kills the job), so the task-RETRY path that is
+  * routine on a real cluster can only be exercised by a separate context
+  * on local[8,3]. The child injects one attempt-0 task failure into each
   * operator family's input (sink write, dedup shuffle, LSH banding, the
   * full lease-guarded index build/append/compact lifecycle) and asserts
   * results identical to the clean run; a check whose injection never
@@ -15,37 +14,8 @@ import scala.sys.process.{Process, ProcessLogger}
 class FaultToleranceSpec extends AnyFunSuite {
 
   test("operators are exact under injected task retries (local[8,3])") {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    // reuse this JVM's --add-opens set (build.sbt injects the JDK17 list
-    // Spark needs) instead of duplicating it here
-    val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments
-    val addOpens = {
-      val it = scala.jdk.CollectionConverters
-        .ListHasAsScala(mx).asScala.iterator
-      val out = Seq.newBuilder[String]
-      while (it.hasNext) it.next() match {
-        case "--add-opens" if it.hasNext =>
-          out += "--add-opens" += it.next()
-        case a if a.startsWith("--add-opens=") => out += a
-        case _ =>
-      }
-      out.result()
-    }
-    // hard cap via coreutils timeout: Process.! has no deadline of its
-    // own, and a hung child JVM must fail the suite, not wedge it
-    val cmd = Seq("timeout", "480", javaBin) ++ addOpens ++ Seq(
-      "-Xmx4g",
-      "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.DevProfile", "faultinject", "/root/testdata/sf0.001")
-    val out = new StringBuilder
-    val log = ProcessLogger(
-      l => out.synchronized { out.append(l).append('\n'); () },
-      l => out.synchronized { out.append(l).append('\n'); () })
-    val code = Process(cmd).!(log)
-    val s = out.synchronized(out.toString)
+    val (code, s) = ChildJvm.run(480, "graft.FaultHarness", "faultinject",
+      "/root/testdata/sf0.001")
     withClue(s.linesIterator.filter(l =>
         l.contains("FAULTINJECT") || l.contains("Exception"))
         .mkString("child output:\n", "\n", "\n")) {

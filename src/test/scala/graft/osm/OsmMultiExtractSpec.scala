@@ -47,8 +47,9 @@ class OsmMultiExtractSpec extends AnyFunSuite {
       "byte-equal the single-file conversion, WKB invariant under " +
       "opposed configs, every relation drop explained") {
     // [[graft.pbf.PbfWriter.writeOverlappingReplicas]] — the shared
-    // builder (the timed DevProfile pbfmulti profile uses the same one,
-    // so spec and profile measure the identical workload): replica 0 IS
+    // builder (the timed profile in PLANS.md "Multi-extract conversion
+    // throughput" used the same one, so spec and profile measure the
+    // identical workload): replica 0 IS
     // the original monaco; every replica sits in exactly two files, so
     // the merged scan sees each element twice and the J3 dedup must
     // drop exactly half.
