@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** GeoParquet 1.1.0 sink (S6) — Spark port of the reference's KV-metadata
@@ -239,8 +239,15 @@ object GeoParquet {
     val parted =
       if (singleOutput) indexed.coalesce(1)
       else indexed.repartitionByRange(col("_hilbert"))
-    parted.sortWithinPartitions(col("_hilbert")).drop("_hilbert")
+    parted.sortWithinPartitions(col("_hilbert") +: tieBreak(typed): _*)
+      .drop("_hilbert")
   }
+
+  /** `feature_id`, when present, orders rows with equal sort keys, so the
+    * written sequence depends on the rows only, not on the order in which
+    * the upstream plan delivers them. */
+  private def tieBreak(df: DataFrame): Seq[Column] =
+    if (df.columns.contains("feature_id")) Seq(col("feature_id")) else Nil
 
   /** Rows per STR leaf tile — the ~100k-row row-group contract
     * (pbf_file_reader.py:171-174), so one leaf ≈ one row group and the
@@ -301,13 +308,14 @@ object GeoParquet {
     val cxed = typed
       .withColumn("_cx", clampX((col("_ext._1") + col("_ext._3")) / 2))
       .withColumn("_cy", clampY((col("_ext._2") + col("_ext._4")) / 2))
+    val byCy = col("_cy") +: tieBreak(typed)
     val parted =
       if (slices == 1)
         (if (singleOutput) cxed.coalesce(1) else cxed.repartitionByRange(1, col("_cx")))
-          .sortWithinPartitions(col("_cy"))
+          .sortWithinPartitions(byCy: _*)
       else if (!singleOutput)
         cxed.repartitionByRange(slices, col("_cx"))
-          .sortWithinPartitions(col("_cy"))
+          .sortWithinPartitions(byCy: _*)
       else {
         val cuts = cxed.stat.approxQuantile("_cx",
           (1 until slices).map(_.toDouble / slices).toArray, 0.01)
@@ -316,7 +324,7 @@ object GeoParquet {
         }
         cxed.withColumn("_slice", slice)
           .coalesce(1)
-          .sortWithinPartitions(col("_slice"), col("_cy"))
+          .sortWithinPartitions(col("_slice") +: byCy: _*)
           .drop("_slice")
       }
     parted.drop("_cx", "_cy")

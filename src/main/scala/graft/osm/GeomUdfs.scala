@@ -105,6 +105,39 @@ object GeomUdfs extends Serializable {
 
   val geomIsEmpty: Array[Byte] => Boolean = b => read(b).isEmpty
 
+  /** One boundary/multipolygon relation's geometry from its way members'
+    * roles and vertex arrays, in ref order (pbf_file_reader.py:3306-3463);
+    * null when the relation yields none. Steps, in the reference's order:
+    * a null role is `outer`, and with no explicit `outer` every member is;
+    * members linemerge per role; rings under 4 points are dropped; any
+    * open ring left drops the relation; each outer loses the inners
+    * within it; the outers are unioned and normalized like
+    * [[UnionAggregator]] (fold, then `finish`); an empty union is none.
+    * Rings of other roles (e.g. `part`) only count for the open check. */
+  val relationWkb: (Seq[String], Seq[Seq[Seq[Double]]]) => Array[Byte] =
+    (roles, lines) => {
+      val named = roles.map(r => if (r == null) "outer" else r)
+      val effective = if (named.contains("outer")) named else named.map(_ => "outer")
+      val rings = effective.zip(lines).groupBy(_._1).toSeq.sortBy(_._1)
+        .flatMap { case (role, ls) =>
+          lineMergeDump(ls.map(_._2)).filter(_.size >= 4).map(role -> _)
+        }
+      if (rings.exists { case (_, r) => r.head != r.last }) null
+      else {
+        val polygons = rings.map { case (role, r) => role -> polygonWkb(r) }
+        val inners = polygons.collect { case ("inner", p) => p }
+        val union = polygons.collect { case ("outer", outer) =>
+          val holes = inners.filter(geomWithin(_, outer))
+          if (holes.isEmpty) outer else subtractHoles(outer, holes)
+        }.foldLeft(UnionAggregator.zero)(UnionAggregator.reduce)
+        if (union == null) null
+        else {
+          val g = UnionAggregator.finish(union)
+          if (geomIsEmpty(g)) null else g
+        }
+      }
+    }
+
   /** ST_MakeValid (pbf_file_reader.py:3606-3609): identity on valid input. */
   val makeValid: Array[Byte] => Array[Byte] = b => {
     val g = read(b)
@@ -140,10 +173,9 @@ object GeomUdfs extends Serializable {
   def line_wkb(c: Column): Column = udf(lineWkb).apply(c)
   def polygon_wkb(c: Column): Column = udf(polygonWkb).apply(c)
   def linemerge_dump(c: Column): Column = udf(lineMergeDump).apply(c)
-  def within(a: Column, b: Column): Column = udf(geomWithin).apply(a, b)
-  def subtract_holes(a: Column, b: Column): Column = udf(subtractHoles).apply(a, b)
   def union_wkb(c: Column): Column = udf(unionWkb).apply(c)
-  def is_empty(c: Column): Column = udf(geomIsEmpty).apply(c)
+  def relation_wkb(roles: Column, lines: Column): Column =
+    udf(relationWkb).apply(roles, lines)
   def make_valid(c: Column): Column = udf(makeValid).apply(c)
   def geometry_type(c: Column): Column = udf(geomType).apply(c)
   def as_text(c: Column): Column = udf(asText).apply(c)

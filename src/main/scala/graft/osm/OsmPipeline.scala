@@ -2,7 +2,6 @@ package graft.osm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.osm.TagFilters._
 
@@ -12,17 +11,20 @@ import graft.osm.TagFilters._
   *
   * Where the reference materializes ~20 intermediate Parquet stages and
   * manages memory with retry ladders (SURVEY §4 — not ported), this pipeline
-  * is one declarative DAG: Catalyst prunes columns into the PBF scan, the
-  * id-cascade is left_semi/left_anti joins, and the multiply-consumed cuts
-  * (per-kind views, node points, unnested refs, id closures, vertex
-  * arrays — the reference's materialized prefilter boundary) are persisted
-  * for the duration of the conversion and released through the conversion's
-  * own [[ConversionCuts]] handle ([[featuresWithCuts]]) or, for the legacy
+  * is one declarative DAG: Catalyst prunes columns into the PBF scan, each
+  * reference level (way → node, relation → way) is ONE left join plus one
+  * group-by that yields the geometry inputs and the ref-closure validity
+  * together, and each relation is assembled by one kernel call per row
+  * ([[GeomUdfs.relationWkb]]). The cuts read more than once (the per-kind
+  * views and the way vertices) are persisted for the duration of the
+  * conversion and released through the conversion's own
+  * [[ConversionCuts]] handle ([[featuresWithCuts]]) or, for the legacy
   * no-handle [[features]] overload, via [[releaseCuts]].
   *
   * Scale notes:
-  *  - node→way vertex join shuffles on node id; way groupBy shuffles on way
-  *    id — both keys are high-cardinality and skew-free (OSM ids).
+  *  - the node→way vertex join shuffles on node id; the way and relation
+  *    group-bys shuffle on way / relation id — high-cardinality,
+  *    skew-free keys (OSM ids).
   *  - geometry objects never shuffle: vertices travel as coordinate arrays,
   *    assembled geometries as WKB.
   *  - the driver never sees data (no collect anywhere in the flow).
@@ -77,19 +79,22 @@ object OsmPipeline {
     * cached plans (the reference's equivalent is each conversion deleting
     * its OWN tmp_dir parquet stages). */
   final class ConversionCuts private[osm] () {
-    private val dfs = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    private val dfs = new java.util.concurrent.ConcurrentLinkedDeque[DataFrame]()
     private[osm] def add(df: DataFrame): DataFrame = {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK)
       dfs.add(p)
       p
     }
-    /** Unpersist every cut this conversion created. Idempotent; safe once
-      * nothing is still consuming the conversion's DataFrame. */
+    /** Unpersist every cut this conversion created, newest first.
+      * Idempotent; safe once nothing is still consuming the conversion's
+      * DataFrame. The order matters: unpersisting a cut makes Spark
+      * re-plan every not-yet-loaded cut built on it, so oldest-first
+      * re-plans the whole cascade (seconds on a city-sized input). */
     def release(): Unit = {
-      var df = dfs.poll()
+      var df = dfs.pollLast()
       while (df != null) {
         try df.unpersist(blocking = false) catch { case scala.util.control.NonFatal(_) => () }
-        df = dfs.poll()
+        df = dfs.pollLast()
       }
     }
   }
@@ -163,7 +168,7 @@ object OsmPipeline {
     // on it (stats pass, sort, write, count) inherits the setting. It
     // applies whether or not the caller's session already has AQE off:
     // the shuffle sizing matters on its own (a caller that disabled AQE
-    // for ITS small workload would otherwise run the conversion's ~12
+    // for ITS small workload would otherwise run the conversion's
     // shuffle stages at its full partition count — measured 6.1 s vs
     // 5.0 s on monaco at 32 vs 4 partitions).
     val spark = graft.SizePolicy.sessionFor("OsmPipeline.featuresWithCuts",
@@ -204,173 +209,98 @@ object OsmPipeline {
       tagsNonEmpty && tagC && customC && idsC
     }
 
-    // --- geometry filter: bbox pushdown + exact test (F7+F8) ---
-    // The slim id/x/y projection of every node is the pipeline's most
-    // reused cut (ref-closure, way assembly, node features, geometry
-    // filter) — the reference materializes it as its nodes_valid_with_tags
-    // parquet (pbf_file_reader.py:1546-1573); here it's a persisted
-    // 20-byte-per-node columnar cut.
-    val nodePointsAll = cut(nodes.select(col("id"),
-      round(col("lon"), 7).as("x"), round(col("lat"), 7).as("y")))
-    val intersectingNodeIds: Option[DataFrame] = opts.geometryWkt.map { wkt =>
+    // --- geometry filter: bbox prefilter + exact test (F7+F8) ---
+    // Node coordinates at the reference's 7-decimal precision. With a
+    // geometry filter, `inGeometry` marks a point inside it: nodes test
+    // their own point, and a way or relation is kept when any of its
+    // vertices is marked (the reference's intersect cascade,
+    // pbf_file_reader.py:2170-2428, carried as a column, not joins).
+    val x = round(col("lon"), 7)
+    val y = round(col("lat"), 7)
+    val inGeometry: Option[Column] = opts.geometryWkt.map { wkt =>
       val env = new org.locationtech.jts.io.WKTReader().read(wkt).getEnvelopeInternal
       val pig = new PointInGeom(wkt)
-      val exact = udf((x: Double, y: Double) => pig.contains(x, y))
-      nodePointsAll
-        .filter(col("x").between(env.getMinX, env.getMaxX) &&
-          col("y").between(env.getMinY, env.getMaxY)) // cheap prefilter first
-        .filter(exact(col("x"), col("y")))
-        .select(col("id"))
+      val exact = udf((lon: Double, lat: Double) => pig.contains(lon, lat))
+      x.between(env.getMinX, env.getMaxX) &&
+        y.between(env.getMinY, env.getMaxY) && // cheap prefilter first
+        exact(x, y)
     }
+    val hit = inGeometry.map(_ => col("hit")).toSeq
+    def anyHit(df: DataFrame): DataFrame =
+      if (inGeometry.isEmpty) df else df.filter(col("hit"))
 
-    // --- unnested refs (G1, pbf_file_reader.py:2238-2271) ---
-    // Both unnested-ref cuts feed 3-4 consumers (validity closure,
-    // intersection cascade, assembly) — persisted like the reference's
-    // ways_required_ids / relations_ids stages (128 MB-file id stages).
-    val wayRefs = cut(ways.select(col("id"),
-      posexplode(col("refs")).as(Seq("ref_idx", "ref"))))
-    val relRefs = cut(relations.select(col("id"),
-      posexplode(arrays_zip(col("refs"), col("ref_types"), col("ref_roles")))
-        .as(Seq("ref_idx", "m")))
-      .select(col("id"), col("ref_idx"), col("m.refs").as("ref"),
-        col("m.ref_types").as("ref_type"), col("m.ref_roles").as("ref_role"))
-      .filter(col("ref_type") === "way"))
-
-    // --- ref-closure validity (J2, pbf_file_reader.py:2430-2476) ---
-    val nodeIds = nodePointsAll.select(col("id").as("ref"))
-    val invalidWayIds = wayRefs.join(nodeIds, Seq("ref"), "left_anti")
-      .select(col("id")).distinct()
-    val validWayIds = cut(ways.select(col("id"))
-      .join(invalidWayIds, Seq("id"), "left_anti")) // 3 consumers, ids only
-    val invalidRelIds = relRefs
-      .join(validWayIds.withColumnRenamed("id", "ref"), Seq("ref"), "left_anti")
-      .select(col("id")).distinct()
-    val validRelIds = relations.select(col("id"))
-      .join(invalidRelIds, Seq("id"), "left_anti")
-
-    // --- filtered (feature) id sets, with geometry intersection ---
-    val nodesFiltered0 = nodes.filter(matchClause(nodes)).select(col("id"), col("tags"))
-    val nodesFiltered = intersectingNodeIds match {
-      case Some(ids) => nodesFiltered0.join(ids, Seq("id"), "left_semi")
-      case None => nodesFiltered0
-    }
-    // Intersection cascade only exists when a geometry filter does — with
-    // None these semi joins would be full-identity (every id passes) yet
-    // still shuffle both sides; the reference's no-filter fast path skips
-    // the stages entirely (pbf_file_reader.py:2170-2428), and so do we.
-    val waysIntersected: Option[DataFrame] = intersectingNodeIds.map { ids =>
-      wayRefs.join(ids.withColumnRenamed("id", "ref"), Seq("ref"), "left_semi")
-        .select(col("id")).distinct()
-    }
-    val waysFiltered0 = ways.filter(matchClause(ways))
-      .select(col("id"), col("tags"))
-    val waysFiltered = waysIntersected.fold(waysFiltered0)(ids =>
-        waysFiltered0.join(ids, Seq("id"), "left_semi"))
-      .join(validWayIds, Seq("id"), "left_semi")
-    val relsIntersected: Option[DataFrame] = waysIntersected.map { wids =>
-      relRefs.join(wids.withColumnRenamed("id", "ref"),
-        Seq("ref"), "left_semi").select(col("id")).distinct()
-    }
-    val relsFiltered0 = relations.filter(matchClause(relations))
-      .select(col("id"), col("tags"))
-    val relsFiltered = cut(relsIntersected.fold(relsFiltered0)(ids =>
-        relsFiltered0.join(ids, Seq("id"), "left_semi"))
-      .join(validRelIds, Seq("id"), "left_semi")) // member cascade + output join
-
-    // --- required way set: members of kept relations (J1 cascade) ---
-    val requiredWayIds = relRefs
-      .join(relsFiltered.select(col("id")), Seq("id"), "left_semi")
-      .select(col("ref").as("id")).distinct()
-      .join(validWayIds, Seq("id"), "left_semi")
-
-    // --- way vertex assembly (A1, pbf_file_reader.py:3162-3198) ---
-    val waysToBuild = waysFiltered.select(col("id"))
-      .union(requiredWayIds).distinct()
-    val wayCoords = cut(wayRefs
-      .join(waysToBuild, Seq("id"), "left_semi")
-      .join(nodePointsAll.withColumnRenamed("id", "ref"), Seq("ref"))
+    // --- way vertices + ref closure (A1+J2, pbf_file_reader.py:2430-2476,
+    // 3162-3198) ---
+    // One left join of every way ref to the node points, grouped by way:
+    // the vertex array in ref order, and `valid` iff no ref is missing.
+    // Persisted: way features and relation members both read it.
+    val nodePoints = nodes.select(Seq(col("id").as("ref"), x.as("x"),
+      y.as("y")) ++ inGeometry.map(_.as("hit")): _*)
+    val wayVertices = cut(ways
+      .select(col("id"), posexplode(col("refs")).as(Seq("ref_idx", "ref")))
+      .join(nodePoints, Seq("ref"), "left")
       .groupBy(col("id"))
-      .agg(transform(
-        sort_array(collect_list(struct(col("ref_idx"), col("x"), col("y")))),
-        p => array(p.getField("x"), p.getField("y")))
-        .as("coords"))) // reused by ways + relations
+      .agg((count(col("x")) === count(lit(1))).as("valid"),
+        transform(
+          sort_array(collect_list(struct(col("ref_idx"), col("x"), col("y")))),
+          p => array(p.getField("x"), p.getField("y"))).as("coords") +:
+        hit.map(max(_).as("hit")): _*))
+    val validWays = wayVertices.filter(col("valid"))
 
-    // --- node features (pbf_file_reader.py:2850-2871) ---
+    // --- features per kind: user filters first, then geometry ---
     val strippedNonEmpty = size(stripMetadataTags(col("tags"))) > 0
+    def kept(df: DataFrame): DataFrame =
+      df.filter(matchClause(df) && strippedNonEmpty)
     val outTags: Column =
       if (opts.keepAllTags) col("tags") else stripMetadataTags(col("tags"))
-    val nodeFeatures = nodesFiltered
-      .filter(strippedNonEmpty)
-      .join(nodePointsAll, Seq("id"))
-      .select(concat(lit("node/"), col("id")).as("feature_id"),
-        outTags.as("tags"),
-        GeomUdfs.point_wkb(col("x"), col("y")).as("geometry"))
+    // A geometry UDF's null (no geometry) drops its row through a
+    // generator: a null filter would be pushed below the projection and
+    // run the UDF twice per row.
+    def orDrop(geometry: Column): Column =
+      explode(filter(array(geometry), _.isNotNull)).as("geometry")
 
-    // --- way features: polygon-vs-linestring (pbf_file_reader.py:3200-3282) ---
-    val wayFeatures = waysFiltered
-      .filter(strippedNonEmpty)
-      .withColumn("raw_tags", col("tags"))
-      .join(wayCoords, Seq("id"))
-      .withColumn("is_polygon", WayPolygonConfig.isPolygon(
-        col("raw_tags"), isClosed(col("coords")), nPointsDedup(col("coords"))))
+    // node features (pbf_file_reader.py:2850-2871)
+    val nodeFeatures = kept(nodes)
+      .filter(inGeometry.getOrElse(lit(true)))
+      .select(concat(lit("node/"), col("id")).as("feature_id"),
+        outTags.as("tags"), GeomUdfs.point_wkb(x, y).as("geometry"))
+
+    // way features: polygon-vs-linestring on the RAW tags
+    // (pbf_file_reader.py:3200-3282)
+    val wayFeatures = kept(ways).select(col("id"), col("tags"))
+      .join(anyHit(validWays), Seq("id"))
       .select(concat(lit("way/"), col("id")).as("feature_id"),
         outTags.as("tags"),
-        when(col("is_polygon"), GeomUdfs.polygon_wkb(col("coords")))
-          .otherwise(GeomUdfs.line_wkb(col("coords"))).as("geometry"))
-      .filter(col("geometry").isNotNull)
+        orDrop(when(WayPolygonConfig.isPolygon(col("tags"),
+            isClosed(col("coords")), nPointsDedup(col("coords"))),
+          GeomUdfs.polygon_wkb(col("coords")))
+          .otherwise(GeomUdfs.line_wkb(col("coords")))))
 
-    // --- relation assembly (pbf_file_reader.py:3306-3463) ---
-    val memberLines = relRefs
-      .join(relsFiltered.select(col("id")), Seq("id"), "left_semi")
-      .join(wayCoords.withColumnRenamed("id", "ref"), Seq("ref"))
-      .select(col("id"), coalesce(col("ref_role"), lit("outer")).as("ref_role"),
-        col("coords"))
-    val anyOuter = memberLines.groupBy(col("id"))
-      .agg(max(col("ref_role") === "outer").as("any_outer"))
-    val rings = memberLines
-      .join(anyOuter, Seq("id"))
-      .withColumn("role", when(col("any_outer"), col("ref_role")).otherwise(lit("outer")))
-      .groupBy(col("id"), col("role"))
-      .agg(GeomUdfs.linemerge_dump(collect_list(col("coords"))).as("merged"))
-      .select(col("id"), col("role"), explode(col("merged")).as("ring"))
-      .filter(nPointsDedup(col("ring")) >= 4)
-      .withColumn("geometry_id", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("role"), size(col("ring")),
-          element_at(col("ring"), 1))))
-    val validRingRels = rings.groupBy(col("id"))
-      .agg(min(isClosed(col("ring"))).as("all_closed"))
-      .filter(col("all_closed")).select(col("id"))
-    val validRings = cut(rings.join(validRingRels, Seq("id"), "left_semi")
-      .withColumn("polygon", GeomUdfs.polygon_wkb(col("ring")))
-      .filter(col("polygon").isNotNull)) // reused 3× below
-    val inner = validRings.filter(col("role") === "inner")
-      .select(col("id"), col("polygon").as("inner_poly"))
-    // ref_role = 'outer' exactly (pbf_file_reader.py:3323): members with
-    // non-standard roles (e.g. "part") are excluded from BOTH inner and
-    // outer sets, matching the reference.
-    val outer = validRings.filter(col("role") === "outer")
-      .select(col("id"), col("geometry_id"), col("polygon"))
-    val outerWithHoles = outer.join(inner, Seq("id"))
-      .filter(GeomUdfs.within(col("inner_poly"), col("polygon")))
-      .groupBy(col("id"), col("geometry_id"))
-      .agg(GeomUdfs.subtract_holes(first(col("polygon")),
-        collect_list(col("inner_poly"))).as("geometry"))
-    val outerWithoutHoles = outer
-      .join(outerWithHoles.select(col("id"), col("geometry_id")),
-        Seq("id", "geometry_id"), "left_anti")
-      .select(col("id"), col("geometry_id"), col("polygon").as("geometry"))
-    val relGeoms = outerWithHoles.select(col("id"), col("geometry"))
-      .unionByName(outerWithoutHoles.select(col("id"), col("geometry")))
+    // relation features (pbf_file_reader.py:3306-3463): the kept
+    // relations' way members left-joined to the valid ways and grouped by
+    // relation — `valid` iff every member way is valid — then one
+    // assembly kernel per relation row (GeomUdfs.relationWkb)
+    val rels = kept(relations)
+    val relGeoms = rels
+      .select(col("id"), posexplode(arrays_zip(col("refs"), col("ref_types"),
+        col("ref_roles"))).as(Seq("ref_idx", "m")))
+      .filter(col("m.ref_types") === "way")
+      .select(col("id"), col("ref_idx"), col("m.refs").as("ref"),
+        col("m.ref_roles").as("role"))
+      .join(validWays.select(Seq(col("id").as("ref"), col("coords")) ++ hit: _*),
+        Seq("ref"), "left")
       .groupBy(col("id"))
-      // typed Aggregator: unions inside partial-agg buffers (map-side
-      // combine), not via a collected list — bounded per-group memory
-      .agg(UnionAggregator.union_agg(col("geometry")).as("geometry"))
-      .filter(!GeomUdfs.is_empty(col("geometry")))
-    val relFeatures = relsFiltered
-      .filter(strippedNonEmpty)
-      .join(relGeoms, Seq("id"))
+      .agg((count(col("coords")) === count(lit(1))).as("valid"),
+        sort_array(collect_list(struct(col("ref_idx"), col("role"),
+          col("coords")))).as("members") +:
+        hit.map(max(_).as("hit")): _*)
+      .filter(col("valid"))
+    val relFeatures = rels.select(col("id"), col("tags"))
+      .join(anyHit(relGeoms), Seq("id"))
       .select(concat(lit("relation/"), col("id")).as("feature_id"),
-        outTags.as("tags"), col("geometry"))
+        outTags.as("tags"),
+        orDrop(GeomUdfs.relation_wkb(transform(col("members"), _.getField("role")),
+          transform(col("members"), _.getField("coords")))))
 
     // --- concatenate + ST_MakeValid (pbf_file_reader.py:3606-3669) ---
     (nodeFeatures.unionByName(wayFeatures).unionByName(relFeatures)

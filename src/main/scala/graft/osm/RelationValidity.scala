@@ -41,8 +41,10 @@ object RelationValidity {
     *                    only ever classifies features GDAL emitted —
     *                    extract-boundary-clipped relations never reach
     *                    it; the conversion's ref-closure stage
-    *                    (pbf_file_reader.py:2430-2476, ported at
-    *                    OsmPipeline J2) drops them, so a self-check over
+    *                    (pbf_file_reader.py:2430-2476, ported as the
+    *                    `valid` column of OsmPipeline's way-vertex and
+    *                    relation-member group-bys) drops them, so a
+    *                    self-check over
     *                    ALL candidates must name that class explicitly
     *                    (monaco drops 1369191 and 5197022 this way). */
   def classify(spark: SparkSession, pbfPaths: Seq[String]): DataFrame = {

@@ -5,28 +5,24 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.locationtech.jts.geom.Geometry
 import org.locationtech.jts.io.{WKBReader, WKBWriter}
 
-/** ST_Union_Agg as a typed Aggregator (SURVEY §2.12 — the one genuine
-  * custom aggregate the reference needs; pbf_file_reader.py:3337,3386-3389).
+/** ST_Union_Agg (SURVEY §2.12; pbf_file_reader.py:3337,3386-3389).
   *
-  * Unlike collect_list + union-UDF, this unions incrementally inside the
-  * partial-aggregation buffers (map-side combine), so per-group memory is
-  * one geometry, not the whole list — the property that matters when a
-  * group has millions of members at 100 TB.
+  * The conversion does not run this as an aggregate: it collects each
+  * relation's members into one row and [[GeomUdfs.relationWkb]] calls
+  * `reduce` (a fold over the relation's outer polygons, in ref order)
+  * and then `finish` as plain functions. The Aggregator form
+  * (`union_agg`, unioning inside partial-aggregation buffers) has no
+  * pipeline caller; its specs still exercise it.
   *
   * `finish` NORMALIZES the union (JTS canonical form: component order,
-  * ring start point, orientation). Incremental union builds the result
-  * in ARRIVAL order, and arrival order is partition-layout-dependent —
-  * the r14 64-extract scale-up caught exactly this: a multi-part
-  * relation's MultiPolygon carried its components in different orders
-  * under opposed shuffle configs (equal point sets, different WKB).
-  * Normalization makes the OUTPUT canonical whatever order the partials
-  * merged in. For disjoint parts (the OSM relation shape) the union
-  * passes coordinates through exactly, so the normalized result is
-  * bit-reproducible under any partitioning; genuinely overlapping
-  * float-coordinate inputs can still drift at the ulp level with merge
-  * order — inherent to incremental float union (the alternative,
-  * buffering every member for a sorted one-shot union, forfeits the
-  * bounded-memory map-side combine this aggregator exists for). */
+  * ring start point, orientation), so the output does not depend on the
+  * order the parts were unioned in — as an aggregate that order is the
+  * partition layout's arrival order, which differs between shuffle
+  * configs (equal point sets, different WKB). For disjoint parts (the
+  * OSM relation shape) the union passes coordinates through exactly, so
+  * the normalized result is bit-reproducible; overlapping
+  * float-coordinate inputs can still drift at the ulp level with union
+  * order. */
 object UnionAggregator extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
 
   private def read(b: Array[Byte]): Geometry = new WKBReader().read(b)

@@ -238,4 +238,28 @@ class GeoParquetSpec extends AnyFunSuite {
     val back = spark.read.parquet(out)
     assert(back.head().getString(2).startsWith("POINT"))
   }
+
+  test("equal sort keys are written in feature_id order, whatever the " +
+      "upstream partitioning") {
+    val s = spark
+    import s.implicits._
+    // 60 points on 4 positions: every sort key is shared by 15 rows
+    val rows = new scala.util.Random(7).shuffle((0 until 60).map { i =>
+      (f"node/$i%02d", Map("k" -> "v"), GeomUdfs.pointWkb(i % 4, i % 4))
+    })
+    val df = rows.toDF("feature_id", "tags", "geometry")
+    for (algorithm <- Seq("str", "hilbert")) {
+      val written = Seq(1, 7).map { parts =>
+        val out = java.nio.file.Files.createTempDirectory("gpq").toString +
+          s"/order$parts"
+        GeoParquet.write(df.repartition(parts), out, sortSpatially = true,
+          sortAlgorithm = algorithm)
+        spark.read.parquet(out).select("feature_id").collect()
+          .map(_.getString(0)).toSeq
+      }
+      assert(written(0) == written(1), algorithm)
+      assert(written(0).grouped(15).forall(g => g == g.sorted), algorithm)
+    }
+  }
 }
+
