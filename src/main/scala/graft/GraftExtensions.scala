@@ -1,126 +1,30 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
-import graft.osm.{GeomUdfs, HilbertIndexExpr}
+import graft.functions.NativeFunctions
+import graft.osm.GeomUdfs
 
 /** Session-extension entry point: lets a cluster opt into graft's native
   * expressions at session build time with
   * `--conf spark.sql.extensions=graft.GraftExtensions` — no code changes
-  * in the consuming application. Injects the codegen'd
-  * `hilbert_index(x, y, xmin, ymin, xmax, ymax)` into the function
-  * registry (catalog-level, visible to pure-SQL users). */
+  * in the consuming application. Injects every function of
+  * [[graft.functions.NativeFunctions]] (the table [[Graft.setup]] also
+  * registers from) into the session's function registry, so pure-SQL
+  * users see the same kernels, with the same argument casts, on either
+  * route. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("hilbert_index"),
-      new ExpressionInfo(classOf[HilbertIndexExpr].getName, "hilbert_index"),
-      (exprs: Seq[Expression]) =>
-        HilbertIndexExpr(exprs.map(Cast(_, DoubleType)).toIndexedSeq)))
-    ext.injectFunction((
-      FunctionIdentifier("md5_prefix28"),
-      new ExpressionInfo(classOf[graft.functions.Md5Prefix28Expr].getName,
-        "md5_prefix28"),
-      (exprs: Seq[Expression]) => graft.functions.Md5Prefix28Expr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[graft.functions.VecDotExpr].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => graft.functions.VecDotExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[graft.functions.VecNormExpr].getName, "vec_norm"),
-      (exprs: Seq[Expression]) => graft.functions.VecNormExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("vec_cosine"),
-      new ExpressionInfo(classOf[graft.functions.VecCosineExpr].getName, "vec_cosine"),
-      (exprs: Seq[Expression]) => graft.functions.VecCosineExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("split_words"),
-      new ExpressionInfo(classOf[graft.functions.SplitWordsExpr].getName, "split_words"),
-      (exprs: Seq[Expression]) => graft.functions.SplitWordsExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[graft.functions.WordNgramsExpr].getName, "word_ngrams"),
-      (exprs: Seq[Expression]) => graft.functions.WordNgramsExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("term_tfs"),
-      new ExpressionInfo(classOf[graft.functions.TermTfsExpr].getName, "term_tfs"),
-      (exprs: Seq[Expression]) => graft.functions.TermTfsExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("merge_pair"),
-      new ExpressionInfo(classOf[graft.functions.MergePairExpr].getName, "merge_pair"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.MergePairExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_hashes"),
-      new ExpressionInfo(classOf[graft.functions.NgramHashesExpr].getName,
-        "ngram_hashes"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.NgramHashesExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("apply_bpe_table"),
-      new ExpressionInfo(classOf[graft.functions.ApplyBpeTableExpr].getName,
-        "apply_bpe_table"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.ApplyBpeTableExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("char_ngrams"),
-      new ExpressionInfo(classOf[graft.functions.CharNgramsExpr].getName,
-        "char_ngrams"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.CharNgramsExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("char_gram_hashes"),
-      new ExpressionInfo(classOf[graft.functions.CharGramHashesExpr].getName,
-        "char_gram_hashes"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.CharGramHashesExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("wordpiece"),
-      new ExpressionInfo(classOf[graft.functions.WordpieceExpr].getName,
-        "wordpiece"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.WordpieceExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("wordpiece_ids"),
-      new ExpressionInfo(classOf[graft.functions.WordpieceIdsExpr].getName,
-        "wordpiece_ids"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.WordpieceIdsExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("wordpiece_doc_ids"),
-      new ExpressionInfo(classOf[graft.functions.WordpieceDocIdsExpr].getName,
-        "wordpiece_doc_ids"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.WordpieceDocIdsExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("viterbi_segment"),
-      new ExpressionInfo(classOf[graft.functions.ViterbiSegmentExpr].getName,
-        "viterbi_segment"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.ViterbiSegmentExpr(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("adjacent_pairs"),
-      new ExpressionInfo(classOf[graft.functions.AdjacentPairsExpr].getName,
-        "adjacent_pairs"),
-      (exprs: Seq[Expression]) =>
-        graft.functions.AdjacentPairsExpr(exprs.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    NativeFunctions.inject(ext)
 }
 
 /** One-call runtime setup for an already-built session: registers the
-  * st_* SQL UDF surface plus hilbert_index (the temp-function route, for
-  * sessions built without [[GraftExtensions]]). */
+  * native functions of [[graft.functions.NativeFunctions]] (each name the
+  * session does not already resolve, so it is safe on a session built
+  * with [[GraftExtensions]]) plus the st_* SQL UDF surface. */
 object Graft {
   def setup(spark: SparkSession): SparkSession = {
+    NativeFunctions.register(spark)
     GeomUdfs.register(spark)
-    HilbertIndexExpr.register(spark)
-    graft.functions.Md5Prefix28Expr.register(spark)
-    graft.functions.VectorExprs.register(spark)
-    graft.functions.TextExprs.register(spark)
-    graft.functions.BloomExprs.register(spark)
     spark
   }
 }

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Engine-portable string hashes (SURVEY §2 beyond-reference similarity
@@ -55,18 +54,4 @@ case class Md5Prefix28Expr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object Md5Prefix28Expr {
-  /** Register `md5_prefix28(s)` for the SQL / `expr` / `call_function`
-    * surfaces of the session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    // existence-guarded: register() runs on every operator call, and an
-    // unguarded replace invalidates analysis state hot paths re-derive
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("md5_prefix28")))
-      reg.createOrReplaceTempFunction("md5_prefix28",
-        exprs => Md5Prefix28Expr(Cast(exprs.head, StringType)), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -496,43 +495,6 @@ object TextKernels {
       }
       new GenericArrayData(out)
     }
-  }
-}
-
-object TextExprs {
-  /** Register split_words / word_ngrams / merge_pair on the session
-    * (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    // Guard PER FUNCTION, not on one sentinel name: a session built with
-    // GraftExtensions already carries merge_pair, and a single-sentinel
-    // guard would then skip adjacent_pairs/ngram_hashes entirely. The
-    // existence check (vs replacing unconditionally) matters for
-    // throughput: register() runs on every operator call, and replacing
-    // a function invalidates analysis state a hot loop then re-derives.
-    val reg = spark.sessionState.functionRegistry
-    def reg1(name: String,
-        b: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "built-in")
-    reg1("split_words", exprs => SplitWordsExpr(exprs.head))
-    reg1("term_tfs", exprs => TermTfsExpr(exprs(0), exprs(1)))
-    reg1("word_ngrams", exprs => WordNgramsExpr(exprs(0), exprs(1)))
-    reg1("ngram_hashes", exprs => NgramHashesExpr(exprs(0), exprs(1)))
-    reg1("merge_pair", exprs => MergePairExpr(exprs(0), exprs(1), exprs(2)))
-    reg1("adjacent_pairs", exprs => AdjacentPairsExpr(exprs.head))
-    reg1("apply_bpe_table",
-      exprs => ApplyBpeTableExpr(exprs(0), exprs(1), exprs(2)))
-    reg1("char_ngrams", exprs => CharNgramsExpr(exprs(0), exprs(1)))
-    reg1("char_gram_hashes",
-      exprs => CharGramHashesExpr(exprs(0), exprs(1), exprs(2)))
-    reg1("wordpiece", exprs => WordpieceExpr(exprs(0), exprs(1)))
-    reg1("wordpiece_ids", exprs => WordpieceIdsExpr(exprs(0), exprs(1)))
-    reg1("wordpiece_doc_ids",
-      exprs => WordpieceDocIdsExpr(exprs(0), exprs(1)))
-    reg1("viterbi_segment",
-      exprs => ViterbiSegmentExpr(exprs(0), exprs(1), exprs(2)))
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -261,30 +260,6 @@ object VectorExprs {
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           s"$side must be array<float|double>, got ${other.simpleString}")
     }
-
-  /** Register vec_dot / vec_norm / vec_cosine on the session's function
-    * registry (idempotent; temp-function route — see
-    * [[graft.GraftExtensions]] for the catalog-extension route). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"))) {
-      reg.createOrReplaceTempFunction("vec_dot",
-        exprs => VecDotExpr(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("vec_norm",
-        exprs => VecNormExpr(exprs.head), "built-in")
-      reg.createOrReplaceTempFunction("vec_cosine",
-        exprs => VecCosineExpr(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("vec_nearest_code",
-        exprs => VecNearestCodeExpr(exprs(0), exprs(1), exprs(2)),
-        "built-in")
-      reg.createOrReplaceTempFunction("vec_nearest_cell",
-        exprs => VecNearestCellExpr(exprs(0), exprs(1), exprs(2),
-          exprs(3)), "built-in")
-      reg.createOrReplaceTempFunction("vec_l2normalize",
-        exprs => VecL2NormalizeExpr(exprs.head), "built-in")
-    }
-  }
 }
 
 /** [[VectorKernels.nearestCell]] as a codegen expression:

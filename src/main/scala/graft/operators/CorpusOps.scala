@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions
+import graft.functions.NativeFunctions._
 
 /** DataFrame-generic corpus-hygiene API — the surface a library user calls
   * on their OWN tables. The `SparkEntry` gate queries bind these same DAGs
@@ -36,16 +38,13 @@ object CorpusOps {
   def shingleHashes(docs: DataFrame, idCol: String, textCol: String,
       ngram: Int = 3): DataFrame = {
     require(ngram >= 1, s"ngram must be >= 1, got $ngram")
-    val s = docs.sparkSession
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("_g_text"))
       .repartition(col("doc_id"))
       .select(col("doc_id"),
-        explode(call_function("word_ngrams", col("_g_text"), lit(ngram)))
+        explode(wordNgrams(col("_g_text"), lit(ngram)))
           .as("_g_sh"))
       .select(col("doc_id"),
-        call_function("md5_prefix28", col("_g_sh")).as("shash"))
+        md5Prefix28(col("_g_sh")).as("shash"))
   }
 
   /** MinHash signature per document: (doc_id, sig ARRAY<LONG>[numPerms]).
@@ -125,9 +124,6 @@ object CorpusOps {
     val Bits = 16
     require(maxHamming >= 0 && maxHamming < Bits,
       s"maxHamming must be in [0, $Bits), got $maxHamming")
-    val s = docs.sparkSession
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     val bitAggs = (0 until Bits).map { b =>
       sum(when(shiftright(col("_g_wh"), b).bitwiseAND(1) === 1, 1)
         .otherwise(-1)).as(s"_g_b$b")
@@ -138,8 +134,8 @@ object CorpusOps {
     val sh = docs
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("_g_text"))
       .select(col("doc_id"),
-        explode(call_function("split_words", col("_g_text"))).as("_g_w"))
-      .select(col("doc_id"), call_function("md5_prefix28", col("_g_w")).as("_g_wh"))
+        explode(splitWords(col("_g_text"))).as("_g_w"))
+      .select(col("doc_id"), md5Prefix28(col("_g_w")).as("_g_wh"))
       .groupBy(col("doc_id")).agg(bitAggs.head, bitAggs.tail: _*)
       .select(col("doc_id"), fingerprint.as("_g_sh"))
     // maxHamming+1 bands; the last band absorbs the remainder bits
@@ -167,16 +163,13 @@ object CorpusOps {
   /** Within-doc repetition stats (the d11 Gopher-rules shape):
     * (idCol, n_words, n_distinct, top_word_share, repetitive). */
   def repetitionStats(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     // internal names are _g_-prefixed so user columns named "w"/"c"/...
     // can never make a reference ambiguous; the id keeps its caller name
     docs.select(col(idCol).cast("long").as(idCol), col(textCol).as("_g_text"))
       .repartition(col(idCol))
       .select(col(idCol),
-        explode(call_function("split_words", col("_g_text"))).as("_g_w"))
-      .select(col(idCol), call_function("md5_prefix28", col("_g_w")).as("_g_wh"))
+        explode(splitWords(col("_g_text"))).as("_g_w"))
+      .select(col(idCol), md5Prefix28(col("_g_w")).as("_g_wh"))
       .groupBy(col(idCol), col("_g_wh")).agg(count(lit(1)).as("_g_c"))
       .groupBy(col(idCol))
       .agg(sum(col("_g_c")).as("n_words"), count(lit(1)).as("n_distinct"),
@@ -196,17 +189,14 @@ object CorpusOps {
     * survivors' gram strings reach the frequency count. */
   def boilerplateNgrams(docs: DataFrame, idCol: String, textCol: String,
       topK: Int = 20): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("_g_text"))
       .repartition(col("doc_id"))
       .select(col("doc_id"),
-        explode(call_function("word_ngrams", col("_g_text"), lit(3))).as("ngram"))
+        explode(wordNgrams(col("_g_text"), lit(3))).as("ngram"))
       // doc-local dedup keyed on the hash (map-local behind the
       // repartition), carrying one representative string per group
       .groupBy(col("doc_id"),
-        call_function("md5_prefix28", col("ngram")).as("_g_nh"))
+        md5Prefix28(col("ngram")).as("_g_nh"))
       .agg(first(col("ngram")).as("ngram"))
       .groupBy(col("ngram")).agg(count(lit(1)).as("n_docs"))
       .orderBy(col("n_docs").desc, col("ngram"))
@@ -264,12 +254,11 @@ object CorpusOps {
   def tfidfKeywords(docs: DataFrame, idCol: String, textCol: String,
       topK: Int = 3): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    graft.functions.TextExprs.register(docs.sparkSession)
     val tf = docs
       .select(col(idCol).cast("long").as(idCol), col(textCol).as("_g_text"))
       .repartition(col(idCol))
       .select(col(idCol),
-        explode(call_function("split_words", col("_g_text"))).as("term"))
+        explode(splitWords(col("_g_text"))).as("term"))
       .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("_g_tf"))
     tfidfFromTf(tf, idCol, docs.agg(count(lit(1)).as("_g_n")), topK)
   }
@@ -535,9 +524,6 @@ object CorpusOps {
     require(k >= 4, s"gram length k must be >= 4, got $k")
     require(modP >= 1 && maxDocFreq >= 2 && minShared >= 1,
       s"bad parameters (modP=$modP, maxDocFreq=$maxDocFreq, minShared=$minShared)")
-    val s = docs.sparkSession
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     val boundedSet = udaf(new graft.functions.BoundedCollectSet(maxDocFreq),
       org.apache.spark.sql.Encoders.scalaLong)
     // one kernel call emits each doc's SURVIVING gram hashes (the
@@ -552,7 +538,7 @@ object CorpusOps {
     val buckets0 = spread(docs, col(idCol))
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("_g_text"))
       .filter(length(col("_g_text")) >= k)
-      .select(col("doc_id"), explode(call_function("char_gram_hashes",
+      .select(col("doc_id"), explode(charGramHashes(
         col("_g_text"), lit(k), lit(modP))).as("h"))
       .groupBy(col("h")).agg(boundedSet(col("doc_id")).as("_g_ds"))
       .filter(col("_g_ds").isNotNull && size(col("_g_ds")) >= 2)
@@ -576,12 +562,10 @@ object CorpusOps {
   def decontaminate(corpus: DataFrame, corpusId: String, corpusText: String,
       benchmark: DataFrame, benchmarkText: String,
       ngram: Int = 3): DataFrame = {
-    graft.functions.Md5Prefix28Expr.register(corpus.sparkSession)
-    graft.functions.TextExprs.register(corpus.sparkSession)
     val benchGrams = benchmark
-      .select(explode(call_function("word_ngrams",
+      .select(explode(wordNgrams(
         col(benchmarkText), lit(ngram))).as("_g_sh"))
-      .select(call_function("md5_prefix28", col("_g_sh")).as("shash"))
+      .select(md5Prefix28(col("_g_sh")).as("shash"))
       .distinct()
     val contaminated = shingleHashes(corpus, corpusId, corpusText, ngram)
       .join(broadcast(benchGrams), Seq("shash"), "left_semi")
@@ -614,8 +598,6 @@ object CorpusOps {
   def dupPassages(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 16): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val s = docs.sparkSession
-    graft.functions.TextExprs.register(s)
     // the gram hash is only a dup-decision key (every gram participates —
     // no hash-derived sampling the oracle would have to replay), so any
     // collision-free hash yields the same spans: the one-pass rolling
@@ -629,8 +611,8 @@ object CorpusOps {
     val grams = spread(docs, col(idCol))
       .select(col(idCol).cast("long").as("doc_id"), col(textCol))
       .select(col("doc_id"),
-        size(call_function("split_words", col(textCol))).as("_g_nw"),
-        posexplode(call_function("ngram_hashes", col(textCol), lit(n)))
+        size(splitWords(col(textCol))).as("_g_nw"),
+        posexplode(ngramHashes(col(textCol), lit(n)))
           .as(Seq("_g_pos", "_g_gh")))
     val dupGrams = grams.groupBy(col("_g_gh"))
       .agg(min(col("doc_id")).as("_g_mn"), max(col("doc_id")).as("_g_mx"))
@@ -665,8 +647,6 @@ object CorpusOps {
     * filter — no explode, no window, no per-word shuffle. */
   def cutPassages(docs: DataFrame, idCol: String, textCol: String,
       spans: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.TextExprs.register(s)
     val spanList = spans
       .select(col("doc_id").cast("long").as("doc_id"),
         struct(col("span_start").as("s"), col("span_words").as("w")).as("_g_sp"))
@@ -675,7 +655,7 @@ object CorpusOps {
     docs
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("_g_text"))
       .join(spanList, Seq("doc_id"), "left")
-      .withColumn("_g_ws", call_function("split_words", col("_g_text")))
+      .withColumn("_g_ws", splitWords(col("_g_text")))
       .withColumn("_g_kept",
         when(col("_g_spans").isNull, col("_g_ws"))
           .otherwise(expr(
@@ -739,10 +719,9 @@ object CorpusOps {
   private def domainHistogram(docs: DataFrame, textCol: String,
       domainCol: String, subs: Int): (DataFrame, Array[(String, Long, Long)]) = {
     require(subs >= 1, s"subs must be >= 1, got $subs")
-    graft.functions.Md5Prefix28Expr.register(docs.sparkSession)
     val base = docs
       .filter(col(domainCol).isNotNull)
-      .withColumn("_g_h", call_function("md5_prefix28", col(textCol)))
+      .withColumn("_g_h", md5Prefix28(col(textCol)))
       .withColumn("_g_sub", pmod(col("_g_h"), lit(subs.toLong)))
     val hist = base
       .groupBy(col(domainCol).as("_g_dom"), col("_g_sub"))
@@ -844,9 +823,8 @@ object CorpusOps {
     * [[shuffleShards]] for placement. */
   def upsampleEpochs(docs: DataFrame, idCol: String, textCol: String,
       epochsPct: Column): DataFrame = {
-    graft.functions.Md5Prefix28Expr.register(docs.sparkSession)
     val e = epochsPct.cast("long")
-    val h = pmod(call_function("md5_prefix28", col(textCol)), lit(100L))
+    val h = pmod(md5Prefix28(col(textCol)), lit(100L))
     val copies = (e - pmod(e, lit(100L))) / 100L +
       when(h < pmod(e, lit(100L)), 1L).otherwise(0L)
     docs
@@ -879,8 +857,7 @@ object CorpusOps {
     require(denom <= (1L << 20),
       s"splitCorpus: weight sum $denom exceeds 2^20 — the 28-bit hash slot " +
         "would carry visible modulo bias; reduce the ratios")
-    graft.functions.Md5Prefix28Expr.register(docs.sparkSession)
-    val slot = pmod(call_function("md5_prefix28",
+    val slot = pmod(md5Prefix28(
       concat_ws(":", lit(seed), col(idCol).cast("string"))), lit(denom))
     // cumulative upper bounds turn the weights into a CASE chain; the
     // last split absorbs the tail so zero-weight names never match
@@ -918,11 +895,10 @@ object CorpusOps {
     require(budget >= 0 && subs >= 1, s"bad budget/subs ($budget, $subs)")
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.Md5Prefix28Expr.register(s)
     val base = docs.select(
         col(idCol).cast("long").as("doc_id"),
         bucket.cast("long").as("bucket"), toks.cast("long").as("toks"),
-        call_function("md5_prefix28", col(textCol)).as("_g_h"))
+        md5Prefix28(col(textCol)).as("_g_h"))
       .withColumn("_g_sub", pmod(col("_g_h"), lit(subs.toLong)))
     val hist = base.groupBy(col("bucket"), col("_g_sub"))
       .agg(sum(col("toks")).as("_g_t"))
@@ -988,7 +964,6 @@ object CorpusOps {
   def shuffleShards(docs: DataFrame, idCol: String, shards: Int,
       seed: Long = 0L): DataFrame = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
-    graft.functions.Md5Prefix28Expr.register(docs.sparkSession)
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(col("shard")).orderBy(col("_g_h"), col("doc_id"))
     docs
@@ -996,7 +971,7 @@ object CorpusOps {
       // numeric ids, so numeric outputs are unchanged), and string keys
       // shard correctly instead of cast-to-long nulling every row
       .select(col(idCol).as("doc_id"))
-      .withColumn("_g_h", call_function("md5_prefix28",
+      .withColumn("_g_h", md5Prefix28(
         concat_ws(":", lit(seed), col("doc_id").cast("string"))))
       .withColumn("shard", pmod(col("_g_h"), lit(shards.toLong)))
       .select(col("doc_id"), col("shard"),
@@ -1025,18 +1000,15 @@ object CorpusOps {
     * identically on both engines. */
   def bigramLmScore(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.TextExprs.register(s)
-    graft.functions.Md5Prefix28Expr.register(s)
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("_g_text"))
     val tf = base
       .select(col("doc_id"),
-        explode(when(size(call_function("split_words", col("_g_text"))) < 2,
+        explode(when(size(splitWords(col("_g_text"))) < 2,
           array().cast("array<string>"))
-          .otherwise(call_function("word_ngrams", col("_g_text"), lit(2))))
+          .otherwise(wordNgrams(col("_g_text"), lit(2))))
           .as("_g_bg"))
-      .select(col("doc_id"), call_function("md5_prefix28", col("_g_bg")).as("_g_h"))
+      .select(col("doc_id"), md5Prefix28(col("_g_bg")).as("_g_h"))
       .groupBy(col("doc_id"), col("_g_h")).agg(count(lit(1)).as("_g_tf"))
     val corpus = tf.groupBy(col("_g_h")).agg(sum(col("_g_tf")).as("_g_cf"))
     val hits = tf.join(corpus, "_g_h")
@@ -1054,15 +1026,12 @@ object CorpusOps {
 
   def classifyQuality(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.TextExprs.register(s)
-    graft.functions.Md5Prefix28Expr.register(s)
     docs
       .select(col(idCol).cast("long").as("doc_id"),
-        call_function("split_words", col(textCol)).as("_g_ws"))
-      .withColumn("_g_sum", expr(
-        "aggregate(transform(_g_ws, w -> md5_prefix28(w) % 2001 - 1000L), " +
-          "0L, (acc, x) -> acc + x)"))
+        splitWords(col(textCol)).as("_g_ws"))
+      .withColumn("_g_sum", aggregate(
+        transform(col("_g_ws"), w => md5Prefix28(w) % 2001 - 1000L),
+        lit(0L), (acc, x) => acc + x))
       .select(col("doc_id"),
         col("_g_sum").as("weight_sum"),
         size(col("_g_ws")).cast("long").as("n_words"),
@@ -1088,10 +1057,9 @@ object CorpusOps {
   def pairCounts(docs: DataFrame, textCol: String,
       topK: Int = 20): DataFrame = {
     require(topK >= 1, s"pairCounts: topK must be >= 1, got $topK")
-    graft.functions.TextExprs.register(docs.sparkSession)
     docs
-      .select(call_function("split_words", col(textCol)).as("_g_ws"))
-      .select(explode(call_function("adjacent_pairs", col("_g_ws")))
+      .select(splitWords(col(textCol)).as("_g_ws"))
+      .select(explode(adjacentPairs(col("_g_ws")))
         .as("p"))
       .select(concat(col("p.wa"), lit(" "), col("p.wb")).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("n"))
@@ -1105,11 +1073,10 @@ object CorpusOps {
     * the native codegen kernel [[graft.functions.TextKernels.mergePair]]
     * (one pass, whole-stage codegen; the interpreted `aggregate`-HOF
     * formulation cost ~3× the whole d32 query) — zero shuffles, zero
-    * state, any corpus size. Callers must have registered
-    * [[graft.functions.TextExprs]] on the session. */
+    * state, any corpus size. */
   def applyMerge(ws: org.apache.spark.sql.Column, wa: String,
       wb: String): org.apache.spark.sql.Column =
-    call_function("merge_pair", ws, lit(wa), lit(wb))
+    mergePair(ws, lit(wa), lit(wb))
 
   /** Byte-pair-encoding trainer over the corpus token stream (Sennrich
     * et al., ACL 2016, run at word level — characters are a caller-side
@@ -1132,9 +1099,8 @@ object CorpusOps {
   def trainBpe(docs: DataFrame, textCol: String, rounds: Int = 3,
       materializeEvery: Int = BpeMaterializeEvery,
       cutDir: Option[String] = None): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     trainOnSymbols(docs.select(
-      call_function("split_words", col(textCol)).as("_g_ws")), rounds,
+      splitWords(col(textCol)).as("_g_ws")), rounds,
       materializeEvery, cutDir)
   }
 
@@ -1147,15 +1113,14 @@ object CorpusOps {
   def trainBpeChars(docs: DataFrame, textCol: String, rounds: Int = 3,
       materializeEvery: Int = BpeMaterializeEvery,
       cutDir: Option[String] = None): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     val syms = docs
-      .select(explode(call_function("split_words", col(textCol)))
+      .select(explode(splitWords(col(textCol)))
         .as("_g_w"))
       // char_ngrams(w, 1) is the per-char sequence in order — one
       // kernel pass instead of a per-char transform/sequence/substring
       // HOF chain (identical values; the kernel is codegen, the HOF
       // lambda is not)
-      .select(concat(call_function("char_ngrams", col("_g_w"), lit(1)),
+      .select(concat(charNgrams(col("_g_w"), lit(1)),
         array(lit("</w>"))).as("_g_ws"))
     trainOnSymbols(syms, rounds, materializeEvery, cutDir)
   }
@@ -1172,7 +1137,7 @@ object CorpusOps {
   def applyBpe(ws: org.apache.spark.sql.Column,
       merges: Seq[(String, String)]): org.apache.spark.sql.Column =
     if (merges.isEmpty) ws
-    else call_function("apply_bpe_table", ws,
+    else applyBpeTable(ws,
       lit(merges.map(_._1).toArray), lit(merges.map(_._2).toArray))
 
   /** WordPiece-style vocabulary construction — the topK most frequent
@@ -1195,7 +1160,6 @@ object CorpusOps {
       topK: Int = 200, maxN: Int = 4): Seq[(String, Long)] = {
     require(topK >= 1, s"wordpieceVocab: topK must be >= 1, got $topK")
     require(maxN >= 1, s"wordpieceVocab: maxN must be >= 1, got $maxN")
-    graft.functions.TextExprs.register(docs.sparkSession)
     // harvest grams from DISTINCT words weighted by occurrence count —
     // identical totals to exploding per occurrence (Σ_w wn·grams(w)),
     // but the ~|word|·maxN gram explosion runs over the LEXICON only;
@@ -1204,14 +1168,14 @@ object CorpusOps {
     // a 5× corpus; this form is the flat half of PLANS.md's
     // "Tokenizer-serving scaling")
     val words = docs
-      .select(explode(call_function("split_words", col(textCol))).as("_g_w"))
+      .select(explode(splitWords(col(textCol))).as("_g_w"))
       .groupBy(col("_g_w")).agg(count(lit(1)).as("_g_wn"))
     // persisted for the call: the top-K and single-char collects are two
     // jobs over the same harvest aggregation — without the persist the
     // dominant corpus scan + gram shuffle would run twice
     val counts = words
       .select(col("_g_wn"), explode(
-        call_function("char_ngrams", col("_g_w"), lit(maxN))).as("g"))
+        charNgrams(col("_g_w"), lit(maxN))).as("g"))
       .groupBy(col("g")).agg(sum(col("_g_wn")).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1238,7 +1202,7 @@ object CorpusOps {
   def viterbiSegment(word: org.apache.spark.sql.Column,
       vocab: Seq[(String, Long)]): org.apache.spark.sql.Column = {
     require(vocab.nonEmpty, "viterbiSegment: empty vocabulary")
-    call_function("viterbi_segment", word,
+    NativeFunctions.viterbiSegment(word,
       lit(vocab.map(_._1).toArray), lit(vocab.map(_._2).toArray))
   }
 
@@ -1251,7 +1215,7 @@ object CorpusOps {
   def wordpieceEncode(word: org.apache.spark.sql.Column,
       vocab: Seq[String]): org.apache.spark.sql.Column = {
     require(vocab.nonEmpty, "wordpieceEncode: empty vocabulary")
-    call_function("wordpiece", word, lit(vocab.toArray))
+    wordpiece(word, lit(vocab.toArray))
   }
 
   /** Greedy WordPiece encoding straight to VOCABULARY IDS (piece id =
@@ -1261,7 +1225,7 @@ object CorpusOps {
   def wordpieceIdsEncode(word: org.apache.spark.sql.Column,
       vocab: Seq[String]): org.apache.spark.sql.Column = {
     require(vocab.nonEmpty, "wordpieceIdsEncode: empty vocabulary")
-    call_function("wordpiece_ids", word, lit(vocab.toArray))
+    wordpieceIds(word, lit(vocab.toArray))
   }
 
   /** Every document encoded to its token-ID array: split to words, each
@@ -1270,7 +1234,6 @@ object CorpusOps {
     * explode): (idCol, ids array<int>). */
   def encodeIds(docs: DataFrame, idCol: String, textCol: String,
       vocab: Seq[String], extraCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     // ONE fused kernel call per document — the equivalent
     // flatten(transform(split_words(text), w → wordpiece_ids(w, v)))
     // evaluates the inner kernel on Spark's INTERPRETED path once per
@@ -1278,7 +1241,7 @@ object CorpusOps {
     // on the corpus-wide model-input encode is the hot loop
     // (bit-equality with the HOF form is spec-held)
     docs.select(col(idCol) +: extraCols.map(col) :+
-      call_function("wordpiece_doc_ids", col(textCol),
+      wordpieceDocIds(col(textCol),
         lit(vocab.toArray)).as("ids"): _*)
   }
 
@@ -1405,12 +1368,11 @@ object CorpusOps {
       vocab0: Seq[(String, Long)], rounds: Int = 3): Seq[(String, Long)] = {
     require(rounds >= 1, s"refineVocabByUsage: rounds must be >= 1")
     require(vocab0.nonEmpty, "refineVocabByUsage: empty vocabulary")
-    graft.functions.TextExprs.register(docs.sparkSession)
     // the (word, count) relation is identical every round — persist it
     // for the loop's lifetime (handle pattern, released in finally) so
     // EM rounds re-segment the lexicon, not re-scan the corpus
     val words = docs
-      .select(explode(call_function("split_words", col(textCol))).as("w"))
+      .select(explode(splitWords(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wn"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1501,7 +1463,7 @@ object CorpusOps {
       var dry = false
       while (r <= rounds && !dry) {
         val best = cur
-          .select(explode(call_function("adjacent_pairs", col("_g_ws")))
+          .select(explode(adjacentPairs(col("_g_ws")))
             .as("p"))
           .groupBy(col("p.wa").as("wa"), col("p.wb").as("wb"))
           .agg(count(lit(1)).as("n"))
@@ -1547,9 +1509,8 @@ object CorpusOps {
   private[graft] def trainBpeWithHook(docs: DataFrame, textCol: String,
       rounds: Int, materializeEvery: Int,
       onRound: (Int, DataFrame) => Unit): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     trainOnSymbols(docs.select(
-      call_function("split_words", col(textCol)).as("_g_ws")), rounds,
+      splitWords(col(textCol)).as("_g_ws")), rounds,
       materializeEvery, None, onRound)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions._
 
 /** DataFrame-generic embedding similarity API — the [[CorpusOps]] analogue
   * for vector columns: a library user points these at their own
@@ -23,11 +24,10 @@ import org.apache.spark.sql.functions._
 object EmbeddingOps {
 
   private def cosine(a: Column, b: Column): Column =
-    call_function("vec_cosine", a, b)
+    vecCosine(a, b)
 
   /** Normalize to the internal (vec_id LONG, v) shape. */
   private def vecs(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     df.select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"))
   }
 
@@ -57,7 +57,6 @@ object EmbeddingOps {
     * across engines and summation orders. */
   def cosineTopKWhere(df: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], predicate: Column, k: Int = 10): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     df.filter(predicate)
       .select(col(idCol).cast("long").as(idCol), col(vecCol).as("v"))
       .select(col(idCol), round(cosine(col("v"), qlit(query)), 6).as("cosine"))
@@ -129,7 +128,6 @@ object EmbeddingOps {
   /** Normalize a query TABLE to (qid LONG, qv). */
   private def qvecs(queries: DataFrame, qIdCol: String,
       qVecCol: String): DataFrame = {
-    graft.functions.VectorExprs.register(queries.sparkSession)
     queries.select(col(qIdCol).cast("long").as("qid"), col(qVecCol).as("qv"))
   }
 

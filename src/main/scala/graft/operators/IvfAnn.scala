@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions._
 
 /** IVF (inverted-file) approximate nearest neighbor — the second scale
   * path for embedding search, complementing the sign-LSH buckets of
@@ -29,16 +30,12 @@ object IvfAnn {
   val K = 16
   val NProbe = 2
 
-  /** Native one-pass codegen kernels ([[graft.functions.VectorKernels]];
+  /** Native one-pass codegen cosine ([[graft.functions.VectorKernels]];
     * bit-identical to the zip_with+aggregate form, float32 read directly —
-    * see SimilarityQueries). Registered by [[vectors]]/entry points. */
-  private def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-  private def norm(a: Column): Column = call_function("vec_norm", a)
-  private def cosine(a: Column, b: Column): Column =
-    call_function("vec_cosine", a, b)
+    * see SimilarityQueries). */
+  private def cosine(a: Column, b: Column): Column = vecCosine(a, b)
 
   private def vectors(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     embeddings(s, dir).select(col("vec_id"), col("embedding").as("v"))
   }
 
@@ -79,7 +76,6 @@ object IvfAnn {
     * guarantees identical tie-breaks on near-equal centroids. */
   def assignCells(emb: DataFrame, cents: DataFrame,
       portable: Boolean = false): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     // portable: the argmax compares round(sim, 6) — near-equal centroid
     // similarities then DECIDE IDENTICALLY on any engine whose raw
     // cosine agrees to ~1e-15 (everything inside the quantum away from
@@ -99,7 +95,7 @@ object IvfAnn {
       // an EMPTY centroid table yields a NULL cell (the kernel's empty
       // guard); without this filter every vector would carry a null
       // cell instead of the zero rows the argmax semantics imply
-      .withColumn("cell", call_function("vec_nearest_cell",
+      .withColumn("cell", vecNearestCell(
         col("v"), col("_g_flat"), col("_g_cids"),
         lit(if (portable) 6 else -1)))
       .filter(col("cell").isNotNull)
@@ -123,7 +119,6 @@ object IvfAnn {
   /** IVF search against an arbitrary centroid table (cid, cv). */
   def ivfSearch(emb: DataFrame, cents: DataFrame,
       nprobe: Int = NProbe): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val sims = centroidSims(emb, cents)
     val cells = assignCells(emb, cents)
     // top-NProbe over K rows: orderBy+limit plans as TakeOrderedAndProject
@@ -196,7 +191,6 @@ object IvfAnn {
 
   def trainCentroids(emb0: DataFrame, k: Int = K, iters: Int = 5,
       portable: Boolean = false, seedSpread: Boolean = false): DataFrame = {
-    graft.functions.VectorExprs.register(emb0.sparkSession)
     // iterated map-side passes need input-side parallelism
     // ([[ScaleUtils.spreadForCompute]] doc; no-op for tiny and for
     // corpus-scale inputs). The spread is lazy, so PIN it for the
@@ -308,7 +302,6 @@ object IvfAnn {
     * ReusedExchange in the executed plan) — no persist, nothing left in
     * the session CacheManager. */
   def semDedup(emb: DataFrame, cents: DataFrame, tau: Double): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val cells = assignCells(emb, cents)
     val lhs = cells.select(col("cell"), col("vec_id").as("_g_ia"),
       col("v").as("_g_va"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.NativeFunctions._
 
 /** IVF-PQ — the composed billion-scale ANN index (Jégou et al., TPAMI
   * 2011 §V, the Faiss `IVFx,PQy` architecture): a coarse inverted-file
@@ -107,7 +108,6 @@ object IvfPq {
       pqIters: Int = 3, portable: Boolean = false,
       maxTrainVectors: Long = DefaultMaxTrainVectors,
       seedSpread: Boolean = false): IvfPqIndex = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     // Build-scoped execution tuning (graft.SizePolicy, measured in the
     // conversion and here): training runs coarseIters + pqIters
     // SEQUENTIAL update jobs whose aggregation outputs are
@@ -180,13 +180,8 @@ object IvfPq {
         val n = emb.count()
         if (n <= maxTrainVectors) None
         else {
-          // register on the frame's OWN session: build may be running
-          // under the build-scoped clone, whose function registry was
-          // copied at clone time and does not see caller-side registers
-          graft.functions.Md5Prefix28Expr.register(emb.sparkSession)
           val r = trainSampleRate(n, maxTrainVectors)
-          Some(pmod(call_function("md5_prefix28",
-              col("vec_id").cast("string")),
+          Some(pmod(md5Prefix28(col("vec_id").cast("string")),
             lit(TrainSampleModulus)) < lit(r))
         }
       }
@@ -424,7 +419,6 @@ object IvfPq {
 
   def x15IvfPqTopK(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = graft.Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val loaded = snapshotLocalIndex(s, dir, emb)
@@ -524,7 +518,6 @@ object IvfPq {
     * [[writeIndex]] layout's `codes` relation. */
   def encodeMapSide(vecs: DataFrame, idCol: String, vecCol: String,
       index: IvfPqIndex): DataFrame = {
-    graft.functions.VectorExprs.register(vecs.sparkSession)
     val emb = vecs.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).as("v"))
     val dim = index.cents.select(size(col("cv"))).head().getInt(0)
@@ -688,7 +681,6 @@ object IvfPq {
     * against exact cosine ground truth. */
   def x15SearchAt(s: org.apache.spark.sql.SparkSession, dir: String,
       nProbe: Int): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = graft.Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val loaded = snapshotLocalIndex(s, dir, emb)
@@ -717,8 +709,6 @@ object IvfPq {
       qVecCol: String, topK: Int = 10,
       nProbe: Int = IvfAnn.NProbe): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    val s = queries.sparkSession
-    graft.functions.VectorExprs.register(s)
     val cb = ProductQuantizer.collectCodebook(index.codebook)
     require(cb.nonEmpty, "index has an empty codebook")
     val (m, k) = (index.m, index.k)
@@ -733,7 +723,7 @@ object IvfPq {
         col(qVecCol).cast("array<double>").as("_g_qv"))
       .crossJoin(broadcast(index.cents
         .select(col("cid"), col("cv").cast("array<double>").as("_g_cv"))))
-      .withColumn("_g_sim", call_function("vec_cosine", col("_g_qv"), col("_g_cv")))
+      .withColumn("_g_sim", vecCosine(col("_g_qv"), col("_g_cv")))
       .withColumn("_g_rk", row_number().over(wq))
       .filter(col("_g_rk") <= nProbe)
       .select(col("qid"), col("cid").as("cell"),

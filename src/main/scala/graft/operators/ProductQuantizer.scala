@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions._
 
 /** Product quantization (PQ) — the third scale path for embedding search
   * (Jégou et al., "Product Quantization for Nearest Neighbor Search",
@@ -39,7 +40,7 @@ object ProductQuantizer {
   val M = 4
   val K = 16
 
-  private def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  private def dot(a: Column, b: Column): Column = vecDot(a, b)
 
   /** Squared L2 via the dot expansion |a|² − 2a·b + |b|², evaluated
     * left-to-right — the exact kernel sequence the x12 oracle replays
@@ -98,14 +99,13 @@ object ProductQuantizer {
     * ([[initCodebook]] assigns them; [[train]]'s coalesce preserves
     * the key set), so flat index == code. */
   def assignCodes(sv: DataFrame, codebook: DataFrame): DataFrame = {
-    graft.functions.VectorExprs.register(sv.sparkSession)
     val packed = codebook.groupBy(col("sub"))
       .agg(flatten(transform(
           sort_array(collect_list(struct(col("code"), col("cv")))),
           p => p.getField("cv").cast("array<double>"))).as("_g_flat"),
         count(lit(1)).cast("int").as("_g_k"))
     sv.join(broadcast(packed), Seq("sub"))
-      .withColumn("best", call_function("vec_nearest_code",
+      .withColumn("best", vecNearestCode(
         col("sv"), col("_g_flat"), col("_g_k")))
       .select(col("pq_id"), col("sub"), col("sv"),
         element_at(col("best"), 2).cast("int").as("code"),
@@ -281,7 +281,6 @@ object ProductQuantizer {
     * sub-ordered left-to-right sum of the per-subspace distances (NOT a
     * float sum() agg, whose partial-merge order is partition-dependent). */
   def x12PqEncode(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = embeddings(s, dir).select(col("vec_id"), col("embedding").as("v"))
     val sv = subvectors(emb, "vec_id", "v", M)
     assignCodes(sv, initCodebook(sv, K))

@@ -4,6 +4,7 @@ import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions._
 
 /** Lexical + hybrid retrieval and contrastive example mining — the serving
   * and training-data side of the similarity surface. The reference has no
@@ -93,8 +94,7 @@ object RetrievalOps {
     // a repeated term must not double-count: normalize once here so the
     // aggregation scorer, the index probe and the column scorer agree
     val terms0 = queryTerms.distinct
-    graft.functions.TextExprs.register(docs.sparkSession)
-    val tcCol = call_function("term_tfs", col("_g_tx"),
+    val tcCol = termTfs(col("_g_tx"),
       typedLit(terms0).cast("array<string>"))
     // ONE tokenize pass, ONE shared exchange (r16; guide §2.3/§2.4).
     // The r15 shape spread the RAW TEXT and let the stats and scoring
@@ -251,7 +251,6 @@ object RetrievalOps {
   def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
       labelCol: String, anchorIds: Seq[Long], k: Int = 5): DataFrame = {
     require(anchorIds.nonEmpty, "hardNegatives: anchorIds must be non-empty")
-    graft.functions.VectorExprs.register(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("_g_id"),
       col(vecCol).as("_g_v"), col(labelCol).as("_g_l"))
     val anch = base.filter(col("_g_id").isin(anchorIds: _*))
@@ -261,7 +260,7 @@ object RetrievalOps {
       .orderBy(col("cosine").desc, col("neg_id").asc)
     base.join(broadcast(anch), col("_g_l") =!= col("_g_al"))
       .select(col("anchor_id"), col("_g_id").as("neg_id"),
-        round(call_function("vec_cosine", col("_g_v"), col("_g_qv")), 6)
+        round(vecCosine(col("_g_v"), col("_g_qv")), 6)
           .as("cosine"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -284,12 +283,11 @@ object RetrievalOps {
       lambda: Double = 0.5): DataFrame = {
     require(k >= 1 && n >= k, s"mmrRerank: need n >= k >= 1, got n=$n k=$k")
     val s = df.sparkSession
-    graft.functions.VectorExprs.register(s)
     val cand = df
       .select(col(idCol).cast("long").as("_g_id"),
         col(vecCol).cast("array<double>").as("_g_v"))
       .select(col("_g_id"), col("_g_v"),
-        round(call_function("vec_cosine", col("_g_v"),
+        round(vecCosine(col("_g_v"),
           typedLit(query)), 6).as("_g_simq"))
       .orderBy(col("_g_simq").desc, col("_g_id").asc)
       .limit(n)
@@ -374,10 +372,9 @@ object RetrievalOps {
   private def writePostings(docs: DataFrame, idCol: String,
       textCol: String, postingsPath: String, nBuckets: Int,
       withPositions: Boolean): (Long, Long) = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     val base = docs
       .select(col(idCol).cast("long").as("id"),
-        call_function("split_words", col(textCol)).as("_g_ws"))
+        splitWords(col(textCol)).as("_g_ws"))
       .select(col("id"), col("_g_ws"),
         size(col("_g_ws")).cast("long").as("dl"))
     // positional postings add one sorted offsets array per (doc, term) —
@@ -1038,18 +1035,13 @@ object RetrievalOps {
     // per-term tf via the one-pass `term_tfs` codegen kernel — the same
     // [dl, tf_0, …] vector [[bm25Scores]] consumes, replacing the
     // per-term `size(filter(tokens, λ))` higher-order filters that
-    // CodegenFallback'd per token on every arrival. Built directly as an
-    // expression (a pure Column function has no session to register the
-    // SQL name on); every getItem references the SAME kernel subtree, so
-    // whole-stage codegen's subexpression elimination tokenizes once per
-    // row. tf/dl semantics are bit-identical (TextKernels.termTfs
-    // scaladoc + the codegen==interpreted spec): lowercased \s+ tokens,
-    // exact string match, so scores are unchanged.
-    val tc = org.apache.spark.sql.graft.SessionOps.column(
-      graft.functions.TermTfsExpr(
-        org.apache.spark.sql.graft.SessionOps.expression(textCol),
-        org.apache.spark.sql.graft.SessionOps.expression(
-          typedLit(terms0).cast("array<string>"))))
+    // CodegenFallback'd per token on every arrival. Every getItem
+    // references the SAME kernel subtree, so whole-stage codegen's
+    // subexpression elimination tokenizes once per row. tf/dl semantics
+    // are bit-identical (TextKernels.termTfs scaladoc + the
+    // codegen==interpreted spec): lowercased \s+ tokens, exact string
+    // match, so scores are unchanged.
+    val tc = termTfs(textCol, typedLit(terms0).cast("array<string>"))
     val dl = tc.getItem(0)
     val micro = terms0.zipWithIndex.map { case (t, i) =>
       val df = dfByTerm.getOrElse(t, 0L)
@@ -1328,7 +1320,6 @@ object RetrievalOps {
   /** x18: hybrid lexical+vector retrieval — BM25 top-50 and cosine top-50
     * (query = doc/vec 0, excluded from both sides) fused with RRF. */
   def x18HybridRrf(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val lex = rankTopN(
       bm25Scores(documents(s, dir), "doc_id", "text", GateTerms)
         .filter(col("doc_id") =!= 0),
@@ -1339,7 +1330,7 @@ object RetrievalOps {
     val vec = rankTopN(
       emb.filter(col("vec_id") =!= 0)
         .select(col("vec_id").as("doc_id"),
-          round(call_function("vec_cosine", col("v"), typedLit(q)), 6)
+          round(vecCosine(col("v"), typedLit(q)), 6)
             .as("cosine")),
       "doc_id", "cosine", 50)
     rrfFuse(lex, vec, "doc_id", k = 20)
@@ -1357,7 +1348,6 @@ object RetrievalOps {
     * relevance: how well does raw cosine retrieve label-mates? The
     * [[evalRanking]] harness over the x19-convention broadcast ranking. */
   def x22RetrievalEval(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = embeddings(s, dir).select(col("vec_id"),
       col("embedding").as("_g_v"), col("label").as("_g_l"))
     val anch = emb.filter(col("vec_id").isin(0L, 1L, 2L, 3L))
@@ -1367,7 +1357,7 @@ object RetrievalOps {
       .orderBy(col("cosine").desc, col("id").asc)
     val ranked = emb.join(broadcast(anch), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("id"),
-        round(call_function("vec_cosine", col("_g_v"), col("_g_qv")), 6)
+        round(vecCosine(col("_g_v"), col("_g_qv")), 6)
           .as("cosine"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 10)
@@ -1466,14 +1456,13 @@ object RetrievalOps {
     * approximates the cosine ground truth). */
   private def l2NormalizedEmbeddings(s: SparkSession,
       dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     // one fused codegen pass per row ([[graft.functions.VectorKernels
     // .l2normalize]]) — the HOF form `transform(v, x -> x /
     // sqrt(aggregate(v, ...)))` re-evaluates the interpreted aggregate
     // lambda per ELEMENT (O(dim²)/row; ~0.8 s of every x34/x36 scan at
     // sf0.1), with identical left-to-right IEEE arithmetic (spec-held)
     embeddings(s, dir).select(col("vec_id"),
-      call_function("vec_l2normalize", col("embedding")).as("v"))
+      vecL2normalize(col("embedding")).as("v"))
   }
 
   def x34TrainedRecall(s: SparkSession, dir: String): DataFrame =
@@ -1497,7 +1486,6 @@ object RetrievalOps {
 
   private def trainedProbeGate(s: SparkSession, dir: String, key: String,
       maxTrainVectors: Long): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = l2NormalizedEmbeddings(s, dir)
     // train ONCE per corpus snapshot and serve from the persisted
     // index (the x15 convention): training is the amortized build-time
@@ -1525,7 +1513,7 @@ object RetrievalOps {
     val q = emb.filter(col("vec_id") === 0L).head().getSeq[Double](1)
     val exact = emb.filter(col("vec_id") =!= 0L)
       .select(col("vec_id"),
-        round(call_function("vec_cosine", col("v"), typedLit(q)), 6)
+        round(vecCosine(col("v"), typedLit(q)), 6)
           .as("c"))
       .orderBy(col("c").desc, col("vec_id").asc).limit(10)
       .collect().map(_.getLong(0)).toSet
@@ -1569,7 +1557,6 @@ object RetrievalOps {
     * per-query probe-cell ranking over the broadcast centroid table, the
     * corpus joins the probe list on `cell`, per-query top-5. */
   def x29IvfBatch(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cents = emb.filter(col("vec_id") < IvfAnn.K)
@@ -1584,7 +1571,6 @@ object RetrievalOps {
   /** x30: mean-average-precision inputs — the x22 anchors/ranking scored
     * with [[averagePrecision]] (per-query AP@10 vs same-label qrels). */
   def x30MapEval(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = embeddings(s, dir).select(col("vec_id"),
       col("embedding").as("_g_v"), col("label").as("_g_l"))
     val anch = emb.filter(col("vec_id").isin(0L, 1L, 2L, 3L))
@@ -1594,7 +1580,7 @@ object RetrievalOps {
       .orderBy(col("cosine").desc, col("id").asc)
     val ranked = emb.join(broadcast(anch), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("id"),
-        round(call_function("vec_cosine", col("_g_v"), col("_g_qv")), 6)
+        round(vecCosine(col("_g_v"), col("_g_qv")), 6)
           .as("cosine"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 10)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.functions.NativeFunctions._
 
 /** Scale techniques used across the engine, exposed as utilities:
   * bucketed co-located joins (shuffle-free at read time) and salted joins
@@ -61,16 +62,15 @@ object ScaleUtils {
     * but a semi join would shuffle the far bigger fact side — a ~1 MB/M-id
     * sketch probes map-side inside the scan stage instead, so only
     * survivors reach any shuffle. This is Spark's own runtime-filter
-    * machinery ([[graft.functions.BloomExprs]]) driven explicitly — the
-    * optimizer's InjectRuntimeFilter only fires inside a joined plan,
-    * not across separately-built pipeline stages like these. The sketch
-    * is built DISTRIBUTED (partial blooms OR-merged) and only the final
-    * bytes land on the driver. */
+    * machinery ([[graft.functions.NativeFunctions.bloomFilterAgg]])
+    * driven explicitly — the optimizer's InjectRuntimeFilter only fires
+    * inside a joined plan, not across separately-built pipeline stages
+    * like these. The sketch is built DISTRIBUTED (partial blooms
+    * OR-merged) and only the final bytes land on the driver. */
   def bloomPrefilter(fact: DataFrame, ids: DataFrame, key: String,
       expectedIds: Long, fpp: Double = 0.01): DataFrame = {
     require(expectedIds > 0, s"expectedIds must be positive, got $expectedIds")
     require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1), got $fpp")
-    graft.functions.BloomExprs.register(fact.sparkSession)
     // standard sizing: m = -n ln(p) / (ln 2)^2
     val numBits = math.max(64L, math.ceil(
       -expectedIds * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
@@ -80,12 +80,12 @@ object ScaleUtils {
     // every true match
     val keyType = fact.schema(key).dataType
     val bloom = ids
-      .select(call_function("bloom_filter_agg",
+      .select(bloomFilterAgg(
         xxhash64(col(key).cast(keyType)), lit(expectedIds), lit(numBits))
         .as("b"))
       .head().getAs[Array[Byte]](0)
     if (bloom == null) fact.limit(0) // empty id set keeps nothing
-    else fact.filter(call_function("bloom_might_contain",
+    else fact.filter(bloomMightContain(
       lit(bloom), xxhash64(col(key))))
   }
 

@@ -4,6 +4,7 @@ import graft.Tables._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions._
 
 /** Near-duplicate detection and embedding similarity search — the
   * training-data-pipeline surface (no equivalent in the reference; designed
@@ -37,13 +38,13 @@ object SimilarityQueries {
     * native one-pass kernel ([[graft.functions.TextKernels]]; bit-identical
     * to `filter(split(lower(t), "\\s+"), w => length(w) > 0)`, which
     * stacked interpreted HOF lambdas per document). */
-  private def words(t: Column): Column = call_function("split_words", t)
+  private def words(t: Column): Column = splitWords(t)
 
   /** Word 3-gram shingles straight from the text column (one kernel pass:
     * split + sliding join — replaces the words-array materialization plus
     * the transform/sequence/slice/concat_ws lambda stack). */
   private def shingles(t: Column): Column =
-    call_function("word_ngrams", t, lit(3))
+    wordNgrams(t, lit(3))
 
   /** Portable 28-bit hash: first 7 hex digits of md5, read as an integer.
     * Identical in any engine with md5 (`('0x' || substr(md5(s),1,7))::BIGINT`
@@ -51,10 +52,9 @@ object SimilarityQueries {
     * as the custom codegen expression [[graft.functions.Md5Prefix28Expr]]:
     * the built-in md5() resolves a MessageDigest per row through the
     * synchronized JCA provider lookup, which serializes all 32 executor
-    * threads on one lock (callers must register the function via
-    * [[graft.functions.Md5Prefix28Expr.register]] first). */
+    * threads on one lock. */
   private def phash(c: Column): Column =
-    call_function("md5_prefix28", c)
+    md5Prefix28(c)
 
   /** Affine minhash permutation family over the 28-bit shingle hash.
     * Coefficients stay < 2^40 so the arithmetic never overflows a signed
@@ -124,8 +124,6 @@ object SimilarityQueries {
   }
 
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     cachedView(s, dir, "shingles") {
       documents(s, dir)
         .repartition(col("doc_id"))
@@ -441,8 +439,6 @@ object SimilarityQueries {
     cachedView(s, dir, "simhash")(simhashesUncached(s, dir))
 
   private def simhashesUncached(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     val wordsDf = documents(s, dir)
       .select(col("doc_id"), explode(words(col("text"))).as("w"))
       .withColumn("wh", phash(col("w")))
@@ -498,15 +494,12 @@ object SimilarityQueries {
   /** dot / norm via the native one-pass codegen kernels
     * ([[graft.functions.VectorKernels]] — same left-to-right IEEE sequence
     * as the zip_with+aggregate form they replaced, so oracle hashes are
-    * unchanged; callers must register via [[vecExprs]] first). The kernels
+    * unchanged). The kernels
     * read float32 embeddings directly — no per-element cast column. */
   private def dot(a: Column, b: Column): Column =
-    call_function("vec_dot", a, b)
+    vecDot(a, b)
 
-  private def norm(a: Column): Column = call_function("vec_norm", a)
-
-  private def vecExprs(s: SparkSession): Unit =
-    graft.functions.VectorExprs.register(s)
+  private def norm(a: Column): Column = vecNorm(a)
 
   /** Deterministic ±1 hyperplane for LSH plane `p` over [[EmbDim]] dims:
     * sign(p,d) = parity of md5("p:d"). Computed ONCE driver-side and baked
@@ -543,7 +536,6 @@ object SimilarityQueries {
     * top-k (no global sort). This is the exact baseline the LSH variant
     * is measured against. */
   def x1CosineTopK(s: SparkSession, dir: String): DataFrame = {
-    vecExprs(s)
     val emb = embeddings(s, dir).select(col("vec_id"),
       col("embedding").as("v"))
     val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
@@ -563,7 +555,6 @@ object SimilarityQueries {
     * as a pushed filter (spec-held), so the selective filter — not a
     * post-scan pass — bounds the scored set. */
   def x16FilteredTopK(s: SparkSession, dir: String): DataFrame = {
-    vecExprs(s)
     val emb = embeddings(s, dir).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"), col("label"))
     val q = emb.filter(col("vec_id") === 0).head().getSeq[Double](1)
@@ -576,7 +567,6 @@ object SimilarityQueries {
     * within. The 100 TB path: bucket id is a shuffle key, each bucket is
     * searched independently. */
   def x5AnnBuckets(s: SparkSession, dir: String): DataFrame = {
-    vecExprs(s)
     val emb = embeddings(s, dir).select(col("vec_id"),
       col("embedding").as("v"))
     val bucketed = emb.withColumn("bucket", lshBucket(8))
@@ -595,7 +585,6 @@ object SimilarityQueries {
     * self-join instead of all-pairs). The norm is materialized once per
     * row BEFORE the join — never recomputed per pair side. */
   def x6EmbeddingNearDup(s: SparkSession, dir: String): DataFrame = {
-    vecExprs(s)
     val emb = embeddings(s, dir).select(col("vec_id"),
       col("embedding").as("v"))
     val b = emb.withColumn("bucket", lshBucket(6))
@@ -621,7 +610,6 @@ object SimilarityQueries {
     * batch twin of the streaming
     * [[graft.streaming.DocStreams.vecAdmitArrivals]] loop. */
   def x33VecAdmit(s: SparkSession, dir: String): DataFrame = {
-    vecExprs(s)
     val emb = embeddings(s, dir)
     EmbeddingOps.admitVectors(
         emb.filter(col("vec_id") % 5 =!= 0),
@@ -644,7 +632,6 @@ object SimilarityQueries {
     * discriminative (at t = 0.4 the banded path admits strictly more
     * than x33's exact sweep). */
   def x35BucketedAdmit(s: SparkSession, dir: String): DataFrame = {
-    vecExprs(s)
     val emb = embeddings(s, dir)
     EmbeddingOps.admitVectors(
         emb.filter(col("vec_id") % 5 =!= 0),

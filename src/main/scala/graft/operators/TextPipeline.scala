@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions._
 
 /** One-call corpus curation — the composed pipeline a training-data team
   * runs end to end, built from the individually-oracled operators:
@@ -107,12 +108,9 @@ object TextPipeline {
     val contamSource = if (qualified eq rawQualified) base else qualified
     val contam = benchmark.map { case (bench, benchTextCol) =>
       val benchGrams = {
-        val s = docs.sparkSession
-        graft.functions.Md5Prefix28Expr.register(s)
-        graft.functions.TextExprs.register(s)
-        bench.select(explode(call_function("word_ngrams",
+        bench.select(explode(wordNgrams(
             col(benchTextCol), lit(config.ngram))).as("_g_g"))
-          .select(call_function("md5_prefix28", col("_g_g")).as("shash"))
+          .select(md5Prefix28(col("_g_g")).as("shash"))
           .distinct()
       }
       CorpusOps.shingleHashes(contamSource, idCol, textCol, config.ngram)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
+import graft.functions.NativeFunctions._
 
 /** Training-data-pipeline text operators over the `documents` table
   * (doc_id, text, lang, source, n_chars).
@@ -120,10 +121,9 @@ object TextQueries {
     * prefix mod 100 under a per-language rate. Reproducible across runs,
     * cluster sizes, AND engines (the rate table is plain SQL). */
   def d9StratifiedSample(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Md5Prefix28Expr.register(s)
     val rate: Column = when(col("lang") === "en", 20).otherwise(5)
     documents(s, dir)
-      .filter(pmod(call_function("md5_prefix28", col("text")), lit(100L)) < rate)
+      .filter(pmod(md5Prefix28(col("text")), lit(100L)) < rate)
       .select(col("doc_id"), col("lang"))
       .orderBy("doc_id")
   }
@@ -167,13 +167,11 @@ object TextQueries {
     * and identical in the oracle, which mirrors the same md5-prefix
     * hash). */
   def d11RepetitionQuality(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     documents(s, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"),
-        explode(call_function("split_words", col("text"))).as("w"))
-      .select(col("doc_id"), call_function("md5_prefix28", col("w")).as("wh"))
+        explode(splitWords(col("text"))).as("w"))
+      .select(col("doc_id"), md5Prefix28(col("w")).as("wh"))
       .groupBy(col("doc_id"), col("wh")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_words"),
@@ -309,12 +307,11 @@ object TextQueries {
     * sequence-explode + slice — no shuffle at all beyond the
     * presentation sort; chunk rows inherit the corpus partitioning. */
   def d17ChunkDocuments(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.register(s)
     val Win = 64
     val Stride = 48
     documents(s, dir)
       .select(col("doc_id"),
-        call_function("split_words", col("text")).as("w"))
+        splitWords(col("text")).as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).as("nw"))
       .filter(col("nw") > 0)
       .select(col("doc_id"), col("w"), col("nw"),
@@ -372,12 +369,11 @@ object TextQueries {
     * hash(doc_id) partitioning, so the downstream per-doc window needs no
     * further exchange. */
   private def docTermFreqs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.register(s)
     SimilarityQueries.cachedView(s, dir, "tf") {
       documents(s, dir)
         .repartition(col("doc_id"))
         .select(col("doc_id"),
-          explode(call_function("split_words", col("text"))).as("term"))
+          explode(splitWords(col("text"))).as("term"))
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     }
   }
@@ -651,11 +647,10 @@ object TextQueries {
     }
 
   def d36Wordpiece(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.register(s)
     val docs = documents(s, dir)
     val vocab = gateVocab(s, dir).map(_._1)
     val words = docs
-      .select(explode(call_function("split_words", col("text"))).as("w"))
+      .select(explode(splitWords(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wn"))
     words
       .select(col("wn"),
@@ -672,11 +667,10 @@ object TextQueries {
     * distinct words (length ≤ 12, the oracle's unrolled-DP depth) by
     * occurrence; output (w, n_pieces, freq_sum) ordered by w. */
   def d37ViterbiSegment(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.register(s)
     val docs = documents(s, dir)
     val vocab = gateVocab(s, dir)
     val sel = docs
-      .select(explode(call_function("split_words", col("text"))).as("w"))
+      .select(explode(splitWords(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wn"))
       .filter(length(col("w")) <= 12)
       .orderBy(col("wn").desc, col("w").asc)
@@ -785,7 +779,6 @@ object TextQueries {
     * ([[CorpusOps.applyBpe]]): the artifact a tokenizer ships next to
     * its merge table. Train → apply → one (symbol, count) shuffle. */
   def d34BpeVocab(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.register(s)
     // the same memoized table d33 emits — training runs once per
     // corpus snapshot across the whole family, not once per gate
     val merges = bpeMergeTable(s, dir, chars = true, rounds = 3)
@@ -798,8 +791,8 @@ object TextQueries {
     // values; symbol counts are computation-order-free)
     val syms = ScaleUtils.spreadForCompute(documents(s, dir),
         minBytes = graft.SizePolicy.TextSpreadMinBytes)
-      .select(explode(call_function("split_words", col("text"))).as("_g_w"))
-      .select(concat(call_function("char_ngrams", col("_g_w"), lit(1)),
+      .select(explode(splitWords(col("text"))).as("_g_w"))
+      .select(concat(charNgrams(col("_g_w"), lit(1)),
         array(lit("</w>"))).as("_g_ws"))
     syms.select(explode(CorpusOps.applyBpe(col("_g_ws"), merges))
         .as("symbol"))

@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions.hilbertIndex
 
 /** GeoParquet 1.1.0 sink (S6) — Spark port of the reference's KV-metadata
   * write (/root/reference/quackosm/_geoparquet_metadata.py:7-63,
@@ -232,10 +233,10 @@ object GeoParquet {
   private def spatialSortWithExt(typed: DataFrame,
       bbox: (Double, Double, Double, Double),
       singleOutput: Boolean): DataFrame = {
-    HilbertIndexExpr.register(typed.sparkSession)
-    val indexed = typed.withColumn("_hilbert", expr(
-      s"hilbert_index((_ext._1 + _ext._3) / 2, (_ext._2 + _ext._4) / 2, " +
-        s"${bbox._1}d, ${bbox._2}d, ${bbox._3}d, ${bbox._4}d)"))
+    val indexed = typed.withColumn("_hilbert", hilbertIndex(
+      (col("_ext._1") + col("_ext._3")) / 2,
+      (col("_ext._2") + col("_ext._4")) / 2,
+      lit(bbox._1), lit(bbox._2), lit(bbox._3), lit(bbox._4)))
     val parted =
       if (singleOutput) indexed.coalesce(1)
       else indexed.repartitionByRange(col("_hilbert"))

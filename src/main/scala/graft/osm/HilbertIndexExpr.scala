@@ -1,6 +1,5 @@
 package graft.osm
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -78,19 +77,4 @@ case class HilbertIndexExpr(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
-}
-
-object HilbertIndexExpr {
-  /** Register `hilbert_index(x, y, xmin, ymin, xmax, ymax)` for both the
-    * SQL and `expr(...)` surfaces of the session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("hilbert_index")))
-      reg.createOrReplaceTempFunction(
-        "hilbert_index",
-        exprs => HilbertIndexExpr(exprs.map(
-          e => org.apache.spark.sql.catalyst.expressions.Cast(e, org.apache.spark.sql.types.DoubleType))),
-        "built-in")
-  }
 }

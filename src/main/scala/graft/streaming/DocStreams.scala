@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions._
 
 /** Structured Streaming surface over the `documents` corpus shape —
   * the continuous-ingest half of the text pipeline: a crawl feed is
@@ -257,9 +258,6 @@ object DocStreams {
     * the CorpusOps contract). */
   def admitNew(docs: DataFrame, existing: DataFrame,
       threshold: Double = 0.5, ngram: Int = 3): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     val numPerms = graft.operators.SimilarityQueries.NumPerms
     val bandSize = graft.operators.SimilarityQueries.BandSize
     val prime = graft.operators.SimilarityQueries.HashPrime
@@ -280,13 +278,13 @@ object DocStreams {
       .join(exDigests, Seq("_g_h"), "left_outer")
       .filter(col("_g_exact").isNull)
       .withColumn("_g_gh",
-        expr(s"transform(word_ngrams(text, $ngram), g -> md5_prefix28(g))"))
+        transform(wordNgrams(col("text"), lit(ngram)), g => md5Prefix28(g)))
       .withColumn("_g_sig", expr(
         s"transform(sequence(0, ${numPerms - 1}), p -> " +
           s"array_min(transform(_g_gh, " +
           s"h -> (37 * (p + 1) * h + 101 * p + 7) % ${prime}L)))"))
     (0 until nBands).foreach { b =>
-      val bandKey = call_function("md5_prefix28", concat_ws(",",
+      val bandKey = md5Prefix28(concat_ws(",",
         transform(slice(col("_g_sig"), b * bandSize + 1, bandSize),
           x => x.cast("string"))))
       cur = cur.withColumn(s"_g_bk$b", bandKey)
@@ -711,7 +709,6 @@ object DocStreams {
     * the scored corpus itself (spec-held). */
   def scoreArrivals(docs: DataFrame, queryTerms: Seq[String], n: Long,
       sumDl: Long, dfByTerm: Map[String, Long]): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
     docs.withColumn("bm25", graft.operators.RetrievalOps.bm25ScoreColumn(
       col("text"), queryTerms, n, sumDl, dfByTerm))
   }
@@ -738,15 +735,12 @@ object DocStreams {
     * streaming twin of d10. */
   def contaminationFlags(docs: DataFrame, benchGrams: DataFrame,
       ngram: Int = 3): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.Md5Prefix28Expr.register(s)
-    graft.functions.TextExprs.register(s)
     docs
       .select(col("doc_id"), col("ingest_ts"),
-        explode(call_function("word_ngrams", col("text"), lit(ngram)))
+        explode(wordNgrams(col("text"), lit(ngram)))
           .as("_g_sh"))
       .select(col("doc_id"), col("ingest_ts"),
-        call_function("md5_prefix28", col("_g_sh")).as("shash"))
+        md5Prefix28(col("_g_sh")).as("shash"))
       .join(broadcast(benchGrams), Seq("shash"), "left_semi")
       .withWatermark("ingest_ts", "10 minutes")
       .dropDuplicatesWithinWatermark("doc_id")

@@ -25,7 +25,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("hilbert_index works from SQL and is monotone on the diagonal start") {
-    graft.osm.HilbertIndexExpr.register(spark)
+    graft.Graft.setup(spark)
     val r = spark.sql(
       "SELECT hilbert_index(0d, 0d, 0d, 0d, 1d, 1d) AS origin").head()
     assert(r.getLong(0) == 0L)

@@ -13,7 +13,7 @@ class PortableHashSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("md5_prefix28 is bit-identical to conv(substring(md5(s),1,7),16,10)") {
-    Md5Prefix28Expr.register(spark)
+    graft.Graft.setup(spark)
     // ascii, unicode, empty, whitespace, long strings
     val df = spark.range(2000).selectExpr(
       """concat(
@@ -31,7 +31,7 @@ class PortableHashSpec extends AnyFunSuite {
   }
 
   test("interpreted path agrees with codegen") {
-    Md5Prefix28Expr.register(spark)
+    graft.Graft.setup(spark)
     val df = spark.range(500).selectExpr("concat('v', cast(id as string)) as s")
     val gen = df.selectExpr("md5_prefix28(s) as h").collect().map(_.getLong(0))
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
@@ -46,7 +46,7 @@ class PortableHashSpec extends AnyFunSuite {
   }
 
   test("kernel matches on a known vector and null stays null") {
-    Md5Prefix28Expr.register(spark)
+    graft.Graft.setup(spark)
     // md5("abc") = 900150983cd24fb0...; first 7 hex digits = 0x900150 9
     assert(PortableHash.md5Prefix28(UTF8String.fromString("abc")) == 0x9001509L)
     val r = spark.sql("select md5_prefix28(cast(null as string)) as h").head()

@@ -16,7 +16,7 @@ class TextExprsSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    TextExprs.register(s)
+    graft.Graft.setup(s)
     s
   }
 
@@ -261,7 +261,7 @@ class TextExprsSpec extends AnyFunSuite {
 
   test("char_gram_hashes equals the explode/substr/md5_prefix28 form exactly") {
     val s = spark
-    graft.functions.Md5Prefix28Expr.register(s)
+    graft.Graft.setup(s)
     val k = 5; val modP = 4
     val composable = docs
       .select(col("doc_id"),

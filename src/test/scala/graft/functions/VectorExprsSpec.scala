@@ -17,7 +17,7 @@ class VectorExprsSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    VectorExprs.register(s)
+    graft.Graft.setup(s)
     s
   }
 

@@ -477,7 +477,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       budget = budget, subs = 8)
     // brute force: integer sqrt weights, integer-division targets, then
     // the per-domain (hash mod subs, hash, id) prefix
-    graft.functions.Md5Prefix28Expr.register(spark)
+    graft.Graft.setup(spark)
     val rows = docs.select(col("item"), col("dom"),
         call_function("md5_prefix28", col("body")).as("h"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -544,7 +544,7 @@ class CorpusOpsSpec extends AnyFunSuite {
     // 2.5 epochs: everyone twice, ~half a third time — brute-force check
     val out = CorpusOps.upsampleEpochs(docs, "item", "body", lit(250L))
       .select(col("item"), col("copy")).as[(Long, Long)].collect()
-    graft.functions.Md5Prefix28Expr.register(spark)
+    graft.Graft.setup(spark)
     val slots = docs.select(col("item"),
         pmod(call_function("md5_prefix28", col("body")), lit(100L)))
       .as[(Long, Long)].collect().toMap
@@ -606,7 +606,7 @@ class CorpusOpsSpec extends AnyFunSuite {
         bucket = col("b"), toks = col("t"), budget = budget, subs = 8)
       .collect().map(_.getLong(0)).toSet
     // brute force: same total order, running sum capped at the budget
-    graft.functions.Md5Prefix28Expr.register(spark)
+    graft.Graft.setup(spark)
     val rows = docs.select(col("item"), col("b"), col("t"),
         org.apache.spark.sql.functions.call_function("md5_prefix28", col("body")).as("h"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -682,7 +682,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("encodeIds: ids are vocab indexes of the wordpiece pieces, -1 on OOV") {
     import spark.implicits._
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val vocab = Seq("ab", "a", "b", "c")
     val docs = Seq((1L, "ab abc"), (2L, "xa"), (3L, "")).toDF("item", "body")
     val got = CorpusOps.encodeIds(docs, "item", "body", vocab)
@@ -724,7 +724,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("tokenizer artifact round-trips: loaded vocab/merges encode identically") {
     import spark.implicits._
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val docs = graft.Tables.documents(spark, Sf)
     val vocab = CorpusOps.wordpieceVocabWithFreqs(docs, "text", topK = 100)
     val merges = CorpusOps.trainBpeChars(docs, "text", rounds = 3)
@@ -748,7 +748,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("decodeIds round-trips: lowercased text minus whitespace, OOV visible") {
     import spark.implicits._
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val docs = graft.Tables.documents(spark, Sf)
     val vocab = CorpusOps.wordpieceVocab(docs, "text", topK = 100)
     val enc = CorpusOps.encodeIds(docs, "doc_id", "text", vocab)
@@ -769,7 +769,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("packTokenIds: exact seqLen rows, order-preserving round-trip") {
     import spark.implicits._
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val docs = graft.Tables.documents(spark, Sf)
     val vocab = CorpusOps.wordpieceVocab(docs, "text", topK = 100)
     val eos = vocab.size

@@ -36,7 +36,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
   }
 
   test("duplicate query terms never double-count, in any scorer") {
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val dup = Seq("apple", "apple", "cherry")
     val distinctT = Seq("apple", "cherry")
     val a = RetrievalOps.bm25Scores(corpus, "doc_id", "text", dup)
@@ -63,7 +63,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
 
   test("bm25ScoreColumn: term_tfs kernel path — codegen == interpreted, " +
       "equals the aggregation scorer") {
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val terms = Seq("apple", "cherry", "zzz_absent")
     val path = java.nio.file.Files.createTempDirectory("cgidx").toString + "/idx"
     RetrievalOps.indexCorpus(corpus, "doc_id", "text", path, nBuckets = 4)
@@ -610,7 +610,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
   }
 
   test("applyMerge: greedy left-to-right non-overlapping, repeated-symbol runs") {
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val docs = Seq(
       (1L, Seq("a", "a", "a", "b", "a", "b")),
       (2L, Seq("a")),
@@ -653,7 +653,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
   }
 
   test("applyBpe: a trained merge table re-tokenizes new text") {
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val train = Seq((1L, "x y z q x y"), (2L, "x y z")).toDF("doc_id", "text")
     val merges = CorpusOps.trainBpe(train, "text", rounds = 2)
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
@@ -666,7 +666,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
   }
 
   test("applyBpe table kernel equals the per-merge fold, constant plan size") {
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val docs = Seq((1L, Seq("a", "b", "c", "a", "b", "a", "a", "a")))
       .toDF("id", "ws")
     // includes a chained merge ("a b" then ("a b","c")) and an aaa-run
@@ -755,7 +755,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
     // TRAINED path (Lloyd-iterated coarse centroids + trained residual
     // codebooks, IvfAnn.trainCentroids → IvfPq.build) delivers on the
     // same corpus: the number a deployment actually tunes against.
-    graft.functions.VectorExprs.register(spark)
+    graft.Graft.setup(spark)
     // L2-NORMALIZE first — the production recipe for cosine ANN: on
     // unit vectors cosine order == L2 order, so the PQ's residual-L2
     // ADC ranking approximates the cosine ground truth it is scored
@@ -893,7 +893,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
     // scoring arrivals against the empty snapshot: every doc scores 0.0
     // (the exact kernel's denominator would be zero — the guard returns
     // the empty-corpus score instead of raising)
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     val arrivals = Seq((1L, "a a b"), (2L, "c")).toDF("doc_id", "text")
     val scored = arrivals.select(col("doc_id"),
         RetrievalOps.bm25ScoreColumn(col("text"), Seq("a"), 0L, 0L,

@@ -81,7 +81,7 @@ class RetrievalPropertySpec extends AnyFunSuite {
   }
 
   test("property: applyMerge equals a driver-side greedy reference") {
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     def refMerge(ws: Seq[String], wa: String, wb: String): Seq[String] = {
       val out = collection.mutable.ArrayBuffer.empty[String]
       var i = 0
@@ -137,7 +137,7 @@ class RetrievalPropertySpec extends AnyFunSuite {
   }
 
   test("property: wordpiece equals a driver-side greedy reference on any input") {
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     // random words over a 4-char alphabet, random vocabs of short pieces:
     // the kernel must (1) match a straightforward reference greedy
     // implementation and (2) conserve content (concat(pieces) == word)

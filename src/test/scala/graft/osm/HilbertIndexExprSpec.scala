@@ -29,7 +29,7 @@ class HilbertIndexExprSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree, and match the static kernel") {
-    HilbertIndexExpr.register(spark)
+    graft.Graft.setup(spark)
     val df = spark.range(1000).selectExpr(
       "cast(id % 37 as double) / 37 as x", "cast(id % 53 as double) / 53 as y")
     val viaExpr = df.selectExpr("x", "y", "hilbert_index(x, y, 0d, 0d, 1d, 1d) as h")
@@ -52,7 +52,7 @@ class HilbertIndexExprSpec extends AnyFunSuite {
   }
 
   test("null input yields null, not a crash") {
-    HilbertIndexExpr.register(spark)
+    graft.Graft.setup(spark)
     val r = spark.sql(
       "select hilbert_index(cast(null as double), 0d, 0d, 0d, 1d, 1d) as h")
       .head()

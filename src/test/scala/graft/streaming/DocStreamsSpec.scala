@@ -836,8 +836,7 @@ class DocStreamsSpec extends AnyFunSuite {
   }
 
   test("streaming contamination flags equal the d10 batch decontamination") {
-    graft.functions.Md5Prefix28Expr.register(spark)
-    graft.functions.TextExprs.register(spark)
+    graft.Graft.setup(spark)
     // the d10 split: benchmark = doc_id % 97 == 0, corpus = the rest
     val benchGrams = batchDocs.filter(pmod(col("doc_id"), lit(97L)) === 0)
       .select(explode(call_function("word_ngrams", col("text"), lit(3)))
