@@ -149,22 +149,29 @@ object Bench {
       if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
+    // a gate that throws in any rep is reported in `failed` and left out
+    // of both totals: its time is not the time of an answer
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val timed = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val times = (0 until reps).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case scala.util.control.NonFatal(_) => -1L }
+        try { fn(spark, sfDir).count() } catch {
+          case scala.util.control.NonFatal(_) => if (!failed.contains(name)) failed += name
+        }
         (System.nanoTime() - t0) / 1e9
       }
       (name, times)
     }
     val results = timed.map { case (n, ts) => n -> median(ts) }
     val rep1 = timed.map { case (n, ts) => n -> ts.head }
+    def sumOk(xs: Seq[(String, Double)]): Double =
+      xs.collect { case (n, v) if !failed.contains(n) => v }.sum
     // 4-decimal seconds: halves the JSON line length (84 queries) so
     // driver-side log tailing cannot clip the head of the line
     def fmt(v: Double): String = f"$v%.4f"
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = sumOk(results)
     // The reference's core workload, timed as its own metric (kept out of
     // the queries total so round-over-round totals stay comparable):
     // full monaco PBF -> sorted single-file GeoParquet conversion.
@@ -185,19 +192,21 @@ object Bench {
             (System.nanoTime() - t0) / 1e9
           } catch { case scala.util.control.NonFatal(_) => -1.0 }
         }
-        median(runs)
+        if (runs.contains(-1.0)) { failed += "pbf_monaco_convert"; -1.0 }
+        else median(runs)
       } else -1.0
     // totals appear at BOTH ends of the line: the r7 driver artifact kept
     // the line's tail and clipped its head (losing "value"), so a
     // truncated capture from either side still carries the summary
-    val coldTotal = rep1.map(_._2).sum
+    val coldTotal = sumOk(rep1)
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val qs1 = rep1.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""queries":$qs,"pbf_monaco_convert_sec":${fmt(pbfSec)},""" +
       s""""sf":"$sfDir","n_queries":${results.size},"reps":$reps,""" +
       s""""queries_rep1":$qs1,"cold_total_sec":${fmt(coldTotal)},""" +
-      s""""total_sec":${fmt(total)}}"""
+      s""""total_sec":${fmt(total)},"failed":$failedJson}"""
     // stop the session BEFORE the contract lines print: nothing Spark
     // can log late (shutdown, temp-dir cleanup) may land after the final
     // JSON line a last-line parser reads
@@ -225,7 +234,7 @@ object Bench {
       s""""total_sec":${fmt(total)},"cold_total_sec":${fmt(coldTotal)},""" +
       s""""pbf_monaco_convert_sec":${fmt(pbfSec)},""" +
       s""""queries":$qs,"queries_rep1":$qs1,""" +
-      s""""slowest":$slow,"full":"BENCH_local.json"}""")
+      s""""slowest":$slow,"failed":$failedJson,"full":"BENCH_local.json"}""")
     // belt-and-braces against driver-side stdout truncation: the same
     // line lands in the repo as a file artifact too
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_local.json"),
