@@ -69,19 +69,30 @@ private[graft] object SnapshotCache {
     if ("file" == fs.getUri.getScheme) {
       val local = java.nio.file.Paths.get(p.toUri.getPath)
       if (!java.nio.file.Files.exists(local)) return "missing"
+      // A file removed while the listing runs (between the directory
+      // read and its stat, or between the filter and the size) leaves a
+      // `:gone` entry instead of failing the probe: the fingerprint then
+      // differs from the pre-removal one, so the caller recomputes.
+      def entry(f: java.nio.file.Path, name: String): String =
+        try s"$name:${java.nio.file.Files.size(f)}:" +
+          s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
+        catch { case _: java.nio.file.NoSuchFileException => s"$name:gone" }
       if (java.nio.file.Files.isRegularFile(local))
-        return s"${local.getFileName}:${java.nio.file.Files.size(local)}:" +
-          s"${java.nio.file.Files.getLastModifiedTime(local).toMillis}"
-      val walk = java.nio.file.Files.walk(local)
+        return entry(local, local.getFileName.toString)
+      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
       try {
-        val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-        walk.filter(java.nio.file.Files.isRegularFile(_)).forEach { f =>
-          entries += s"/${local.relativize(f).toString}:" +
-            s"${java.nio.file.Files.size(f)}:" +
-            s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
+        val walk = java.nio.file.Files.walk(local)
+        try walk.filter(java.nio.file.Files.isRegularFile(_)).forEach { f =>
+          entries += entry(f, s"/${local.relativize(f).toString}")
+        } finally walk.close()
+      } catch {
+        case e: java.nio.file.NoSuchFileException => entries += s"${e.getFile}:gone"
+        case e: java.io.UncheckedIOException => e.getCause match {
+          case n: java.nio.file.NoSuchFileException => entries += s"${n.getFile}:gone"
+          case _ => throw e
         }
-        return entries.sorted.mkString("|")
-      } finally walk.close()
+      }
+      return entries.sorted.mkString("|")
     }
     if (!fs.exists(p)) "missing"
     else {

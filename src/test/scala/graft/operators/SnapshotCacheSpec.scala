@@ -248,4 +248,39 @@ class SnapshotCacheSpec extends AnyFunSuite {
       assert(paths.toSet.size == 2)
     } finally pool.shutdownNow()
   }
+
+  test("a file removed while the fingerprint walk runs gives a changed " +
+      "fingerprint, not a failed probe") {
+    val dir = java.nio.file.Files.createTempDirectory("snapwalk")
+    val files = (0 until 300).map(i => dir.resolve(f"part-$i%04d"))
+    val bytes = Array[Byte](1, 2, 3)
+    files.foreach(java.nio.file.Files.write(_, bytes))
+    val before = SnapshotCache.snapshotOf(spark, dir.toString)
+    // delete and rewrite files round-robin while the probes walk the
+    // directory, so removals land between a walk's listing and its stats
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val churn = new Thread(() => {
+      var i = 0
+      while (!stop.get()) {
+        val f = files(i % files.size)
+        java.nio.file.Files.deleteIfExists(f)
+        java.nio.file.Files.write(f, bytes)
+        i += 1
+      }
+    })
+    churn.start()
+    val probes =
+      try {
+        val deadline = System.nanoTime() + 3000000000L
+        Iterator.continually(SnapshotCache.snapshotOf(spark, dir.toString))
+          .takeWhile(_ => System.nanoTime() < deadline).toVector
+      } finally { stop.set(true); churn.join() }
+    val raced = probes.filter(_.contains(":gone"))
+    assert(raced.forall(_ != before))
+    info(s"${raced.size} of ${probes.size} probes saw a file removed mid-walk")
+    files.foreach(java.nio.file.Files.write(_, bytes))
+    val settled = SnapshotCache.snapshotOf(spark, dir.toString)
+    assert(!settled.contains(":gone"))
+    assert(SnapshotCache.snapshotOf(spark, dir.toString) == settled)
+  }
 }
