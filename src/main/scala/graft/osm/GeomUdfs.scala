@@ -129,7 +129,7 @@ object GeomUdfs extends Serializable {
         val union = polygons.collect { case ("outer", outer) =>
           val holes = inners.filter(geomWithin(_, outer))
           if (holes.isEmpty) outer else subtractHoles(outer, holes)
-        }.foldLeft(UnionAggregator.zero)(UnionAggregator.reduce)
+        }.foldLeft(null: Array[Byte])(UnionAggregator.reduce)
         if (union == null) null
         else {
           val g = UnionAggregator.finish(union)

@@ -1,7 +1,5 @@
 package graft.osm
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import org.locationtech.jts.io.{WKBReader, WKBWriter}
 import org.scalacheck.Gen
@@ -19,26 +17,20 @@ import org.scalatest.funsuite.AnyFunSuite
   *    sorts inputs by unsigned WKB bytes, so permutation invariance
   *    must be EXACT (byte-equal) for any geometry class — the property
   *    holds that by construction claim against random inputs;
-  *  - [[UnionAggregator]]: incremental pairwise union in arrival order
-  *    with canonical-form normalization in `finish`. For DISJOINT and
-  *    vertex-aligned TOUCHING parts (the OSM relation shapes) the
-  *    union passes coordinates through exactly, so bytes must be
-  *    IDENTICAL under reversed input order and 2/8-way shuffles. For
-  *    genuinely OVERLAPPING float rings the merge tree differs with
-  *    partitioning and new intersection vertices are computed floats —
-  *    the UnionAggregator scaladoc's documented ulp-drift caveat; the
+  *  - [[UnionAggregator]]: incremental pairwise union (`reduce`) in
+  *    arrival order with canonical-form normalization in `finish`. For
+  *    DISJOINT and vertex-aligned TOUCHING parts (the OSM relation
+  *    shapes) the union passes coordinates through exactly, so bytes
+  *    must be IDENTICAL under reversed input order and 2/8-way merge
+  *    trees. For genuinely OVERLAPPING float rings the merge tree
+  *    changes the union order and new intersection vertices are
+  *    computed floats — the UnionAggregator scaladoc's documented
+  *    ulp-drift caveat; the
   *    property pins the BOUND: normalized results are equalsExact
   *    within 1e-9 across configs (and the drift census is printed, so
   *    a round that sees real drift has its fixture in the log).
   */
 class RelationAssemblyPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  import spark.implicits._
 
   private val gf = new GeometryFactory()
 
@@ -122,14 +114,8 @@ class RelationAssemblyPropertySpec extends AnyFunSuite {
   }
 
   private def aggBytes(parts: Seq[Array[Byte]], nParts: Int,
-      reversed: Boolean): Seq[Byte] = {
-    val rows = (if (reversed) parts.reverse else parts).map(b => (1L, b))
-    rows.toDF("id", "geometry")
-      .repartition(nParts, col("geometry"))
-      .groupBy(col("id"))
-      .agg(UnionAggregator.union_agg(col("geometry")).as("g"))
-      .collect().head.getAs[Array[Byte]](1).toSeq
-  }
+      reversed: Boolean): Seq[Byte] =
+    UnionAggregatorSpec.union(if (reversed) parts.reverse else parts, nParts).toSeq
 
   test("UnionAggregator: disjoint and vertex-aligned touching parts " +
       "are byte-identical under reversed order and 2/8-way shuffles") {

@@ -1,28 +1,19 @@
 package graft.osm
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import org.locationtech.jts.io.WKBWriter
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[UnionAggregator]]'s reshuffle-invariance, pinned directly — the
-  * r14 64-extract scale-up caught the incremental union emitting a
-  * multi-part relation's MultiPolygon components in partition-arrival
-  * order (point sets equal, bytes different across shuffle configs);
-  * `finish` now normalizes to the JTS canonical form. This spec holds
-  * the property at the operator level: for DISJOINT parts (the OSM
-  * relation shape, where union passes coordinates through exactly) the
-  * aggregated bytes are IDENTICAL under reversed input order and under
-  * an 8-way shuffle of the rows. */
+/** [[UnionAggregator]]'s order-invariance, pinned directly — the r14
+  * 64-extract scale-up caught the incremental union emitting a
+  * multi-part relation's MultiPolygon components in arrival order
+  * (point sets equal, bytes different); `finish` now normalizes to the
+  * JTS canonical form. This spec holds the property for the fold: for
+  * DISJOINT parts (the OSM relation shape, where union passes
+  * coordinates through exactly) the union bytes are IDENTICAL under
+  * reversed input order and under a shuffled order split 8 ways. */
 class UnionAggregatorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  import spark.implicits._
+  import UnionAggregatorSpec.union
 
   private val gf = new GeometryFactory()
 
@@ -37,12 +28,7 @@ class UnionAggregatorSpec extends AnyFunSuite {
 
   private def aggBytes(rows: Seq[(Long, Array[Byte])],
       parts: Int): Map[Long, Seq[Byte]] =
-    rows.toDF("id", "geometry")
-      .repartition(parts, col("geometry"))
-      .groupBy(col("id"))
-      .agg(UnionAggregator.union_agg(col("geometry")).as("g"))
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq)
-      .toMap
+    rows.groupBy(_._1).map { case (id, rs) => id -> union(rs.map(_._2), parts).toSeq }
 
   test("disjoint-part unions are byte-identical under reversed order " +
       "and under an 8-way shuffle (the r14 multi-extract catch)") {
@@ -72,11 +58,21 @@ class UnionAggregatorSpec extends AnyFunSuite {
   test("null rows fold away; an all-null group yields null") {
     val rows = Seq((1L, square(0, 0)), (1L, null.asInstanceOf[Array[Byte]]),
       (2L, null.asInstanceOf[Array[Byte]]))
-    val out = rows.toDF("id", "geometry")
-      .groupBy(col("id"))
-      .agg(UnionAggregator.union_agg(col("geometry")).as("g"))
-      .collect().map(r => r.getLong(0) -> Option(r.getAs[Array[Byte]](1)))
-      .toMap
+    val out = rows.groupBy(_._1)
+      .map { case (id, rs) => id -> Option(union(rs.map(_._2), 1)) }
     assert(out(1L).isDefined && out(2L).isEmpty)
+  }
+}
+
+object UnionAggregatorSpec {
+  /** The union of `parts` along the merge tree a `splits`-way
+    * aggregation builds: parts dealt round-robin to `splits` buffers,
+    * each folded with `reduce` from a null buffer, the partial unions
+    * folded again, then `finish`. */
+  def union(parts: Seq[Array[Byte]], splits: Int): Array[Byte] = {
+    def fold(bs: Seq[Array[Byte]]) = bs.foldLeft(null: Array[Byte])(UnionAggregator.reduce)
+    val partials = (0 until splits).map(k =>
+      fold(parts.zipWithIndex.collect { case (b, i) if i % splits == k => b }))
+    UnionAggregator.finish(fold(partials))
   }
 }
