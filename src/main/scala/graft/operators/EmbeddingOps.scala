@@ -23,9 +23,6 @@ import graft.functions.NativeFunctions._
   */
 object EmbeddingOps {
 
-  private def cosine(a: Column, b: Column): Column =
-    vecCosine(a, b)
-
   /** Normalize to the internal (vec_id LONG, v) shape. */
   private def vecs(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     df.select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("v"))
@@ -41,7 +38,7 @@ object EmbeddingOps {
       query: Seq[Double], k: Int = 10): DataFrame =
     vecs(df, idCol, vecCol)
       .select(col("vec_id").as(idCol),
-        cosine(col("v"), qlit(query)).as("cosine"))
+        vecCosine(col("v"), qlit(query)).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
 
@@ -59,7 +56,7 @@ object EmbeddingOps {
       query: Seq[Double], predicate: Column, k: Int = 10): DataFrame = {
     df.filter(predicate)
       .select(col(idCol).cast("long").as(idCol), col(vecCol).as("v"))
-      .select(col(idCol), round(cosine(col("v"), qlit(query)), 6).as("cosine"))
+      .select(col(idCol), round(vecCosine(col("v"), qlit(query)), 6).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
   }
@@ -83,7 +80,7 @@ object EmbeddingOps {
       .withColumn("_g_bucket", SimilarityQueries.lshBucket(planes))
       .filter(col("_g_bucket") === lit(qBucket))
       .select(col("vec_id").as(idCol),
-        cosine(col("v"), qlit(query)).as("cosine"))
+        vecCosine(col("v"), qlit(query)).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
   }
@@ -120,7 +117,7 @@ object EmbeddingOps {
     IvfAnn.assignCells(emb, cents)
       .filter(col("cell").isin(qCells: _*))
       .select(col("vec_id").as(idCol),
-        cosine(col("v"), qlit(query)).as("cosine"))
+        vecCosine(col("v"), qlit(query)).as("cosine"))
       .orderBy(col("cosine").desc, col(idCol).asc)
       .limit(k)
   }
@@ -157,7 +154,7 @@ object EmbeddingOps {
     val scored = vecs(df, idCol, vecCol)
       .crossJoin(broadcast(qvecs(queries, qIdCol, qVecCol)))
       .select(col("qid"), col("vec_id").as(idCol),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
+        round(vecCosine(col("v"), col("qv")), 6).as("cosine"))
     topKPerQuery(scored, idCol, k)
   }
 
@@ -188,14 +185,14 @@ object EmbeddingOps {
     val probes = qv
       .crossJoin(broadcast(cents))
       .select(col("qid"), col("qv"), col("cid"),
-        cosine(col("qv"), col("cv")).as("sim"))
+        vecCosine(col("qv"), col("cv")).as("sim"))
       .withColumn("rk", row_number().over(wq))
       .filter(col("rk") <= nprobe)
       .select(col("qid"), col("qv"), col("cid").as("cell"))
     val scored = IvfAnn.assignCells(emb, cents)
       .join(broadcast(probes), Seq("cell"))
       .select(col("qid"), col("vec_id").as(idCol),
-        round(cosine(col("v"), col("qv")), 6).as("cosine"))
+        round(vecCosine(col("v"), col("qv")), 6).as("cosine"))
     topKPerQuery(scored, idCol, k)
   }
 
@@ -318,7 +315,7 @@ object EmbeddingOps {
     // every future batch. NaN maps to -2 (below any threshold): a
     // degenerate vector is near NOTHING, the same convention as a
     // text document too short to shingle.
-    val near = nanvl(round(cosine(col("_g_ev"), col("_g_iv")), 6),
+    val near = nanvl(round(vecCosine(col("_g_ev"), col("_g_iv")), 6),
       lit(-2.0)) >= threshold
     val hits = (if (planes <= 0) {
       // the corpus side arrives in however many splits the source gave
@@ -439,7 +436,7 @@ object EmbeddingOps {
     candidates
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        cosine(col("_g_va"), col("_g_vb")).as("cosine"))
+        vecCosine(col("_g_va"), col("_g_vb")).as("cosine"))
       .filter(col("cosine") > threshold)
   }
 }

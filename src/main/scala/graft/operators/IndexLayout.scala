@@ -54,7 +54,10 @@ private[graft] object IndexLayout {
     finally in.close()
   }
 
-  /** The generation `path` currently serves (see object doc). */
+  /** The generation `path` currently serves (see object doc). Every
+    * probe / append / compaction entry point resolves it ONCE and reads
+    * only under that root, so a flip between two of a probe's reads
+    * cannot mix generations. */
   def activeRoot(spark: SparkSession, path: String): String = {
     val cur = new org.apache.hadoop.fs.Path(s"$path/CURRENT")
     if (!fsOf(spark, cur).exists(cur)) path

@@ -30,11 +30,6 @@ object IvfAnn {
   val K = 16
   val NProbe = 2
 
-  /** Native one-pass codegen cosine ([[graft.functions.VectorKernels]];
-    * bit-identical to the zip_with+aggregate form, float32 read directly —
-    * see SimilarityQueries). */
-  private def cosine(a: Column, b: Column): Column = vecCosine(a, b)
-
   private def vectors(s: SparkSession, dir: String): DataFrame = {
     embeddings(s, dir).select(col("vec_id"), col("embedding").as("v"))
   }
@@ -44,7 +39,7 @@ object IvfAnn {
   private def centroidSims(emb: DataFrame, cents: DataFrame): DataFrame =
     emb.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("v"), col("cid"),
-        cosine(col("v"), col("cv")).as("sim"))
+        vecCosine(col("v"), col("cv")).as("sim"))
 
   /** All centroids packed into ONE array-of-structs row (still a DataFrame
     * — never collected to the driver), broadcast-joined onto every vector. */
@@ -132,7 +127,7 @@ object IvfAnn {
     cells.filter(col("vec_id") =!= 0)
       .join(broadcast(qcells), Seq("cell"))
       .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cosine"))
+      .select(col("vec_id"), round(vecCosine(col("v"), col("qv")), 6).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(10)
   }
@@ -192,25 +187,8 @@ object IvfAnn {
   def trainCentroids(emb0: DataFrame, k: Int = K, iters: Int = 5,
       portable: Boolean = false, seedSpread: Boolean = false): DataFrame = {
     // iterated map-side passes need input-side parallelism
-    // ([[ScaleUtils.spreadForCompute]] doc; no-op for tiny and for
-    // corpus-scale inputs). The spread is lazy, so PIN it for the
-    // loop's iters+1 actions and release on exit — otherwise every
-    // iteration re-runs the shuffle. An input the CALLER already
-    // persisted is NEVER re-spread: spreading would pin a SECOND
-    // corpus-scale copy next to the caller's (the r12 16.4M-rung
-    // residual spill churn — two ~8.4 GB MEMORY_AND_DISK copies at
-    // once); callers who persist own the partitioning and spread
-    // BEFORE persisting ([[IvfPq.build]] / the trainer ladders do).
-    val callerPinned =
-      emb0.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val emb = {
-      val s = if (callerPinned) emb0 else ScaleUtils.spreadForCompute(emb0)
-      if (s ne emb0)
-        s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else s
-    }
-    try trainCentroidsOn(emb, k, iters, portable, seedSpread)
-    finally { if (emb ne emb0) emb.unpersist(): Unit }
+    ScaleUtils.withSpreadPinned(emb0)(
+      trainCentroidsOn(_, k, iters, portable, seedSpread))
   }
 
   private def trainCentroidsOn(emb: DataFrame, k: Int, iters: Int,
@@ -309,7 +287,7 @@ object IvfAnn {
     lhs.join(rhs, Seq("cell"))
       .filter(col("_g_ia") < col("vec_id"))
       .select(col("vec_id"), col("cell"),
-        round(cosine(col("_g_va"), col("_g_vb")), 6).as("_g_cos"))
+        round(vecCosine(col("_g_va"), col("_g_vb")), 6).as("_g_cos"))
       .filter(col("_g_cos") > tau)
       .groupBy(col("vec_id"), col("cell"))
       .agg(count(lit(1)).as("n_similar"), max(col("_g_cos")).as("max_cos"))

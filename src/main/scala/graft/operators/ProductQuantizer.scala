@@ -40,14 +40,12 @@ object ProductQuantizer {
   val M = 4
   val K = 16
 
-  private def dot(a: Column, b: Column): Column = vecDot(a, b)
-
   /** Squared L2 via the dot expansion |a|² − 2a·b + |b|², evaluated
     * left-to-right — the exact kernel sequence the x12 oracle replays
     * with DuckDB's list_inner_product; rounded to 6 so both engines
     * agree bit-for-bit before the argmin compares. */
   private[operators] def l2sq(a: Column, b: Column): Column =
-    round(dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b), 6)
+    round(vecDot(a, a) - lit(2.0) * vecDot(a, b) + vecDot(b, b), 6)
 
   /** (pq_id, sub, sv): the corpus cut into `m` equal subvectors — a pure
     * per-row map (explode ×m of slices that are 1/m the size keeps total
@@ -122,23 +120,8 @@ object ProductQuantizer {
   def train(emb0: DataFrame, idCol: String, vecCol: String, m: Int = M,
       k: Int = K, iters: Int = 3, portable: Boolean = false): DataFrame = {
     // iterated map-side passes need input-side parallelism
-    // ([[ScaleUtils.spreadForCompute]] doc; no-op for tiny and for
-    // corpus-scale inputs). Lazy spread → PIN it across the loop's
-    // iters+1 actions, release on exit (trainCentroids convention).
-    // A caller-persisted input is NEVER re-spread — that would pin a
-    // SECOND corpus-scale copy next to the caller's (the r12
-    // 16.4M-rung residual spill churn); callers who persist spread
-    // first ([[IvfAnn.trainCentroids]] has the full rationale).
-    val callerPinned =
-      emb0.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val emb = {
-      val s = if (callerPinned) emb0 else ScaleUtils.spreadForCompute(emb0)
-      if (s ne emb0)
-        s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else s
-    }
-    try trainOn(emb, idCol, vecCol, m, k, iters, portable)
-    finally { if (emb ne emb0) emb.unpersist(): Unit }
+    ScaleUtils.withSpreadPinned(emb0)(
+      trainOn(_, idCol, vecCol, m, k, iters, portable))
   }
 
   private def trainOn(emb: DataFrame, idCol: String, vecCol: String,

@@ -495,7 +495,7 @@ object RetrievalOps {
       // DIFFERENT checkpoint throws before the replay guard can mistake
       // its restarted ids for replays (IndexLayout.checkStreamId doc)
       IndexLayout.checkStreamId(spark, path, streamId, "appendToPostings")
-      val root = activeRoot(spark, path)
+      val root = IndexLayout.activeRoot(spark, path)
       // at-least-once across COMPACTION: the one genuine replay of a
       // FOLDED batch (id == the folded high-water mark) no-ops — its
       // rows are already in the folded generation and its own appends
@@ -523,20 +523,6 @@ object RetrievalOps {
       }
     }
   }
-
-  /** The generation an index path currently SERVES ([[IndexLayout]]):
-    * `path` itself (the plain [[indexCorpus]] layout) until the first
-    * [[compactInPlace]], afterwards the `generations/g<k>` named by the
-    * `CURRENT` pointer. Every probe / append / compaction entry point
-    * resolves through this once, so a flip between two of a probe's
-    * reads cannot mix generations. */
-  private def activeRoot(spark: SparkSession, path: String): String =
-    IndexLayout.activeRoot(spark, path)
-
-  /** Highest batchId ever folded into `root` by a compaction (−1 when
-    * none): the replay guard [[appendToPostings]] consults. */
-  private def foldedMax(spark: SparkSession, root: String): Long =
-    IndexLayout.foldedMax(spark, root)
 
   /** Fold the active generation and its committed appends into a FRESH
     * generation under `path/generations/` and atomically flip the
@@ -593,7 +579,7 @@ object RetrievalOps {
     // the probe reports a truthful (if momentarily stale) snapshot
     // instead of crashing — the "safe to poll against a live loop"
     // contract in the scaladoc
-    val root = try activeRoot(spark, path)
+    val root = try IndexLayout.activeRoot(spark, path)
       catch { case _: java.io.IOException => path }
     // a status probe against a LIVE loop races compactions (generation
     // retire deletes directories between the exists() and the list):
@@ -671,7 +657,7 @@ object RetrievalOps {
     * unreadable-as-an-index and `path` untouched: the caller flips its
     * serving path only after this returns. */
   def compactTo(spark: SparkSession, path: String, dest: String): Unit = {
-    val root = activeRoot(spark, path)
+    val root = IndexLayout.activeRoot(spark, path)
     require(new org.apache.hadoop.fs.Path(dest).toUri.getPath !=
       new org.apache.hadoop.fs.Path(path).toUri.getPath &&
       new org.apache.hadoop.fs.Path(dest).toUri.getPath !=
@@ -726,7 +712,7 @@ object RetrievalOps {
       k: Int = 10, slop: Int = 0): DataFrame = {
     require(phrase.size >= 2, "phraseTopK: phrase needs >= 2 words")
     require(slop >= 0, s"phraseTopK: slop must be >= 0, got $slop")
-    val root = activeRoot(spark, path)
+    val root = IndexLayout.activeRoot(spark, path)
     val (nDocs, _, nBuckets, withPositions) = readStats(spark, root)
     require(withPositions,
       s"phraseTopK: the index at $path was built without positions — " +
@@ -919,7 +905,7 @@ object RetrievalOps {
     // a repeated term must not double-count: normalize once here so the
     // aggregation scorer, the index probe and the column scorer agree
     val terms0 = queryTerms.distinct
-    val root = activeRoot(spark, path)
+    val root = IndexLayout.activeRoot(spark, path)
     val (nDocs, sumDl, nBuckets, withPositions) = readStats(spark, root)
     if (nDocs == 0L) return emptyResult(spark, "id BIGINT, bm25 DOUBLE")
     val buckets = terms0.map(termBucket(_, nBuckets)).distinct
@@ -954,7 +940,7 @@ object RetrievalOps {
   def bm25TopKIndexedBatch(spark: SparkSession, path: String,
       queries: DataFrame, qIdCol: String, termsCol: String, k: Int = 10,
       k1: Double = K1, b: Double = B): DataFrame = {
-    val root = activeRoot(spark, path)
+    val root = IndexLayout.activeRoot(spark, path)
     val (nDocs, sumDl, nBuckets, withPositions) = readStats(spark, root)
     if (nDocs == 0L) return emptyResult(spark,
       "query_id BIGINT, rank BIGINT, id BIGINT, bm25 DOUBLE")
@@ -996,7 +982,7 @@ object RetrievalOps {
     * partition-pruned driver query over the query terms' buckets only. */
   def frozenStats(spark: SparkSession, path: String,
       queryTerms: Seq[String]): (Long, Long, Map[String, Long]) = {
-    val root = activeRoot(spark, path)
+    val root = IndexLayout.activeRoot(spark, path)
     val (nDocs, sumDl, nBuckets, withPositions) = readStats(spark, root)
     if (nDocs == 0L) return (0L, 0L, Map.empty)
     val buckets = queryTerms.map(termBucket(_, nBuckets)).distinct
@@ -1137,7 +1123,6 @@ object RetrievalOps {
       scoreBatch: Seq[(String, String)] => Seq[Double] = stubPairScorer,
       batchSize: Int = 32): DataFrame = {
     require(batchSize >= 1, s"scoreWithModel: batchSize must be >= 1")
-    val s = cands.sparkSession
     val fn = scoreBatch
     val bs = batchSize
     cands.select(col(qidCol).cast("long"), col(docIdCol).cast("long"),
@@ -1235,7 +1220,7 @@ object RetrievalOps {
     * stats commit marker written LAST. */
   private[operators] def deriveMod5SplitIndex(s: SparkSession,
       fullIndexPath: String, nBase: Long, out: String): Unit = {
-    val fullRoot = activeRoot(s, fullIndexPath)
+    val fullRoot = IndexLayout.activeRoot(s, fullIndexPath)
     val base = readBaseStats(s, fullRoot)
     val nBuckets = base.getAs[Int]("n_buckets")
     val nFull = base.getAs[Long]("n")

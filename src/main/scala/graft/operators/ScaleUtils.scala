@@ -128,10 +128,9 @@ object ScaleUtils {
     *
     * The repartition is LAZY — each ACTION on the result re-runs it —
     * so callers driving several actions must persist the result while
-    * they iterate ([[graft.operators.IvfAnn.trainCentroids]] /
-    * [[ProductQuantizer.train]] do: persist when `ne` the input,
-    * unpersist on exit). That pinned copy is the reason the trigger
-    * demands at least 2× core underuse (`parts * 2 <= cores`), not mere
+    * they iterate ([[withSpreadPinned]] does). That pinned copy is the
+    * reason the trigger demands at least 2× core underuse
+    * (`parts * 2 <= cores`), not mere
     * inequality: every trigger costs a SECOND materialized corpus-scale
     * frame in the caller, and below 2× the double-buffering costs more
     * than the reclaimed cores return. Measured at 8.2M vectors / 8 GB
@@ -163,5 +162,25 @@ object ScaleUtils {
       df.sparkSession, bytes, fired)
     if (fired) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
+  }
+
+  /** `body` over `df` [[spreadForCompute spread]] for iterated compute
+    * (the trainers' iters+1 actions): a spread frame is PINNED for the
+    * body and released on exit — the spread is lazy, so otherwise every
+    * action re-runs the shuffle. An input the CALLER already persisted
+    * is NEVER re-spread: spreading would pin a SECOND corpus-scale copy
+    * next to the caller's (the r12 16.4M-rung residual spill churn —
+    * two ~8.4 GB MEMORY_AND_DISK copies at once); callers who persist
+    * own the partitioning and spread BEFORE persisting ([[IvfPq.build]]
+    * / the trainer ladders do). */
+  def withSpreadPinned[T](df: DataFrame)(body: DataFrame => T): T = {
+    val spread =
+      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+      else spreadForCompute(df)
+    if (spread eq df) body(df)
+    else {
+      spread.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try body(spread) finally spread.unpersist(): Unit
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables._
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.NativeFunctions._
@@ -34,27 +33,11 @@ object SimilarityQueries {
   val HashPrime = 1000000007L
   val EmbDim = 64      // embeddings table contract (TESTDATA.md)
 
-  /** words(text): whitespace-split, lowercased, empties dropped — the
-    * native one-pass kernel ([[graft.functions.TextKernels]]; bit-identical
-    * to `filter(split(lower(t), "\\s+"), w => length(w) > 0)`, which
-    * stacked interpreted HOF lambdas per document). */
-  private def words(t: Column): Column = splitWords(t)
-
   /** Word 3-gram shingles straight from the text column (one kernel pass:
     * split + sliding join — replaces the words-array materialization plus
     * the transform/sequence/slice/concat_ws lambda stack). */
   private def shingles(t: Column): Column =
     wordNgrams(t, lit(3))
-
-  /** Portable 28-bit hash: first 7 hex digits of md5, read as an integer.
-    * Identical in any engine with md5 (`('0x' || substr(md5(s),1,7))::BIGINT`
-    * in DuckDB) — the property the correctness oracle relies on. Realized
-    * as the custom codegen expression [[graft.functions.Md5Prefix28Expr]]:
-    * the built-in md5() resolves a MessageDigest per row through the
-    * synchronized JCA provider lookup, which serializes all 32 executor
-    * threads on one lock. */
-  private def phash(c: Column): Column =
-    md5Prefix28(c)
 
   /** Affine minhash permutation family over the 28-bit shingle hash.
     * Coefficients stay < 2^40 so the arithmetic never overflows a signed
@@ -65,73 +48,25 @@ object SimilarityQueries {
   // -------------------------------------------------- shingle boundary ----
 
   /** doc_id + shingle hashes, materialized ONCE per input snapshot as a
-    * cached session temp view. The input is repartitioned by doc_id BEFORE
-    * shingling: the shuffle then carries the raw text (~300 B/doc) instead
-    * of the exploded hashes (~50 rows × 16 B/doc), and — because hash
-    * partitioning survives projections and generators — every downstream
-    * groupBy(doc_id) (signature build, x4 set build) runs exchange-free on
-    * the cached co-partitioned rows. Duplicate shingles are NOT removed
-    * here: both consumers are duplicate-insensitive (min() for minhash,
-    * collect_set() for exact-Jaccard sets), so a distinct would add a
-    * whole shuffle+agg stage for nothing.
-    *
-    * Lifecycle: storage is owned by Spark's CacheManager (cleared with the
-    * session — nothing pins the SparkSession process-globally), and the
-    * cache key includes a snapshot of the input file listing
-    * (name/size/mtime), so a changed `dir` within one session recomputes
-    * instead of serving stale rows. */
-  private val shingleSnapshots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** One lock per (session, view) key: concurrent queries on the SAME view
-    * must not both build (or worse, one uncache while the other resolves),
-    * but unrelated sessions/dirs proceed independently. Lock order is
-    * acyclic (candidate-pairs → shingles, never the reverse), so nested
-    * builds cannot deadlock; each ReentrantLock allows same-thread
-    * re-entry. */
-  private val viewLocks =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.locks.ReentrantLock]()
-
-  /** Build-or-reuse a snapshot-keyed cached temp view, serialized per
-    * (session, view) key (shared with [[TextQueries]]' tf view). */
-  private[operators] def cachedView(s: SparkSession, dir: String, prefix: String)(
-      build: => DataFrame): DataFrame = {
-      // collision-resistant view name: 32-bit hashCode collisions across two
-      // dirs in one session would silently share the cached view
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-      val view = s"graft_${prefix}_$digest"
-      val key = s"${System.identityHashCode(s)}#$view"
-      val lock = viewLocks.computeIfAbsent(key,
-        _ => new java.util.concurrent.locks.ReentrantLock())
-      lock.lock()
-      try {
-        val snap = inputSnapshot(s, dir)
-        // isCached guards against an external spark.catalog.clearCache()
-        // (e.g. a bench clearing warmup state): the view would still
-        // exist but serve uncached recomputes forever — rebuild instead
-        val stale = snap != shingleSnapshots.get(key) ||
-          !(s.catalog.tableExists(view) && s.catalog.isCached(view))
-        if (stale || !s.catalog.tableExists(view)) {
-          if (s.catalog.tableExists(view)) s.catalog.uncacheTable(view)
-          build.createOrReplaceTempView(view)
-          s.catalog.cacheTable(view)
-          shingleSnapshots.put(key, snap)
-        }
-        s.table(view)
-      } finally lock.unlock()
-  }
-
+    * cached session temp view ([[SnapshotCache.view]]). The input is
+    * repartitioned by doc_id BEFORE shingling: the shuffle then carries
+    * the raw text (~300 B/doc) instead of the exploded hashes (~50 rows ×
+    * 16 B/doc), and — because hash partitioning survives projections and
+    * generators — every downstream groupBy(doc_id) (signature build, x4
+    * set build) runs exchange-free on the cached co-partitioned rows.
+    * Duplicate shingles are NOT removed here: both consumers are
+    * duplicate-insensitive (min() for minhash, collect_set() for
+    * exact-Jaccard sets), so a distinct would add a whole shuffle+agg
+    * stage for nothing. */
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame = {
-    cachedView(s, dir, "shingles") {
+    SnapshotCache.view(s, "shingles", s"$dir/documents.parquet") {
       documents(s, dir)
         .repartition(col("doc_id"))
         // explode BEFORE hashing: expressions inside higher-order-function
         // lambdas are interpreted per element; hashing the exploded column
         // keeps the md5 kernel inside whole-stage codegen
         .select(col("doc_id"), explode(shingles(col("text"))).as("sh"))
-        .select(col("doc_id"), phash(col("sh")).as("shash"))
+        .select(col("doc_id"), md5Prefix28(col("sh")).as("shash"))
     }
   }
 
@@ -140,7 +75,7 @@ object SimilarityQueries {
     * and x8 (dedup clustering): the signature build and the band self-join
     * run once, not once per query. */
   private[graft] def candidatePairs(s: SparkSession, dir: String): DataFrame =
-    cachedView(s, dir, "lshpairs") {
+    SnapshotCache.view(s, "lshpairs", s"$dir/documents.parquet") {
       lshPairs(cachedSignatures(s, dir))
     }
 
@@ -148,20 +83,11 @@ object SimilarityQueries {
     * self-join reads its input twice, and the 16-min aggregation must not
     * run once per side (one corpus pass, not two). Cached — not an eager
     * localCheckpoint — so lifecycle stays with the session's CacheManager
-    * like every other cut here (lock order pairs → sigs → shingles,
-    * acyclic). */
+    * like every other cut here. */
   private[graft] def cachedSignatures(s: SparkSession, dir: String): DataFrame =
-    cachedView(s, dir, "sigs") {
+    SnapshotCache.view(s, "sigs", s"$dir/documents.parquet") {
       minhashSignaturesFrom(docShingles(s, dir))
     }
-
-  /** Fingerprint of the documents input: file name + length + mtime —
-    * delegated to [[SnapshotCache.snapshotOf]] (one listing
-    * implementation; local paths take its fast java.nio walk, and a
-    * directory corpus now fingerprints recursively like every other
-    * snapshot key). */
-  private def inputSnapshot(s: SparkSession, dir: String): String =
-    SnapshotCache.snapshotOf(s, new Path(dir, "documents.parquet").toString)
 
   // --------------------------------------------------------- minhash ----
 
@@ -209,7 +135,7 @@ object SimilarityQueries {
         .as(Seq("band", "band_key")))
       // hash AFTER the explode so the md5 kernel stays in whole-stage
       // codegen (inside the transform lambda it would run interpreted)
-      .withColumn("band_key", phash(col("band_key")))
+      .withColumn("band_key", md5Prefix28(col("band_key")))
   }
 
   private def sigAgreement(a: Column, b: Column, numPerms: Int): Column =
@@ -436,12 +362,12 @@ object SimilarityQueries {
     * snapshot-keyed cache makes that one corpus pass, same as the
     * minhash-signature cut). */
   private def simhashes(s: SparkSession, dir: String): DataFrame =
-    cachedView(s, dir, "simhash")(simhashesUncached(s, dir))
+    SnapshotCache.view(s, "simhash", s"$dir/documents.parquet")(simhashesUncached(s, dir))
 
   private def simhashesUncached(s: SparkSession, dir: String): DataFrame = {
     val wordsDf = documents(s, dir)
-      .select(col("doc_id"), explode(words(col("text"))).as("w"))
-      .withColumn("wh", phash(col("w")))
+      .select(col("doc_id"), explode(splitWords(col("text"))).as("w"))
+      .withColumn("wh", md5Prefix28(col("w")))
     val bitAggs = (0 until 16).map { b =>
       sum(when(shiftright(col("wh"), b).bitwiseAND(1) === 1, 1)
         .otherwise(-1)).as(s"b$b")
@@ -491,16 +417,6 @@ object SimilarityQueries {
 
   // ------------------------------------------------------- embeddings ----
 
-  /** dot / norm via the native one-pass codegen kernels
-    * ([[graft.functions.VectorKernels]] — same left-to-right IEEE sequence
-    * as the zip_with+aggregate form they replaced, so oracle hashes are
-    * unchanged). The kernels
-    * read float32 embeddings directly — no per-element cast column. */
-  private def dot(a: Column, b: Column): Column =
-    vecDot(a, b)
-
-  private def norm(a: Column): Column = vecNorm(a)
-
   /** Deterministic ±1 hyperplane for LSH plane `p` over [[EmbDim]] dims:
     * sign(p,d) = parity of md5("p:d"). Computed ONCE driver-side and baked
     * into the plan as a literal array — the executor-side projection is a
@@ -518,7 +434,7 @@ object SimilarityQueries {
       .mkString("[", ",", "]::DOUBLE[]")
 
   private def signProjection(p: Int): Column =
-    dot(col("v"), typedLit(planeSigns(p).toSeq))
+    vecDot(col("v"), typedLit(planeSigns(p).toSeq))
 
   private[operators] def lshBucket(nPlanes: Int, planeOffset: Int = 0): Column =
     // 0 planes = one bucket holding everything (exact all-pairs mode).
@@ -542,7 +458,7 @@ object SimilarityQueries {
     emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
-        round(dot(col("v"), col("qv")) / (norm(col("v")) * norm(col("qv"))), 6)
+        round(vecDot(col("v"), col("qv")) / (vecNorm(col("v")) * vecNorm(col("qv"))), 6)
           .as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(10)
@@ -575,7 +491,7 @@ object SimilarityQueries {
     bucketed.filter(col("vec_id") =!= 0)
       .join(broadcast(q), Seq("bucket"))
       .select(col("vec_id"),
-        round(dot(col("v"), col("qv")) / (norm(col("v")) * norm(col("qv"))), 6)
+        round(vecDot(col("v"), col("qv")) / (vecNorm(col("v")) * vecNorm(col("qv"))), 6)
           .as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(10)
@@ -588,7 +504,7 @@ object SimilarityQueries {
     val emb = embeddings(s, dir).select(col("vec_id"),
       col("embedding").as("v"))
     val b = emb.withColumn("bucket", lshBucket(6))
-      .withColumn("n", norm(col("v")))
+      .withColumn("n", vecNorm(col("v")))
     val l = b.select(col("bucket"), col("vec_id").as("id_a"),
       col("v").as("va"), col("n").as("na"))
     val r = b.select(col("bucket"), col("vec_id").as("id_b"),
@@ -596,7 +512,7 @@ object SimilarityQueries {
     l.join(r, Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
+        round(vecDot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
           .as("cosine"))
       .filter(col("cosine") > 0.4)
       .orderBy("id_a", "id_b")

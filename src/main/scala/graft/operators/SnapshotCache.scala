@@ -1,32 +1,36 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared (session, corpus-snapshot) → persisted-index cache backing the
+/** Shared (session, corpus-snapshot) → cached-artifact store backing the
   * build-once / probe-many serving gates (x15 IVF-PQ, x21/x27 BM25
-  * postings, x23 positional postings).
+  * postings, x23 positional postings) and the cached intermediate views
+  * several gates share (shingles, signatures, LSH pairs, simhashes, term
+  * frequencies, d26's annotated corpus). Three forms over one key and
+  * one build loop: [[memo]] (a driver value), [[resolve]] (a persisted
+  * index directory) and [[view]] (a cached session temp view).
   *
-  * One copy of the snapshot-key logic instead of three divergent ones:
   *  - the session key is a per-session random UUID held in a weak map
-  *    (`System.identityHashCode` — the previous key — can collide after
-  *    GC reuses an address);
-  *  - the corpus snapshot is the input's file listing (name/len/mtime)
-  *    taken through the HADOOP FileSystem, so it is correct for
-  *    `hdfs://`/`s3a://` corpora too — a `java.io.File` probe (the
-  *    previous implementation) reports a remote path as missing and
-  *    would pin the first index forever, silently serving stale
-  *    results on exactly the cluster deployments this layer targets
-  *    (spec: SnapshotCacheSpec rebuild-on-remote-style-URI case);
-  *  - a rebuild DELETES the replaced index's temp directory — a
-  *    long-lived process re-indexing over a changing corpus holds at
-  *    most one live index per (session, purpose), not one per snapshot
-  *    ever seen;
+  *    (an identity hash can collide after GC reuses an address);
+  *  - the corpus snapshot is the input's file listing taken through the
+  *    HADOOP FileSystem, so it is correct for `hdfs://`/`s3a://` corpora
+  *    too — a `java.io.File` probe reports a remote path as missing and
+  *    would pin the first artifact forever (spec: SnapshotCacheSpec
+  *    rebuild-on-remote-style-URI case). Its granularity is one
+  *    (relative path, length, mtime-in-ms) triple per leaf file: a
+  *    rewrite that keeps a file's length and lands within the same
+  *    mtime tick (one millisecond, or the filesystem's coarser
+  *    timestamp resolution) is NOT seen, and the stale artifact is
+  *    served until the listing moves;
+  *  - a rebuild releases what it replaces (deletes the index directory,
+  *    uncaches the view) — a long-lived process over a changing corpus
+  *    holds at most one live artifact per (session, purpose, input);
   *  - builds run OUTSIDE any map lock: the per-key cell installs a
   *    future under `compute` (cheap), then the installing thread runs
   *    the Spark build with no ConcurrentHashMap bin held — unrelated
   *    keys that hash to the same bin never block behind a minutes-long
-  *    index build, and a reentrant resolve/memo reached from inside a
-  *    build (e.g. a build whose oracle-side helper memoizes a
+  *    index build, and a build that reaches another key (the LSH-pairs
+  *    view reading the signatures view, an index build memoizing a
   *    vocabulary over the same corpus) recurses safely instead of
   *    throwing ConcurrentHashMap's "recursive update".
   */
@@ -44,6 +48,9 @@ private[graft] object SnapshotCache {
       if (prior != null) prior else fresh
     }
   }
+
+  private def keyOf(s: SparkSession, purpose: String, inputPath: String) =
+    s"${sessionId(s)}#$purpose#$inputPath"
 
   /** The file-listing fingerprint of a parquet path (file or directory),
     * resolved through the Hadoop FileSystem so remote URIs fingerprint
@@ -138,8 +145,10 @@ private[graft] object SnapshotCache {
   }
 
   /** The generic install-then-build-outside-the-lock loop shared by
-    * [[memo]] and [[resolve]]. Exactly one thread per (key, snapshot)
-    * runs `make`; losers await the winner's future. A failed build
+    * [[memo]], [[resolve]] and [[view]]. Exactly one thread per (key,
+    * snapshot) runs `make`; losers await the winner's future. A built
+    * value that is no longer `live` (a view whose cache was cleared
+    * from outside) is replaced like a changed snapshot. A failed build
     * removes its cell so the next call retries instead of caching the
     * exception forever. `onReplace` runs on the superseded cell's value
     * (outside the lock, winner only) AFTER the replacement build
@@ -151,10 +160,12 @@ private[graft] object SnapshotCache {
     * that need overlap-safe swaps own their paths and use compactTo's
     * write-to-new-dir-then-flip discipline instead. */
   private def throughCells[V](map: java.util.concurrent.ConcurrentHashMap[String, Cell[V]],
-      key: String, snap: String)(onReplace: V => Unit)(make: => V): V = {
+      key: String, snap: String, live: V => Boolean = (_: V) => true)(
+      onReplace: V => Unit)(make: => V): V = {
     while (true) {
       val cur = map.get(key)
-      if (cur != null && cur.snapshot == snap) {
+      if (cur != null && cur.snapshot == snap && (!cur.fut.isDone ||
+          cur.fut.isCompletedExceptionally || live(cur.fut.join()))) {
         if (!cur.fut.isDone && building.get.contains(key))
           throw new IllegalStateException(
             s"reentrant SnapshotCache build of '$key': the build body " +
@@ -220,10 +231,43 @@ private[graft] object SnapshotCache {
     * unchanged, recomputed when it moves. Values must be bounded (they
     * live on the driver for the session). */
   def memo[T <: AnyRef](s: SparkSession, purpose: String,
-      inputPath: String)(compute: => T): T = {
-    val key = s"${sessionId(s)}#$purpose#$inputPath"
-    val snap = snapshotOf(s, inputPath)
-    throughCells(memos, key, snap)(_ => ())(compute).asInstanceOf[T]
+      inputPath: String)(compute: => T): T =
+    throughCells(memos, keyOf(s, purpose, inputPath),
+      snapshotOf(s, inputPath))(_ => ())(compute).asInstanceOf[T]
+
+  private val views =
+    new java.util.concurrent.ConcurrentHashMap[String, Cell[String]]()
+
+  /** `build` as a cached temp view of the caller's session, built once
+    * per (session, purpose, inputPath) while the input's listing is
+    * unchanged. The build is a LAZY cache registration (`cacheTable`):
+    * the first action over the result fills the cache. The cell holds
+    * only the view NAME — the view and its cache entry live in the
+    * session's catalog and Spark's CacheManager, so nothing here pins
+    * the session. A view that no longer exists or is no longer cached
+    * (an external `spark.catalog.clearCache()`) is rebuilt.
+    *
+    * A rebuild reuses the name, so the superseded view is released
+    * inside the build, BEFORE its replacement is registered (after it,
+    * as `onReplace` runs, the release would hit the new view).
+    * `uncacheTable` cascades: views cached over the superseded one
+    * (signatures over shingles) are released too. */
+  def view(s: SparkSession, purpose: String, inputPath: String)(
+      build: => DataFrame): DataFrame = {
+    // 64 bits of md5: a 32-bit hashCode could collide across two inputs
+    // of one session and silently share a view
+    val name = s"graft_${purpose}_" + java.security.MessageDigest
+      .getInstance("MD5").digest(inputPath.getBytes("UTF-8"))
+      .take(8).map(b => f"$b%02x").mkString
+    s.table(throughCells(views, keyOf(s, purpose, inputPath),
+        snapshotOf(s, inputPath),
+        (v: String) => s.catalog.tableExists(v) && s.catalog.isCached(v))(
+        _ => ()) {
+      if (s.catalog.tableExists(name)) s.catalog.uncacheTable(name)
+      build.createOrReplaceTempView(name)
+      s.catalog.cacheTable(name)
+      name
+    })
   }
 
   private final case class Entry(tmpRoot: String, path: String)
@@ -266,9 +310,8 @@ private[graft] object SnapshotCache {
     * where any still-lazy frame over the old index was already stale. */
   def resolve(s: SparkSession, purpose: String, inputPath: String)(
       build: String => Unit): String = {
-    val key = s"${sessionId(s)}#$purpose#$inputPath"
-    val snap = snapshotOf(s, inputPath)
-    throughCells(entries, key, snap)(old => deletePath(s, old.tmpRoot)) {
+    throughCells(entries, keyOf(s, purpose, inputPath),
+        snapshotOf(s, inputPath))(old => deletePath(s, old.tmpRoot)) {
       val base = workBase(s)
       val fs = base.getFileSystem(s.sessionState.newHadoopConf())
       val root = fs.makeQualified(new org.apache.hadoop.fs.Path(base,

@@ -364,12 +364,12 @@ object TextQueries {
   /** Per-doc term frequencies, materialized ONCE per input snapshot: the
     * tf relation feeds both d14's score join and its document-frequency
     * statistic, and Spark does not reuse common subplans — uncached, the
-    * corpus would be scanned and exploded twice. Same snapshot-keyed
-    * cached-view mechanism as the shingle family; the cache preserves the
+    * corpus would be scanned and exploded twice. A snapshot-keyed cached
+    * view ([[SnapshotCache.view]]), like the shingle family; it keeps the
     * hash(doc_id) partitioning, so the downstream per-doc window needs no
     * further exchange. */
   private def docTermFreqs(s: SparkSession, dir: String): DataFrame = {
-    SimilarityQueries.cachedView(s, dir, "tf") {
+    SnapshotCache.view(s, "tf", s"$dir/documents.parquet") {
       documents(s, dir)
         .repartition(col("doc_id"))
         .select(col("doc_id"),
@@ -480,7 +480,8 @@ object TextQueries {
         // one snapshot-keyed cached view of the scrubbed + quality-
         // annotated frame: the scrub regexes and repetition stats run
         // once, not once per downstream dedup/decontamination branch
-        materialize = SimilarityQueries.cachedView(s, dir, "curateq")(_))
+        materialize =
+          SnapshotCache.view(s, "curateq", s"$dir/documents.parquet")(_))
       .select(col("doc_id").cast("long").as("doc_id"),
         coalesce(col("reject_reason"), lit("kept")).as("stage"))
       .orderBy("doc_id")
@@ -517,13 +518,13 @@ object TextQueries {
   def d42AdmitFromStore(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir)
     // the store side comes from the session's snapshot-keyed signature
-    // view (the x2/x4/x8 cachedView convention) filtered to the store
-    // subset: signatures are per-doc deterministic (identical
-    // word_ngrams + md5_prefix28 + 16-min pipeline), so
-    // filter∘signatures ≡ signatures∘filter — and a serving deployment
-    // holds exactly this precomputed store, which is the gate's own
-    // story ("admission never reads the corpus text"). The digest
-    // column and the BATCH side still compute fresh per call.
+    // view (shared with x2/x4/x8) filtered to the store subset:
+    // signatures are per-doc deterministic (identical word_ngrams +
+    // md5_prefix28 + 16-min pipeline), so filter∘signatures ≡
+    // signatures∘filter — and a serving deployment holds exactly this
+    // precomputed store, which is the gate's own story ("admission
+    // never reads the corpus text"). The digest column and the BATCH
+    // side still compute fresh per call.
     val store = docs.filter(col("doc_id") % 5 =!= 0)
       .select(col("doc_id").cast("long").as("doc_id"),
         md5(col("text")).as("digest"))

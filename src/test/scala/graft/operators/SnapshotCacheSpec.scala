@@ -283,4 +283,115 @@ class SnapshotCacheSpec extends AnyFunSuite {
     assert(!settled.contains(":gone"))
     assert(SnapshotCache.snapshotOf(spark, dir.toString) == settled)
   }
+
+  /** A view over the corpus at `uri` whose builds `builds` counts. */
+  private def countedView(s: SparkSession, purpose: String, uri: String,
+      builds: java.util.concurrent.atomic.AtomicInteger) =
+    SnapshotCache.view(s, purpose, uri) {
+      builds.incrementAndGet()
+      s.read.parquet(uri).selectExpr("v * 2 AS w")
+    }
+
+  private def viewCorpus(prefix: String, n: Long): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    writeCorpus(s"$dir/v.parquet", 0L until n)
+    s"file:$dir/v.parquet"
+  }
+
+  test("view: a second call in one session does not rebuild") {
+    val uri = viewCorpus("snapview", 10L)
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val first = countedView(spark, "viewtest", uri, builds)
+    assert(first.count() == 10L && builds.get() == 1)
+    assert(first.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the view must be registered as cached")
+    val second = countedView(spark, "viewtest", uri, builds)
+    assert(second.count() == 10L && builds.get() == 1)
+  }
+
+  test("view: a changed corpus rebuilds and the old frame is no longer cached") {
+    val uri = viewCorpus("snapviewchg", 10L)
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    assert(countedView(spark, "viewchg", uri, builds).count() == 10L)
+    // the first action filled the lazy cache: its blocks are one RDD
+    val oldRdds = sc.getPersistentRDDs.keySet -- before
+    assert(oldRdds.nonEmpty, "the first action must fill the view's cache")
+    writeCorpus(uri.stripPrefix("file:"), 0L until 15L)
+    val fresh = countedView(spark, "viewchg", uri, builds)
+    assert(builds.get() == 2, s"a changed corpus must rebuild once, got ${builds.get()}")
+    assert((sc.getPersistentRDDs.keySet & oldRdds).isEmpty,
+      "the superseded view's cache must be released")
+    assert(fresh.count() == 15L, "the rebuilt view must serve the new corpus")
+    assert(fresh.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  test("view: a rebuild also releases views cached over the superseded one") {
+    val uri = viewCorpus("snapviewcas", 8L)
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val outer = SnapshotCache.view(spark, "viewcas_outer", uri) {
+      countedView(spark, "viewcas_inner", uri, builds).filter("w > 2")
+    }
+    assert(outer.count() == 6L)
+    val oldRdds = sc.getPersistentRDDs.keySet -- before
+    assert(oldRdds.size == 2, "both views' caches must be filled")
+    writeCorpus(uri.stripPrefix("file:"), 0L until 12L)
+    countedView(spark, "viewcas_inner", uri, builds)
+    assert(builds.get() == 2)
+    assert((sc.getPersistentRDDs.keySet & oldRdds).isEmpty,
+      "rebuilding the inner view must release the outer view cached over it")
+  }
+
+  test("view: after an external clearCache the next call rebuilds, cached") {
+    val uri = viewCorpus("snapviewclr", 6L)
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    assert(countedView(spark, "viewclr", uri, builds).count() == 6L)
+    spark.catalog.clearCache()
+    val again = countedView(spark, "viewclr", uri, builds)
+    assert(builds.get() == 2, "a cleared view must be rebuilt")
+    assert(again.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the rebuilt view must be cached again")
+    assert(again.count() == 6L)
+    countedView(spark, "viewclr", uri, builds)
+    assert(builds.get() == 2)
+  }
+
+  test("view: two sessions keep separate views") {
+    val uri = viewCorpus("snapviewses", 4L)
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val other = spark.newSession()
+    val a = countedView(spark, "viewses", uri, builds)
+    val b = countedView(other, "viewses", uri, builds)
+    assert(builds.get() == 2, "each session builds its own view")
+    assert(a.count() == 4L && b.count() == 4L)
+    val name = a.queryExecution.analyzed.collectFirst {
+      case v: org.apache.spark.sql.catalyst.plans.logical.View =>
+        v.desc.identifier.table
+    }.get
+    assert(spark.catalog.tableExists(name) && other.catalog.tableExists(name))
+    assert(!spark.newSession().catalog.tableExists(name),
+      "the view lives in the calling session's catalog only")
+    countedView(spark, "viewses", uri, builds)
+    countedView(other, "viewses", uri, builds)
+    assert(builds.get() == 2, "each session reuses its own view")
+  }
+
+  test("view: concurrent callers of one key build once") {
+    val uri = viewCorpus("snapviewconc", 7L)
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futs = (0 until 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Long] {
+          def call(): Long = countedView(spark, "viewconc", uri, builds).count()
+        })
+      }
+      val counts = futs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(counts.forall(_ == 7L))
+      assert(builds.get() == 1, s"one key → exactly one build, got ${builds.get()}")
+    } finally pool.shutdownNow()
+  }
 }

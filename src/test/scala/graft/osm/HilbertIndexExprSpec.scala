@@ -14,11 +14,6 @@ class HilbertIndexExprSpec extends AnyFunSuite {
 
   test("kernel walks the curve contiguously (adjacent cells differ by 1 step)") {
     // locality property: successive curve positions are neighbors in space
-    val n = 64
-    val pts = (0 until n * n).map { d =>
-      // invert via brute scan on a small grid
-      d
-    }
     // directly: d(0,0)=0; curve covers all cells exactly once at any order
     val seen = scala.collection.mutable.Set.empty[Long]
     for (i <- 0 until 256; j <- 0 until 256) {
