@@ -1426,8 +1426,7 @@ object CorpusOps {
     *    filesystem on a real cluster); default is a driver temp dir,
     *    correct for local mode. All cuts are removed in `finally`. */
   private def trainOnSymbols(cur0: DataFrame, rounds: Int,
-      materializeEvery: Int = BpeMaterializeEvery,
-      cutDir: Option[String] = None,
+      materializeEvery: Int, cutDir: Option[String],
       onRound: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
     require(rounds >= 1, s"trainBpe: rounds must be >= 1, got $rounds")
     require(materializeEvery >= 1,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.NativeFunctions._
 
@@ -40,11 +40,6 @@ object IvfAnn {
     emb.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("v"), col("cid"),
         vecCosine(col("v"), col("cv")).as("sim"))
-
-  /** All centroids packed into ONE array-of-structs row (still a DataFrame
-    * — never collected to the driver), broadcast-joined onto every vector. */
-  private def packedCentroids(cents: DataFrame): DataFrame =
-    cents.agg(collect_list(struct(col("cid"), col("cv"))).as("cs"))
 
   /** Centroids packed FLAT for the [[graft.functions.VectorKernels
     * .nearestCell]] kernel: one row of (cids in cid order, their
@@ -192,7 +187,7 @@ object IvfAnn {
   }
 
   private def trainCentroidsOn(emb: DataFrame, k: Int, iters: Int,
-      portable: Boolean, seedSpread: Boolean = false): DataFrame = {
+      portable: Boolean, seedSpread: Boolean): DataFrame = {
     // portable = ORACLE-REPLAYABLE training: every decision the loop
     // makes quantizes to 6 decimals first — assignments argmax on
     // round(cosine, 6) (tie → min cid) and centroid updates store the

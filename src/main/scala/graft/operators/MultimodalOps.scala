@@ -131,8 +131,6 @@ object MultimodalOps {
     * the same plumbing; the default derives features from bytes. */
   def extractFeatures(media: DataFrame,
       featurize: () => MediaFeaturizer = stubFeaturizer): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
     media.select(col("media_id"), col("kind"), col("payload"))
       .mapPartitions(decodeBatch(featurize))(
         org.apache.spark.sql.Encoders.product[MediaFeature])

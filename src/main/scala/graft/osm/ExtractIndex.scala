@@ -1,6 +1,6 @@
 package graft.osm
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.osm.ExtractCover.Extract
 import org.apache.spark.sql.SparkSession
 import org.locationtech.jts.geom.{Geometry, Polygon}

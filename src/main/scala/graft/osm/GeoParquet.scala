@@ -82,9 +82,9 @@ object GeoParquet {
   /** `typed` carries a `_ext` (xmin, ymin, xmax, ymax) column. */
   private def writeMaterialized(spark: org.apache.spark.sql.SparkSession,
       typed: DataFrame, path: String, singleFile: Boolean,
-      sortSpatially: Boolean, covering: Boolean = false,
-      maxRecordsPerFile: Long = 0L, sortAlgorithm: String = "str",
-      sortExtent: Option[(Double, Double, Double, Double)] = None): Unit = {
+      sortSpatially: Boolean, covering: Boolean, maxRecordsPerFile: Long,
+      sortAlgorithm: String,
+      sortExtent: Option[(Double, Double, Double, Double)]): Unit = {
     // one combined stats pass: bbox (4 min/max) + distinct geometry types
     // + row count (STR needs it for its slice count)
     val stats = typed.agg(

@@ -708,7 +708,6 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("wordpieceVocabWithFreqs is order-DETERMINISTIC: the single-char " +
       "tail sorts (freq desc, piece asc), never collect() shuffle order") {
-    import spark.implicits._
     val docs = graft.Tables.documents(spark, Sf)
     // indices are token ids (encodeIds / saveTokenizer): the same corpus
     // on a different partitioning must assign the same piece → id map
@@ -723,7 +722,6 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("tokenizer artifact round-trips: loaded vocab/merges encode identically") {
-    import spark.implicits._
     graft.Graft.setup(spark)
     val docs = graft.Tables.documents(spark, Sf)
     val vocab = CorpusOps.wordpieceVocabWithFreqs(docs, "text", topK = 100)
@@ -768,7 +766,6 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("packTokenIds: exact seqLen rows, order-preserving round-trip") {
-    import spark.implicits._
     graft.Graft.setup(spark)
     val docs = graft.Tables.documents(spark, Sf)
     val vocab = CorpusOps.wordpieceVocab(docs, "text", topK = 100)

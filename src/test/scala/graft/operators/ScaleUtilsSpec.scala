@@ -176,7 +176,6 @@ class ScaleUtilsSpec extends AnyFunSuite {
   }
 
   test("AQE skew-join splits the hot partition at runtime") {
-    import spark.implicits._
     // scoped session clone: AQE on with thresholds low enough that the
     // synthetic hot key (100k rows on one key vs ~10 elsewhere) is seen
     // as skew at test scale

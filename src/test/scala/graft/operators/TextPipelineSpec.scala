@@ -98,7 +98,6 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("without a benchmark and with scrubbing off, the input passes through") {
-    import spark.implicits._
     val (docs, _) = mkCorpus
     val annotated = TextPipeline.curate(docs, "id", "body",
       TextPipeline.Config(scrubPii = false))
@@ -113,7 +112,6 @@ class TextPipelineSpec extends AnyFunSuite {
   }
 
   test("buildCorpus equals the manually-chained stages, deterministically") {
-    import spark.implicits._
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id").as("id"), col("text").as("body"),
         col("source"))

@@ -1,7 +1,6 @@
 package graft.osm
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class HilbertIndexExprSpec extends AnyFunSuite {

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming corpus pipeline held to its batch twins on the same
@@ -503,7 +502,6 @@ class DocStreamsSpec extends AnyFunSuite {
   test("BUCKETED vector admit loop (planes=8, bands=2): end state " +
       "equals the exact loop's on a recall-1.0 corpus, through " +
       "generational churn") {
-    import spark.implicits._
     // real 64-dim vectors (the hyperplane dimension contract): seed =
     // 400 corpus vectors; batch 0 = 10 exact re-crawls (cosine 1.0 —
     // identical sign projections co-bucket at ANY planes: recall 1.0
