@@ -315,9 +315,7 @@ object OsmPipeline {
       filter.toSeq.collect {
         case (key, TagFilters.AnyValue) => k === key
         case (key, TagFilters.Values(vs)) =>
-          k === key && vs.map(x =>
-            if (x.contains("*")) v.like(x.replace("*", "%")) else v === x)
-            .reduce(_ || _)
+          k === key && TagFilters.valueMatches(v, vs)
       }.reduceOption(_ || _).getOrElse(lit(false))
     features.withColumn("tags", map_filter(col("tags"), keep))
       .filter(size(col("tags")) > 0)
@@ -353,9 +351,7 @@ object OsmPipeline {
             concat(lit(k), lit("="), element_at(col("tags"), k)))
         case (k, TagFilters.Values(vs)) =>
           val v = element_at(col("tags"), k)
-          when(vs.map(x =>
-            if (x.contains("*")) v.like(x.replace("*", "%")) else v === x)
-            .reduce(_ || _), concat(lit(k), lit("="), v))
+          when(TagFilters.valueMatches(v, vs), concat(lit(k), lit("="), v))
       }
       if (parts.isEmpty) lit(null).cast("string") else coalesce(parts: _*)
     }

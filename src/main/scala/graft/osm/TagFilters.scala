@@ -47,8 +47,17 @@ object TagFilters {
     })
   }
 
-  private def likePattern(v: String): String =
-    v.replace("%", "\\%").replace("_", "\\_").replace("*", "%")
+  /** Whether a tag `value` matches any of `vs`: `*` is the only
+    * wildcard — a literal `%` or `_` in a value matches itself, not any
+    * character. The one value matcher of the filter and of the tag
+    * subsetting and group columns built from it. */
+  def valueMatches(value: Column, vs: Seq[String]): Column =
+    vs.map { v =>
+      if (v.contains("*"))
+        value.like(v.replace("%", "\\%").replace("_", "\\_")
+          .replace("*", "%"))
+      else value === v
+    }.reduce(_ || _)
 
   /** Predicate for one key's matcher over a tags map column. */
   private def entryClause(tags: Column, key: String, m: TagMatch): Column = {
@@ -56,11 +65,7 @@ object TagFilters {
     m match {
       case AnyValue => value.isNotNull
       case Absent => value.isNull // negative — caller ANDs it
-      case Values(vs) =>
-        vs.map { v =>
-          if (v.contains("*")) value.like(likePattern(v))
-          else value === v
-        }.reduce(_ || _)
+      case Values(vs) => valueMatches(value, vs)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.osm
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalacheck.{Gen, Arbitrary}
+import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.osm.TagFilters._
@@ -167,6 +167,38 @@ class TagFiltersSpec extends AnyFunSuite {
     // non-wildcard filters pass through without touching the data
     val same = Map("building" -> AnyValue)
     assert(expandWildcardKeys(same, df) == same)
+  }
+
+  test("wildcard values match `_` and `%` literally in the filter, " +
+      "tag subsetting and group columns") {
+    // features built directly as (feature_id, tags, geometry) rows
+    val features = spark.createDataFrame(Seq(
+      ("node/1", Map("amenity" -> "fast_food", "name" -> "a"), Array[Byte](1)),
+      ("node/2", Map("amenity" -> "fastXfood"), Array[Byte](2)),
+      ("node/3", Map("capacity" -> "10%up"), Array[Byte](3)),
+      ("node/4", Map("capacity" -> "10Xup"), Array[Byte](4))))
+      .toDF("feature_id", "tags", "geometry")
+    val filter: OsmTagsFilter = Map(
+      "amenity" -> Values(Seq("fast_*")), "capacity" -> Values(Seq("10%*")))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("feature_id").collect().map(_.getString(0)).toSet
+    assert(ids(features.filter(compile(filter, col("tags")))) ==
+      Set("node/1", "node/3"))
+    val subset = OsmPipeline.filterTagsToMatched(features, filter)
+      .collect().map(r => r.getString(0) -> r.getMap[String, String](1))
+      .toMap
+    assert(subset == Map("node/1" -> Map("amenity" -> "fast_food"),
+      "node/3" -> Map("capacity" -> "10%up")))
+    val grouped = OsmPipeline.groupedTagColumns(features, Map("g" -> filter))
+      .collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(grouped == Map("node/1" -> Some("amenity=fast_food"),
+      "node/2" -> None, "node/3" -> Some("capacity=10%up"), "node/4" -> None))
+    val compact = OsmPipeline.groupedTagColumns(features, Map("g" -> filter),
+      explode = false)
+      .collect().map(r => r.getString(0) -> r.getMap[String, String](1))
+      .toMap
+    assert(compact("node/2").isEmpty && compact("node/4").isEmpty &&
+      compact("node/3") == Map("g" -> "capacity=10%up"))
   }
 
   test("osmIdsClause groups per-kind id lists (F6)") {
