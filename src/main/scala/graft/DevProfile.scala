@@ -17,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   *    in the EXECUTED plan).
   *
   * A comma-separated gate list shares session state (memoized artifacts,
-  * snapshot caches) the way the bench does. `SPARK_EXTRA_CONF="k=v;k=v"`
-  * sets session confs for conf experiments. The one-off investigation
+  * snapshot caches) the way the bench does. `SPARK_GRAFT_CONF="k=v;k=v"`
+  * sets confs for conf experiments, static ones included
+  * ([[Verify.withGraftConf]]). The one-off investigation
   * modes of earlier rounds live in PLANS.md and in
   * `git show a83893f:src/main/scala/graft/DevProfile.scala`. */
 object DevProfile {
@@ -28,7 +29,7 @@ object DevProfile {
     val Array(mode, sfDir, repsArg, gateList) = args
     val reps = repsArg.toInt
     val gates = gateList.split(',').toSeq
-    val spark = SparkSession.builder()
+    val spark = Verify.withGraftConf(SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
@@ -36,13 +37,9 @@ object DevProfile {
       // iterative trainers + a 123-query bench generate far more than
       // the default 100 distinct codegen classes; the LRU then cycles
       // completely and EVERY query pays Janino again (Bench.scala doc)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.codegen.cache.maxEntries", "5000"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split('=')
-      spark.conf.set(k, v)
-    })
     def run(gate: String, i: Int): org.apache.spark.sql.DataFrame = {
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(gate)(spark, sfDir)

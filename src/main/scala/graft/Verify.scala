@@ -4,6 +4,32 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `SPARK_GRAFT_CONF="k=v;k=v"` — extra/overriding confs, applied to
+    * `builder` last (so static confs can be set too); a value may
+    * itself contain `=`. Unset for driver runs (behavior unchanged); the
+    * invariance sweep (tools/check_invariance.py) uses it to re-dump
+    * every gate under adversarial partitioning (narrow shuffles, tiny
+    * input splits, AQE off) and diff against the default-config dump: a
+    * gate whose result depends on partition count or fold order
+    * diverges here before it diverges on a 1000-executor cluster.
+    * Malformed entries are a HARD error, not a silent skip: a typo'd
+    * pair that silently fell back to defaults would make the sweep
+    * compare two near-identical runs and report INVARIANT vacuously. */
+  def withGraftConf(builder: SparkSession.Builder): SparkSession.Builder =
+    sys.env.get("SPARK_GRAFT_CONF").fold(builder) { s =>
+      s.split(';').map(_.trim).filter(_.nonEmpty).foldLeft(builder) {
+        (b, kv) =>
+          require(kv.contains("="),
+            s"SPARK_GRAFT_CONF entry without '=': '$kv'")
+          val Array(k, v) = kv.split("=", 2)
+          // '=value' would reach Spark as an empty conf key and die with
+          // an opaque error — reject it here with the intended message
+          require(k.trim.nonEmpty,
+            s"SPARK_GRAFT_CONF entry with empty key: '$kv'")
+          b.config(k.trim, v.trim)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [nameRegex] — the optional regex restricts the
     // dump to matching query names (local targeted re-checks; the
@@ -19,31 +45,7 @@ object Verify {
       // 123 queries generate >100 distinct codegen classes — keep the
       // codegen cache from cycling (static conf; Bench.scala doc)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-    // SPARK_GRAFT_CONF="k=v;k=v" — extra/overriding session confs, applied
-    // last. Unset for driver runs (behavior unchanged); the invariance
-    // sweep (tools/check_invariance.py) uses it to re-dump every gate
-    // under adversarial partitioning (narrow shuffles, tiny input splits,
-    // AQE off) and diff against the default-config dump: a gate whose
-    // result depends on partition count or fold order diverges here
-    // before it diverges on a 1000-executor cluster.
-    // malformed entries are a HARD error, not a silent skip: this env
-    // var exists to put the invariance sweep under an ADVERSARIAL
-    // config, and a typo'd pair that silently fell back to defaults
-    // would make the sweep compare two near-identical runs and report
-    // INVARIANT vacuously
-    val spark = sys.env.get("SPARK_GRAFT_CONF").fold(builder) { s =>
-      s.split(';').map(_.trim).filter(_.nonEmpty).foldLeft(builder) {
-        (b, kv) =>
-          require(kv.contains("="),
-            s"SPARK_GRAFT_CONF entry without '=': '$kv'")
-          val Array(k, v) = kv.split("=", 2)
-          // '=value' would reach Spark as an empty conf key and die with
-          // an opaque error — reject it here with the intended message
-          require(k.trim.nonEmpty,
-            s"SPARK_GRAFT_CONF entry with empty key: '$kv'")
-          b.config(k.trim, v.trim)
-      }
-    }.getOrCreate()
+    val spark = withGraftConf(builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
