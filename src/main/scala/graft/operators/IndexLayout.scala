@@ -2,10 +2,21 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared mechanics of GENERATIONAL on-disk indexes — used by both the
-  * lexical postings index ([[RetrievalOps]]) and the IVF-PQ vector
-  * index ([[IvfPq]]):
+/** Shared mechanics of GENERATIONAL on-disk indexes — one owner for
+  * all three layouts that grow by appended generations: the lexical
+  * postings index ([[RetrievalOps]]), the IVF-PQ vector index
+  * ([[IvfPq]]) and the admit stores
+  * ([[graft.streaming.DocStreams.admitArrivals]]):
   *
+  *  - each append lands in its own generation directory
+  *    `<root>/appends/batch=<id>`, written through ONE protocol
+  *    ([[withAppend]] + [[commitBatch]]) and served only once it is
+  *    COMMITTED. The commit rule, stated once: a generation is
+  *    committed when it holds [[CommitMarker]], the job committer's
+  *    `_SUCCESS` (batches written before the marker existed) or a
+  *    `stats/` directory (the BM25 stats row, its marker since the
+  *    first append); [[committedAppends]] is the one listing every
+  *    reader, fold and status probe applies it through;
   *  - a `CURRENT` pointer file at the index path names the served
   *    generation (`generations/g<k>`); its absence means the plain
   *    single-generation layout at the path itself — so indexes built
@@ -26,11 +37,11 @@ import org.apache.spark.sql.SparkSession
   * Single-writer contract throughout: appends and compactions must be
   * sequenced by one writer (a foreachBatch loop); readers need no
   * coordination — they resolve the pointer per query. ENFORCED, not
-  * just documented: every mutation entry point (appendToPostings,
-  * appendToIndex, the admit-loop commits, compactInPlace, and the
-  * builds/rebuilds indexCorpus + IvfPq.writeIndex) runs under the
-  * path's [[withWriterLease]] — a second concurrent writer fails
-  * loudly naming the holder instead of silently interleaving. */
+  * just documented: every mutation entry point (the appends through
+  * [[withAppend]], compactInPlace, and the builds/rebuilds
+  * indexCorpus + IvfPq.writeIndex) runs under the path's
+  * [[withWriterLease]] — a second concurrent writer fails loudly naming
+  * the holder instead of silently interleaving. */
 private[graft] object IndexLayout {
 
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
@@ -76,25 +87,97 @@ private[graft] object IndexLayout {
     else readSmall(spark, p).toLong
   }
 
-  /** The folded mark `dest` must carry: every numeric batch generation
-    * being folded, plus whatever a previous compaction already folded
-    * into `root`'s base. `genNames` are append directory names
-    * (`batch=<id>`); non-numeric (UUID) generations never replay and
-    * carry no mark. */
-  def foldedMarkFor(spark: SparkSession, root: String,
-      genNames: Seq[String]): Long =
-    (foldedMax(spark, root) +: genNames
-      .map(_.stripPrefix("batch="))
+  /** The marker [[commitBatch]] writes LAST into an append generation
+    * (the commit rule: object doc). It exists because `_SUCCESS`
+    * emission can be disabled
+    * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`) and the
+    * commit contract must not DEPEND on that tunable; `_SUCCESS` and
+    * `stats/` stay accepted so generations written before the marker
+    * existed are not silently dropped — and then permanently folded
+    * away by the next compaction. */
+  val CommitMarker = "_GRAFT_COMMIT"
+
+  /** The commit rule (object doc): the names any one of which marks an
+    * append generation committed, [[CommitMarker]] first. */
+  private val Markers = Seq(CommitMarker, "_SUCCESS", "stats")
+
+  /** COMMITTED append generations under `root/appends`, sorted for
+    * deterministic unions: a half-written generation (a crash before
+    * its marker) is invisible to every probe, fold and status count.
+    * An index without appends costs one `exists`; each generation
+    * costs one more per marker tried, [[CommitMarker]] first. */
+  def committedAppends(spark: SparkSession, root: String): Seq[String] = {
+    val appends = new org.apache.hadoop.fs.Path(s"$root/appends")
+    val fs = fsOf(spark, appends)
+    if (!fs.exists(appends)) Nil
+    else {
+      // a status probe can race a retire that deletes the directory
+      val dirs = try fs.listStatus(appends).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      dirs.filter(_.isDirectory).map(_.getPath)
+        .filter(d => d.getName.startsWith("batch=") &&
+          Markers.exists(m => fs.exists(new org.apache.hadoop.fs.Path(d, m))))
+        .map(_.toString).sorted
+    }
+  }
+
+  /** The one append entry every generational writer runs: under the
+    * path's [[withWriterLease]], bind the stream lineage
+    * ([[checkStreamId]]), resolve the active root ONCE, and run
+    * `body(root)` unless [[replayGuard]] judges the batch already
+    * folded. */
+  def withAppend(spark: SparkSession, path: String, batchId: Option[Long],
+      streamId: Option[String], what: String)(body: String => Unit): Unit =
+    withWriterLease(spark, path, what) {
+      checkStreamId(spark, path, streamId, what)
+      val root = activeRoot(spark, path)
+      if (!replayGuard(spark, root, batchId, what)) body(root)
+    }
+
+  /** The one commit step of generation `root/appends/batch=<id>`:
+    * retract every marker the commit rule accepts (a replay's stale
+    * marker must not make a half-rewritten directory visible — a
+    * reader listing it as committed would scan it mid-rewrite), let
+    * `write(dir)` overwrite the generation's data, then write
+    * [[CommitMarker]] LAST. A BM25 generation becomes visible at its
+    * `stats/` write, a parquet one at its `_SUCCESS`; both land only
+    * once the data is complete. */
+  def commitBatch(spark: SparkSession, root: String, id: String)(
+      write: String => Unit): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(s"$root/appends/batch=$id")
+    val fs = fsOf(spark, dir)
+    Markers.foreach { m =>
+      fs.delete(new org.apache.hadoop.fs.Path(dir, m), true): Unit
+    }
+    write(dir.toString)
+    fs.create(new org.apache.hadoop.fs.Path(dir, CommitMarker), true)
+      .close()
+  }
+
+  /** The one fold prologue of every compaction of `path` into `dest`:
+    * `dest` must be a different directory from `path` and its active
+    * root, and carries the replay guard forward — its `folded_max`
+    * covers every numeric batch generation being folded plus whatever
+    * a previous compaction already folded into the root (non-numeric
+    * UUID generations never replay and carry no mark; nothing is
+    * written when nothing was ever folded). Returns the active root the
+    * fold reads. */
+  def beginFold(spark: SparkSession, path: String, dest: String): String = {
+    val root = activeRoot(spark, path)
+    def bare(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    require(bare(dest) != bare(path) && bare(dest) != bare(root),
+      "compactTo: dest must be a different directory")
+    val mark = (foldedMax(spark, root) +: committedAppends(spark, root)
+      .map(new org.apache.hadoop.fs.Path(_).getName.stripPrefix("batch="))
       .filter(s => s.nonEmpty && s.forall(_.isDigit))
       .map(_.toLong)).max
-
-  /** Write `dest/folded_max` (no-op for −1: nothing ever folded). */
-  def writeFoldedMax(spark: SparkSession, dest: String, v: Long): Unit =
-    if (v >= 0L) {
+    if (mark >= 0L) {
       val p = new org.apache.hadoop.fs.Path(s"$dest/folded_max")
       val out = fsOf(spark, p).create(p, true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+      try out.write(mark.toString.getBytes("UTF-8")) finally out.close()
     }
+    root
+  }
 
   /** Write `content` to `p` ATOMICALLY (sibling `<name>.tmp`, then
     * `FileContext.rename(OVERWRITE)` — atomic where the FS supports
@@ -471,20 +554,20 @@ private[graft] object IndexLayout {
     }
 
   /** The shared auto-compaction policy: fold when the active generation
-    * carries ≥ `maxGenerations` committed appends (`committed` lists
-    * them, index-kind specific). Returns whether a compaction ran. */
+    * carries ≥ `maxGenerations` committed appends. Returns whether a
+    * compaction ran. */
   def maybeCompact(spark: SparkSession, path: String, maxGenerations: Int,
-      committed: String => Seq[String], compactIP: () => String): Boolean = {
+      compactIP: () => String): Boolean = {
     require(maxGenerations >= 1,
       s"maybeCompact: maxGenerations must be >= 1, got $maxGenerations")
     val root = activeRoot(spark, path)
-    if (committed(root).size >= maxGenerations) {
+    if (committedAppends(spark, root).size >= maxGenerations) {
       compactIP(): Unit
       true
     } else false
   }
 
-  /** The at-least-once append guard both index kinds apply before
+  /** The at-least-once append guard [[withAppend]] applies before
     * writing a batch generation ([[foldedMax]] doc): a batchId EQUAL to
     * the folded high-water mark is the one genuine replay shape — the
     * batch in flight when the fold ran, re-delivered after a crash
@@ -496,7 +579,7 @@ private[graft] object IndexLayout {
     * fresh checkpoint restarting ids at 0 against a long-lived index —
     * and silently dropping its batches would lose real data, so it
     * throws. Returns true when the caller should skip the append. */
-  def replayGuard(spark: SparkSession, root: String,
+  private def replayGuard(spark: SparkSession, root: String,
       batchId: Option[Long], what: String): Boolean = {
     val fm = foldedMax(spark, root)
     batchId match {

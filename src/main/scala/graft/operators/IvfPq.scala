@@ -27,23 +27,6 @@ import graft.functions.NativeFunctions._
   */
 object IvfPq {
 
-  /** Commit marker a batch append writes LAST — [[loadIndex]] serves
-    * batch directories carrying EITHER this file OR the job committer's
-    * `_SUCCESS` (both are written only once the batch's data is
-    * complete, so a torn write carries neither and stays invisible).
-    * The explicit marker exists because `_SUCCESS` emission is disabled
-    * on some deployments
-    * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`) and the
-    * commit contract must not DEPEND on that tunable; accepting
-    * `_SUCCESS` as well grandfathers batches written before the marker
-    * existed — dropping them would silently lose (and, at the next
-    * compaction, permanently fold away) their vectors. In default
-    * deployments a batch therefore becomes visible at parquet job
-    * commit, marginally before the marker lands — both points are
-    * after the data is complete, so the visibility contract holds
-    * either way. */
-  private val CommitMarker = "_GRAFT_COMMIT"
-
   /** The built index: `cents` (cid, cv) coarse centroids, `codebook`
     * (sub, code, cv) shared residual codebooks — both driver-local after
     * [[build]] — and `codes` (pq_id, cell, codes), the compressed serving
@@ -327,28 +310,6 @@ object IvfPq {
     }
   }
 
-  /** COMMITTED append batch directories under `root/appends` — those
-    * carrying the [[CommitMarker]]; sorted for deterministic unions. */
-  private def committedBatches(spark: org.apache.spark.sql.SparkSession,
-      root: String): Seq[String] = {
-    val appendsPath = new org.apache.hadoop.fs.Path(s"$root/appends")
-    val fs = appendsPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(appendsPath)) Nil
-    else fs.listStatus(appendsPath).toSeq
-      .filter(_.isDirectory).map(_.getPath)
-      // _SUCCESS grandfathers batches written before the explicit
-      // marker existed: the Hadoop job committer writes it only at
-      // job commit (data complete), so it IS a commit marker when
-      // present — without it, upgrading would silently drop (and the
-      // next compaction permanently fold away) every pre-marker
-      // appended vector. The explicit marker remains the primary gate
-      // because deployments can disable _SUCCESS emission.
-      .filter(d =>
-        fs.exists(new org.apache.hadoop.fs.Path(d, CommitMarker)) ||
-        fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-      .map(_.toString).sorted
-  }
-
   /** Load a persisted index; the geometry comes from the stored meta,
     * never from caller guesses. `cell` comes back as a hive partition
     * column; probes compare it with an equality literal, so the
@@ -365,19 +326,20 @@ object IvfPq {
     // directory per committed micro-batch — see [[appendToIndex]]); the
     // batch partition column exists only for replay idempotence and is
     // dropped here. Probes prune on `cell` identically on both sides.
-    // Only COMMITTED batch directories are served (carrying the
-    // [[CommitMarker]] or the job committer's _SUCCESS — see the
-    // marker's doc): a crash mid-append that is never replayed leaves a
-    // half-written batch directory whose partial/torn files must stay
+    // Only COMMITTED batch directories are served (the commit rule,
+    // [[IndexLayout.committedAppends]]): a crash mid-append that is
+    // never replayed leaves a half-written batch directory whose
+    // partial/torn files must stay
     // invisible to every probe, not crash or corrupt them. Each batch
     // reads with an EXPLICIT schema: a committed batch whose
     // micro-batch was empty leaves a file-less batch=<id> directory,
     // and schema inference over a file-less tree throws — explicitly it
     // is what it semantically is, zero appended vectors, so one empty
     // batch can never brick every subsequent load of the index
-    val all = committedBatches(spark, root).foldLeft(codes) { (acc, dir) =>
-      acc.unionByName(spark.read.schema(codes.schema).parquet(dir))
-    }
+    val all = IndexLayout.committedAppends(spark, root)
+      .foldLeft(codes) { (acc, dir) =>
+        acc.unionByName(spark.read.schema(codes.schema).parquet(dir))
+      }
     IvfPqIndex(
       spark.read.parquet(s"$root/cents"),
       spark.read.parquet(s"$root/codebook"),
@@ -572,57 +534,34 @@ object IvfPq {
       batchId: Option[Long] = None,
       streamId: Option[String] = None): Unit = {
     val spark = encoded.sparkSession
-    // single-writer contract ENFORCED: the mutation runs under the
-    // path's WRITER lease (IndexLayout.withWriterLease) — a manual
-    // append racing the owning stream fails loudly, never interleaves
-    IndexLayout.withWriterLease(spark, path, "appendToIndex") {
-      // one index path, one streaming lineage (IndexLayout.checkStreamId)
-      IndexLayout.checkStreamId(spark, path, streamId, "appendToIndex")
-      val root = IndexLayout.activeRoot(spark, path)
-      // at-least-once across COMPACTION: the one genuine replay of a
-      // folded batch (id == the folded mark) no-ops; an id BELOW the
-      // mark is a different stream's and throws — silently dropping it
-      // would lose real data (IndexLayout.replayGuard doc)
-      if (!IndexLayout.replayGuard(spark, root, batchId,
-          "appendToIndex")) {
-        val m = spark.read.parquet(s"$root/meta").head().getInt(0)
-        // geometry check rides INSIDE the single write pass (raise_error
-        // on the first mismatched row) — a separate validation scan
-        // would evaluate the whole encode twice. A STREAMING frame
-        // cannot drive DataFrameWriter — commit micro-batches through
-        // [[graft.streaming.DocStreams.appendArrivals]] (foreachBatch).
-        val checked = encoded.select(col("pq_id"),
-          when(size(col("codes")) === m, col("codes"))
-            .otherwise(raise_error(concat(
-              lit(s"appendToIndex: codes length != index m=$m (got "),
-              size(col("codes")).cast("string"),
-              lit(") — encoded against a different index geometry?"))))
-            .as("codes"),
-          col("cell"))
-        batchId match {
-          case Some(b) =>
-            // static overwrite truncates exactly this batch's directory
-            // — the idempotence unit — leaving other batches' commits
-            // intact; a replay therefore retracts BOTH accepted markers
-            // up front ([[committedBatches]] also grandfathers
-            // `_SUCCESS`): left standing until the overwrite job's own
-            // directory delete, a concurrent loadIndex could list the
-            // batch as committed and scan it mid-rewrite
-            val dir = s"$root/appends/batch=$b"
-            val mk = new org.apache.hadoop.fs.Path(dir, CommitMarker)
-            val fs = mk.getFileSystem(spark.sessionState.newHadoopConf())
-            fs.delete(mk, false): Unit
-            fs.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"),
-              false): Unit
+    IndexLayout.withAppend(spark, path, batchId, streamId,
+        "appendToIndex") { root =>
+      val m = spark.read.parquet(s"$root/meta").head().getInt(0)
+      // geometry check rides INSIDE the single write pass (raise_error
+      // on the first mismatched row) — a separate validation scan
+      // would evaluate the whole encode twice. A STREAMING frame
+      // cannot drive DataFrameWriter — commit micro-batches through
+      // [[graft.streaming.DocStreams.appendArrivals]] (foreachBatch).
+      val checked = encoded.select(col("pq_id"),
+        when(size(col("codes")) === m, col("codes"))
+          .otherwise(raise_error(concat(
+            lit(s"appendToIndex: codes length != index m=$m (got "),
+            size(col("codes")).cast("string"),
+            lit(") — encoded against a different index geometry?"))))
+          .as("codes"),
+        col("cell"))
+      batchId match {
+        case Some(b) =>
+          // static overwrite truncates exactly this batch's directory
+          // — the idempotence unit — leaving other batches' commits
+          // intact
+          IndexLayout.commitBatch(spark, root, b.toString) { dir =>
             checked.write.mode("overwrite").partitionBy("cell")
               .parquet(dir)
-            // marker LAST: the batch becomes visible to loadIndex only
-            // once every file of the overwrite landed
-            fs.create(mk, true).close()
-          case None =>
-            checked.write.mode("append").partitionBy("cell")
-              .parquet(s"$root/codes")
-        }
+          }
+        case None =>
+          checked.write.mode("append").partitionBy("cell")
+            .parquet(s"$root/codes")
       }
     }
   }
@@ -636,18 +575,7 @@ object IvfPq {
     * mid-compaction leaves `path` untouched). */
   def compactTo(spark: org.apache.spark.sql.SparkSession, path: String,
       dest: String): Unit = {
-    val root = IndexLayout.activeRoot(spark, path)
-    require(new org.apache.hadoop.fs.Path(dest).toUri.getPath !=
-      new org.apache.hadoop.fs.Path(path).toUri.getPath &&
-      new org.apache.hadoop.fs.Path(dest).toUri.getPath !=
-      new org.apache.hadoop.fs.Path(root).toUri.getPath,
-      "compactTo: dest must be a different directory")
-    // the replay guard carries forward: dest's folded mark covers every
-    // batchId-keyed generation folded here plus anything folded before
-    IndexLayout.writeFoldedMax(spark, dest,
-      IndexLayout.foldedMarkFor(spark, root,
-        committedBatches(spark, root)
-          .map(d => new org.apache.hadoop.fs.Path(d).getName)))
+    IndexLayout.beginFold(spark, path, dest): Unit
     // loadIndex's codes already union every committed append generation
     writeIndex(loadIndex(spark, path), dest)
   }
@@ -674,7 +602,7 @@ object IvfPq {
   def maybeCompact(spark: org.apache.spark.sql.SparkSession, path: String,
       maxGenerations: Int): Boolean =
     IndexLayout.maybeCompact(spark, path, maxGenerations,
-      committedBatches(spark, _), () => compactInPlace(spark, path))
+      () => compactInPlace(spark, path))
 
   /** The x15 probe at an arbitrary nprobe with the query vector
     * excluded — the ranking form the x25 accuracy-vs-cost sweep scores

@@ -467,8 +467,10 @@ object RetrievalOps {
   /** INCREMENTAL index growth — the lexical analog of
     * [[IvfPq.appendToIndex]]: new documents' postings land in their own
     * `appends/batch=<id>/` generation (same bucket hash and layout as
-    * the base, read back by every probe via [[loadPostings]]), and the
-    * per-batch stats row is its commit marker written LAST. Because the
+    * the base, read back by every probe via [[loadPostings]]), written
+    * through [[IndexLayout]]'s one append protocol: the generation
+    * becomes visible at its per-batch stats row, and the commit marker
+    * lands LAST ([[IndexLayout.commitBatch]]). Because the
     * probes compute per-term df over the (pruned) union and fold the
     * appended (n, sum_dl) into the corpus constants, an appended index
     * ranks BIT-FOR-BIT like a full rebuild over the grown corpus
@@ -486,36 +488,14 @@ object RetrievalOps {
       path: String, batchId: Option[Long] = None,
       streamId: Option[String] = None): Unit = {
     val spark = docs.sparkSession
-    // the whole mutation runs under the path's WRITER lease: a manual
-    // append racing the owning stream (or a second loop that dodged
-    // checkStreamId by passing streamId = None) fails loudly instead
-    // of interleaving with a fold/flip (IndexLayout.withWriterLease)
-    IndexLayout.withWriterLease(spark, path, "appendToPostings") {
-      // one index path, one streaming lineage: a keyed append from a
-      // DIFFERENT checkpoint throws before the replay guard can mistake
-      // its restarted ids for replays (IndexLayout.checkStreamId doc)
-      IndexLayout.checkStreamId(spark, path, streamId, "appendToPostings")
-      val root = IndexLayout.activeRoot(spark, path)
-      // at-least-once across COMPACTION: the one genuine replay of a
-      // FOLDED batch (id == the folded high-water mark) no-ops — its
-      // rows are already in the folded generation and its own appends
-      // directory no longer exists to overwrite; an id BELOW the mark is
-      // a different stream's and throws (IndexLayout.replayGuard doc)
-      if (!IndexLayout.replayGuard(spark, root, batchId,
-          "appendToPostings")) {
-        val (nBuckets, withPositions) = {
-          val r = readBaseStats(spark, root)
-          (r.getAs[Int]("n_buckets"), r.getAs[Boolean]("with_positions"))
-        }
-        val gen = batchId.map(i => s"batch=$i").getOrElse(
-          s"batch=${java.util.UUID.randomUUID().toString}")
-        val dir = s"$root/appends/$gen"
-        // retract THIS generation's marker first: a replay that died
-        // between postings and stats must not leave a committed
-        // half-write
-        val statsPath = new org.apache.hadoop.fs.Path(s"$dir/stats")
-        statsPath.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(statsPath, true): Unit
+    IndexLayout.withAppend(spark, path, batchId, streamId,
+        "appendToPostings") { root =>
+      val (nBuckets, withPositions) = {
+        val r = readBaseStats(spark, root)
+        (r.getAs[Int]("n_buckets"), r.getAs[Boolean]("with_positions"))
+      }
+      IndexLayout.commitBatch(spark, root, batchId.fold(
+          java.util.UUID.randomUUID().toString)(_.toString)) { dir =>
         val (n, sumDl) = writePostings(docs, idCol, textCol,
           s"$dir/postings", nBuckets, withPositions)
         writeStats(spark, s"$dir/stats", n, sumDl, nBuckets,
@@ -551,7 +531,7 @@ object RetrievalOps {
   def maybeCompact(spark: SparkSession, path: String,
       maxGenerations: Int): Boolean =
     IndexLayout.maybeCompact(spark, path, maxGenerations,
-      committedAppends(spark, _), () => compactInPlace(spark, path))
+      () => compactInPlace(spark, path))
 
   /** Operational status of a SERVED generational path — the
     * introspection side of the ops surface (README "running the serving
@@ -565,8 +545,8 @@ object RetrievalOps {
     * [[IndexLayout]]'s conventions: BM25 postings ([[indexCorpus]]),
     * IVF-PQ snapshots ([[IvfPq]]), and the admit stores
     * ([[graft.streaming.DocStreams.admitArrivals]]) — an append counts
-    * as committed under ANY of the three marker conventions (`stats/`
-    * subdir, `_GRAFT_COMMIT`, legacy `_SUCCESS`). `pending_appends > 0`
+    * as committed under [[IndexLayout]]'s one commit rule
+    * ([[IndexLayout.committedAppends]]). `pending_appends > 0`
     * on a path with no running writer = a crashed mid-write batch that
     * replay will overwrite (or compaction will skip); `writer_expired
     * = true` = a crashed holder whose lease the next writer may break. */
@@ -590,15 +570,10 @@ object RetrievalOps {
       catch { case _: java.io.FileNotFoundException => Array.empty }
     val nGens = safeList(new Path(s"$path/generations")).count(st =>
       st.isDirectory && st.getPath.getName.startsWith("g")).toLong
-    val (committed, pending) = {
-      val dirs = safeList(new Path(s"$root/appends")).filter(_.isDirectory)
-      val c = dirs.count(d =>
-        try fs.exists(new Path(d.getPath, "stats")) ||
-          fs.exists(new Path(d.getPath, "_GRAFT_COMMIT")) ||
-          fs.exists(new Path(d.getPath, "_SUCCESS"))
-        catch { case _: java.io.FileNotFoundException => false })
-      (c.toLong, (dirs.length - c).toLong)
-    }
+    val committed = IndexLayout.committedAppends(spark, root).size.toLong
+    // the second listing can miss generations a retire deleted meanwhile
+    val pending = math.max(0L, safeList(new Path(s"$root/appends"))
+      .count(_.isDirectory) - committed)
     val streamId = {
       val p = new Path(s"$path/stream_id")
       if (fs.exists(p))
@@ -657,23 +632,11 @@ object RetrievalOps {
     * unreadable-as-an-index and `path` untouched: the caller flips its
     * serving path only after this returns. */
   def compactTo(spark: SparkSession, path: String, dest: String): Unit = {
-    val root = IndexLayout.activeRoot(spark, path)
-    require(new org.apache.hadoop.fs.Path(dest).toUri.getPath !=
-      new org.apache.hadoop.fs.Path(path).toUri.getPath &&
-      new org.apache.hadoop.fs.Path(dest).toUri.getPath !=
-      new org.apache.hadoop.fs.Path(root).toUri.getPath,
-      "compactTo: dest must be a different directory")
+    val root = IndexLayout.beginFold(spark, path, dest)
     val base = readBaseStats(spark, root)
     val nBuckets = base.getAs[Int]("n_buckets")
     val withPositions = base.getAs[Boolean]("with_positions")
     val (n, _, _, _) = readStats(spark, root)
-    // carry the replay guard forward: dest's folded mark covers every
-    // batchId-keyed generation this compaction folds PLUS everything a
-    // previous compaction already folded into `root`'s base
-    IndexLayout.writeFoldedMax(spark, dest,
-      IndexLayout.foldedMarkFor(spark, root,
-        committedAppends(spark, root)
-          .map(d => new org.apache.hadoop.fs.Path(d).getName)))
     val fs = new org.apache.hadoop.fs.Path(dest)
       .getFileSystem(spark.sessionState.newHadoopConf())
     if (n == 0) {
@@ -791,21 +754,6 @@ object RetrievalOps {
     row
   }
 
-  /** COMMITTED append generations under `path/appends` — directories
-    * whose own stats marker exists; a half-written append (crash between
-    * postings and stats) is invisible to every probe. */
-  private def committedAppends(spark: SparkSession,
-      path: String): Seq[String] = {
-    val appends = new org.apache.hadoop.fs.Path(s"$path/appends")
-    val fs = appends.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(appends)) Nil
-    else fs.listStatus(appends).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "stats")))
-      .map(_.toString).sorted
-  }
-
   /** Index constants with every committed append folded in: n and
     * sum_dl are the GROWN corpus's (exact integer arithmetic — identical
     * to what a full rebuild over the union would compute; scorers
@@ -836,7 +784,7 @@ object RetrievalOps {
     var sumDl = base.getAs[Long]("sum_dl")
     val nBuckets = base.getAs[Int]("n_buckets")
     val withPositions = base.getAs[Boolean]("with_positions")
-    committedAppends(spark, path).foreach { dir =>
+    IndexLayout.committedAppends(spark, path).foreach { dir =>
       val r = spark.read.parquet(s"$dir/stats").head()
       n += r.getAs[Long]("n")
       sumDl += r.getAs[Long]("sum_dl")
@@ -866,7 +814,7 @@ object RetrievalOps {
   private def loadPostings(spark: SparkSession, path: String,
       withPositions: Boolean): DataFrame = {
     val schema = postingsSchema(withPositions)
-    committedAppends(spark, path).foldLeft(
+    IndexLayout.committedAppends(spark, path).foldLeft(
       spark.read.schema(schema).parquet(s"$path/postings")) { (acc, dir) =>
       acc.unionByName(spark.read.schema(schema).parquet(s"$dir/postings"))
     }
@@ -1216,8 +1164,8 @@ object RetrievalOps {
     * base-side doc count; the append side is the full index's n minus
     * it. sum_dl per generation re-measures as sum(tf) over the written
     * files, the [[writePostings]] convention. Layout conventions match
-    * the originals: writer lease around the mutation, per-generation
-    * stats commit marker written LAST. */
+    * the originals: writer lease around the mutation, the append
+    * generation committed through [[IndexLayout.commitBatch]]. */
   private[operators] def deriveMod5SplitIndex(s: SparkSession,
       fullIndexPath: String, nBase: Long, out: String): Unit = {
     val fullRoot = IndexLayout.activeRoot(s, fullIndexPath)
@@ -1232,11 +1180,12 @@ object RetrievalOps {
         s"$out/postings", nBuckets)
       writeStats(s, s"$out/stats", nBase, sumBase, nBuckets,
         withPositions = false)
-      val gen = s"$out/appends/batch=0"
-      val sumApp = writePostingsRows(full.filter(col("id") % 5 === 0),
-        s"$gen/postings", nBuckets)
-      writeStats(s, s"$gen/stats", nFull - nBase, sumApp, nBuckets,
-        withPositions = false)
+      IndexLayout.commitBatch(s, out, "0") { gen =>
+        val sumApp = writePostingsRows(full.filter(col("id") % 5 === 0),
+          s"$gen/postings", nBuckets)
+        writeStats(s, s"$gen/stats", nFull - nBase, sumApp, nBuckets,
+          withPositions = false)
+      }
     }
   }
 

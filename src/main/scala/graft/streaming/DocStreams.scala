@@ -300,28 +300,6 @@ object DocStreams {
         Seq("_g_h", "_g_exact", "_g_gh", "_g_sig"): _*)
   }
 
-  /** Commit marker an admitted batch writes LAST (same contract and
-    * rationale as the index appends: `_SUCCESS` also accepted — both
-    * land only after the data is complete — but the contract must not
-    * depend on that tunable). */
-  private val AdmitMarker = "_GRAFT_COMMIT"
-
-  /** COMMITTED admitted-batch directories under `root/appends`
-    * (carrying [[AdmitMarker]] or `_SUCCESS`); `excludeBatch` masks a
-    * batch's OWN directory while recomputing it on replay. */
-  private def committedAdmitted(spark: SparkSession, root: String,
-      excludeBatch: Option[Long]): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/appends")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
-      .filter(d => d.getName.startsWith("batch=") &&
-        excludeBatch.forall(b => d.getName != s"batch=$b") &&
-        (fs.exists(new org.apache.hadoop.fs.Path(d, AdmitMarker)) ||
-          fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))))
-      .map(_.toString).sorted
-  }
-
   /** The admitted corpus at `root` as ONE multi-path scan (explicit
     * `schema` — a committed batch whose admit set was empty is
     * file-less, which would brick inference): the folded base
@@ -333,8 +311,10 @@ object DocStreams {
       excludeBatch: Option[Long]): DataFrame = {
     val base = new org.apache.hadoop.fs.Path(s"$root/docs")
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    // a replay recomputes its batch without its own previous write
     val dirs = (if (fs.exists(base)) Seq(s"$root/docs") else Nil) ++
-      committedAdmitted(spark, root, excludeBatch)
+      graft.operators.IndexLayout.committedAppends(spark, root).filterNot(
+        d => excludeBatch.exists(b => d.endsWith(s"/batch=$b")))
     if (dirs.isEmpty)
       spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
@@ -393,7 +373,8 @@ object DocStreams {
     val s = seed.sparkSession
     val dir = s"$path/seed_sig"
     val params = s"ngram=$ngram,numPerms=$numPerms"
-    val mk = new org.apache.hadoop.fs.Path(dir, AdmitMarker)
+    val mk = new org.apache.hadoop.fs.Path(dir,
+      graft.operators.IndexLayout.CommitMarker)
     val fs = mk.getFileSystem(s.sessionState.newHadoopConf())
     if (fs.exists(mk)) {
       val in = fs.open(mk)
@@ -426,7 +407,7 @@ object DocStreams {
     * directories per micro-batch forever. Cost note: unlike a probe
     * against an index, the per-batch READ path here is one multi-path
     * scan whatever the generation count — only driver-side listing
-    * (2 `exists` + a list per batch dir) grows — while the fold
+    * (a marker `exists` per batch dir) grows — while the fold
     * rewrites the whole corpus TEXT. So the admit loop wants a LARGE
     * `compactEvery` (amortize the rewrite over many batches, e.g.
     * hundreds) where the index loops want a small one (probe latency
@@ -451,34 +432,10 @@ object DocStreams {
   private def foldAdmitted(spark: SparkSession, path: String,
       physicalSchema: org.apache.spark.sql.types.StructType): String =
     graft.operators.IndexLayout.compactInPlace(spark, path,
-      Seq("docs", "appends"), (p, dest) => {
-        val root = graft.operators.IndexLayout.activeRoot(spark, p)
-        graft.operators.IndexLayout.writeFoldedMax(spark, dest,
-          graft.operators.IndexLayout.foldedMarkFor(spark, root,
-            committedAdmitted(spark, root, None)
-              .map(d => new org.apache.hadoop.fs.Path(d).getName)))
-        admittedAt(spark, root, physicalSchema, None)
-          .write.mode("overwrite").parquet(s"$dest/docs")
-      })
-
-  /** The shared batch-commit dance of the admit loops: retract the
-    * batch's own markers (a replay's stale marker must not make a
-    * half-rewritten directory visible — and [[committedAdmitted]] also
-    * accepts the job committer's `_SUCCESS`, so BOTH retract, or a
-    * concurrent [[admittedDocs]] reader could list the batch as
-    * committed on `_SUCCESS` alone and then scan the directory
-    * mid-rewrite), overwrite the data, marker LAST. */
-  private def commitAdmittedBatch(admitted: DataFrame, root: String,
-      batchId: Long): Unit = {
-    val s = admitted.sparkSession
-    val dir = s"$root/appends/batch=$batchId"
-    val mk = new org.apache.hadoop.fs.Path(dir, AdmitMarker)
-    val fs = mk.getFileSystem(s.sessionState.newHadoopConf())
-    fs.delete(mk, false): Unit
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), false): Unit
-    admitted.write.mode("overwrite").parquet(dir)
-    fs.create(mk, true).close()
-  }
+      Seq("docs", "appends"), (p, dest) =>
+        admittedAt(spark, graft.operators.IndexLayout.beginFold(spark, p,
+          dest), physicalSchema, None)
+          .write.mode("overwrite").parquet(s"$dest/docs"))
 
   /** CONTINUOUS crawl-frontier admission with a SELF-GROWING corpus —
     * the accumulation loop [[admitNew]] (static existing set) feeds
@@ -542,15 +499,10 @@ object DocStreams {
           batchId: Long) => {
         val s = batch.sparkSession
         import graft.operators.{CorpusOps, IndexLayout}
-        // the commit runs under the path's WRITER lease (the
-        // single-writer contract, ENFORCED — IndexLayout
-        // .withWriterLease); the compaction below takes its own
-        IndexLayout.withWriterLease(s, path, "admitArrivals") {
-        IndexLayout.checkStreamId(s, path, Some(checkpoint),
-          "admitArrivals")
-        val root = IndexLayout.activeRoot(s, path)
-        if (!IndexLayout.replayGuard(s, root, Some(batchId),
-            "admitArrivals")) {
+        // the commit runs under the path's WRITER lease
+        // (IndexLayout.withAppend); the compaction below takes its own
+        IndexLayout.withAppend(s, path, Some(batchId), Some(checkpoint),
+            "admitArrivals") { root =>
           // the existing side is READ AS SIGNATURES ONLY (seed store +
           // the stored columns of every admitted batch): per-batch cost
           // is the batch's own work plus a ~150 B/doc store scan — the
@@ -599,14 +551,13 @@ object DocStreams {
                 "doc_id", threshold = threshold)
                 .withColumnRenamed("digest", "_g_adm_digest")
                 .withColumnRenamed("sig", "_g_adm_sig")
-              commitAdmittedBatch(admitted, root, batchId)
+              IndexLayout.commitBatch(s, root, batchId.toString)(
+                admitted.write.mode("overwrite").parquet(_))
             } finally filtered.unpersist(blocking = false): Unit
           } finally deduped.unpersist(blocking = false): Unit
         }
-        }
         compactEvery.foreach { n =>
           IndexLayout.maybeCompact(s, path, n,
-            committedAdmitted(s, _, None),
             () => compactAdmitted(s, path, schema)): Unit
         }
       })
@@ -659,12 +610,8 @@ object DocStreams {
         val s = batch.sparkSession
         import graft.operators.{EmbeddingOps, IndexLayout}
         // commit under the path's WRITER lease, as in [[admitArrivals]]
-        IndexLayout.withWriterLease(s, path, "vecAdmitArrivals") {
-        IndexLayout.checkStreamId(s, path, Some(checkpoint),
-          "vecAdmitArrivals")
-        val root = IndexLayout.activeRoot(s, path)
-        if (!IndexLayout.replayGuard(s, root, Some(batchId),
-            "vecAdmitArrivals")) {
+        IndexLayout.withAppend(s, path, Some(batchId), Some(checkpoint),
+            "vecAdmitArrivals") { root =>
           val existing = seed.unionByName(
             admittedAt(s, root, schema, excludeBatch = Some(batchId)))
           // materialize the deduped batch eagerly before it fans out
@@ -684,14 +631,13 @@ object DocStreams {
             try {
               val admitted = EmbeddingOps.collapseVectors(filtered,
                 "vec_id", "embedding", threshold, planes, bands)
-              commitAdmittedBatch(admitted, root, batchId)
+              IndexLayout.commitBatch(s, root, batchId.toString)(
+                admitted.write.mode("overwrite").parquet(_))
             } finally filtered.unpersist(blocking = false): Unit
           } finally deduped.unpersist(blocking = false): Unit
         }
-        }
         compactEvery.foreach { n =>
           IndexLayout.maybeCompact(s, path, n,
-            committedAdmitted(s, _, None),
             () => compactAdmittedVecs(s, path, schema)): Unit
         }
       })

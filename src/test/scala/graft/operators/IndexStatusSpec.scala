@@ -6,7 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** [[RetrievalOps.indexStatus]]: the one-row ops probe must track the
   * layout through the full lifecycle — fresh build, committed append,
   * half-written append, compaction flip, a held writer lease, and the
-  * admit store's different commit marker. */
+  * admit store's different commit marker. Each case also pins the one
+  * commit rule ([[IndexLayout.committedAppends]]) on the reader side:
+  * a generation without a marker is pending and not served; once its
+  * marker lands it is served and counted committed. */
 class IndexStatusSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -39,15 +42,35 @@ class IndexStatusSpec extends AnyFunSuite {
       "doc_id", "text", path, batchId = Some(1L))
     assert(row(path).getAs[Long]("committed_appends") == 1L)
 
+    // the same generation torn before any marker (postings written,
+    // stats/ and _GRAFT_COMMIT not): pending, and no probe serves it
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    def served = RetrievalOps.bm25TopKIndexed(spark, path, Seq("apple"))
+      .collect().map(_.getLong(0)).toSet
+    val gen = s"$path/appends/batch=1"
+    val aside = path.stripSuffix("/idx") + "/stats-aside"
+    assert(fs.exists(new Path(gen, IndexLayout.CommitMarker)))
+    assert(fs.delete(new Path(gen, IndexLayout.CommitMarker), false) &&
+      fs.rename(new Path(s"$gen/stats"), new Path(aside)))
+    val torn = row(path)
+    assert(torn.getAs[Long]("committed_appends") == 0L &&
+      torn.getAs[Long]("pending_appends") == 1L)
+    assert(served == Set(1L))
+    // stats/ lands — the layout the writers used before _GRAFT_COMMIT
+    // existed: served and committed without the explicit marker
+    assert(fs.rename(new Path(aside), new Path(s"$gen/stats")))
+    val legacy = row(path)
+    assert(legacy.getAs[Long]("committed_appends") == 1L &&
+      legacy.getAs[Long]("pending_appends") == 0L)
+    assert(served == Set(1L, 10L))
+
     // a half-written append: directory present, no commit marker
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/appends/batch=2"))
+    fs.mkdirs(new Path(s"$path/appends/batch=2"))
     val s1 = row(path)
     assert(s1.getAs[Long]("committed_appends") == 1L &&
       s1.getAs[Long]("pending_appends") == 1L)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/appends/batch=2"),
-      true)
+    fs.delete(new Path(s"$path/appends/batch=2"), true)
 
     RetrievalOps.compactInPlace(spark, path)
     val s2 = row(path)
@@ -83,5 +106,25 @@ class IndexStatusSpec extends AnyFunSuite {
     assert(s.getAs[Long]("committed_appends") == 1L &&
       s.getAs[Long]("pending_appends") == 0L &&
       s.getAs[String]("stream_id") != null)
+
+    // the batch torn before its markers: pending, and not served
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    val gen = s"$root/adm/appends/batch=0"
+    def served = graft.streaming.DocStreams
+      .admittedDocs(spark, s"$root/adm", seed.schema).count()
+    assert(served == 1L)
+    Seq(IndexLayout.CommitMarker, "_SUCCESS")
+      .foreach(m => fs.delete(new Path(gen, m), false): Unit)
+    val torn = row(s"$root/adm")
+    assert(torn.getAs[Long]("committed_appends") == 0L &&
+      torn.getAs[Long]("pending_appends") == 1L)
+    assert(served == 0L)
+    // its marker lands: served and committed again
+    fs.create(new Path(gen, IndexLayout.CommitMarker), true).close()
+    val back = row(s"$root/adm")
+    assert(back.getAs[Long]("committed_appends") == 1L &&
+      back.getAs[Long]("pending_appends") == 0L)
+    assert(served == 1L)
   }
 }
